@@ -73,17 +73,6 @@ object SparkEntry {
   private val builtBucketed =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
-  /** Collision-resistant on-disk tag for a memo key: SHA-256 hex prefix
-    * (64 bits). `hashCode` (32 bits, trivially collidable) let two
-    * corpora map to the same parquet path, the second build silently
-    * overwriting the first while the first memo entry still pointed at
-    * it. Hex keeps the tag a valid identifier fragment for catalog
-    * table names too. */
-  private def memoTag(memoKey: String): String =
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(memoKey.getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-
   /** computeIfAbsent-style critical section for the build-once layouts:
     * check-validity → build → memo-insert runs under one lock, so two
     * query threads arriving together can't both run the (side-effecting,
@@ -114,9 +103,9 @@ object SparkEntry {
     * pipeline lands the verdict table next to the corpus and every
     * consumer reads it. */
   private def curatedVerdicts(s: SparkSession, dir: String): DataFrame = {
-    val memoKey = s"curate:$dir@${corpusFingerprint(dir, "documents.parquet")}"
+    val memoKey = s"curate:$dir@${corpusFingerprint(s, dir, "documents.parquet")}"
     val path = memoized(builtPersisted, memoKey)(new java.io.File(_).exists) {
-      val p = s"$ivfTmpBase/curate-${memoTag(memoKey)}"
+      val p = s"$ivfTmpBase/curate-${Tables.digest(memoKey)}"
       Pipeline.curate(Tables(s, dir, spread = true).documents)
         .write.mode("overwrite").parquet(p)
       p
@@ -149,9 +138,9 @@ object SparkEntry {
     * censuses. Longs/ints only → exact round-trip. */
   private def bandedSigTable(s: SparkSession, dir: String): DataFrame = {
     val memoKey =
-      s"bandedsig:$dir@${corpusFingerprint(dir, "documents.parquet")}"
+      s"bandedsig:$dir@${corpusFingerprint(s, dir, "documents.parquet")}"
     val path = memoized(builtPersisted, memoKey)(new java.io.File(_).exists) {
-      val p = s"$ivfTmpBase/bandedsig-${memoTag(memoKey)}"
+      val p = s"$ivfTmpBase/bandedsig-${Tables.digest(memoKey)}"
       Dedup.bandedSignatures(Tables(s, dir, spread = true).documents)
         .write.mode("overwrite").parquet(p)
       p
@@ -161,9 +150,9 @@ object SparkEntry {
 
   private def candidatePairsTable(s: SparkSession, dir: String): DataFrame = {
     val memoKey =
-      s"candpairs:$dir@${corpusFingerprint(dir, "documents.parquet")}"
+      s"candpairs:$dir@${corpusFingerprint(s, dir, "documents.parquet")}"
     val path = memoized(builtPersisted, memoKey)(new java.io.File(_).exists) {
-      val p = s"$ivfTmpBase/candpairs-${memoTag(memoKey)}"
+      val p = s"$ivfTmpBase/candpairs-${Tables.digest(memoKey)}"
       Dedup.candidatePairsFrom(bandedSigTable(s, dir))
         .write.mode("overwrite").parquet(p)
       p
@@ -178,9 +167,9 @@ object SparkEntry {
     * scoring pass. `avg_nll` is 1e-4-floored before the write, so the
     * double round-trips exactly; the other columns are integral. */
   private def lmScoredTable(s: SparkSession, dir: String): DataFrame = {
-    val memoKey = s"lmscore:$dir@${corpusFingerprint(dir, "documents.parquet")}"
+    val memoKey = s"lmscore:$dir@${corpusFingerprint(s, dir, "documents.parquet")}"
     val path = memoized(builtPersisted, memoKey)(new java.io.File(_).exists) {
-      val p = s"$ivfTmpBase/lmscore-${memoTag(memoKey)}"
+      val p = s"$ivfTmpBase/lmscore-${Tables.digest(memoKey)}"
       TextAnalysis.lmScores(Tables(s, dir, spread = true).documents)
         .write.mode("overwrite").parquet(p)
       p
@@ -190,9 +179,9 @@ object SparkEntry {
 
   private def clusteredTable(s: SparkSession, dir: String): DataFrame = {
     val memoKey =
-      s"clusters:$dir@${corpusFingerprint(dir, "documents.parquet")}"
+      s"clusters:$dir@${corpusFingerprint(s, dir, "documents.parquet")}"
     val path = memoized(builtPersisted, memoKey)(new java.io.File(_).exists) {
-      val p = s"$ivfTmpBase/clusters-${memoTag(memoKey)}"
+      val p = s"$ivfTmpBase/clusters-${Tables.digest(memoKey)}"
       Dedup.clustersFromPairs(Tables(s, dir, spread = true).documents,
           candidatePairsTable(s, dir))
         .write.mode("overwrite").parquet(p)
@@ -215,9 +204,9 @@ object SparkEntry {
   private def releaseCard(s: SparkSession, dir: String,
                           release: String): DataFrame = {
     val memoKey =
-      s"cards:$dir@${corpusFingerprint(dir, "documents.parquet")}"
+      s"cards:$dir@${corpusFingerprint(s, dir, "documents.parquet")}"
     val path = memoized(builtPersisted, memoKey)(new java.io.File(_).exists) {
-      val p = s"$ivfTmpBase/cards-${memoTag(memoKey)}"
+      val p = s"$ivfTmpBase/cards-${Tables.digest(memoKey)}"
       val (base, cur) = snapshotPair(Tables(s, dir, spread = true))
       // the two releases' card constructions are independent and each
       // runs two eager barrier jobs (clean, toks) plus its own Catalyst
@@ -243,9 +232,9 @@ object SparkEntry {
     * Every column is integral, so the parquet round-trip is exact and
     * the reports stay bit-identical to the unmemoized composition. */
   private def ovrScored(s: SparkSession, dir: String): DataFrame = {
-    val memoKey = s"ovr:$dir@${corpusFingerprint(dir, "embeddings.parquet")}"
+    val memoKey = s"ovr:$dir@${corpusFingerprint(s, dir, "embeddings.parquet")}"
     val path = memoized(builtPersisted, memoKey)(new java.io.File(_).exists) {
-      val p = s"$ivfTmpBase/ovr-${memoTag(memoKey)}"
+      val p = s"$ivfTmpBase/ovr-${Tables.digest(memoKey)}"
       MlEval.scoredOneVsRest(Tables(s, dir, spread = true).embeddings)
         .write.mode("overwrite").parquet(p)
       p
@@ -258,9 +247,9 @@ object SparkEntry {
     * mechanics as [[ovrScored]]; `dist` is floored to the 1e-6 grid
     * BEFORE the write, so the double round-trips exactly. */
   private def classifiedTable(s: SparkSession, dir: String): DataFrame = {
-    val memoKey = s"cls:$dir@${corpusFingerprint(dir, "embeddings.parquet")}"
+    val memoKey = s"cls:$dir@${corpusFingerprint(s, dir, "embeddings.parquet")}"
     val path = memoized(builtPersisted, memoKey)(new java.io.File(_).exists) {
-      val p = s"$ivfTmpBase/cls-${memoTag(memoKey)}"
+      val p = s"$ivfTmpBase/cls-${Tables.digest(memoKey)}"
       Classifier.classify(Tables(s, dir, spread = true).embeddings)
         .write.mode("overwrite").parquet(p)
       p
@@ -275,8 +264,8 @@ object SparkEntry {
     * recompute path's corpus-sized exchange AND sort disappear. */
   private def frozenShingles(s: SparkSession, dir: String): String = {
     val memoKey =
-      s"shingle:$dir@${corpusFingerprint(dir, "documents.parquet")}"
-    val tag = memoTag(memoKey)
+      s"shingle:$dir@${corpusFingerprint(s, dir, "documents.parquet")}"
+    val tag = Tables.digest(memoKey)
     memoized(builtBucketed, memoKey)(s.catalog.tableExists) {
       val t0 = s"graft_shingle_store_$tag"
       Dedup.persistShingles(Tables(s, dir, spread = true).documents, t0,
@@ -292,9 +281,9 @@ object SparkEntry {
     * re-tokenizes the corpus to rebuild an index another query already
     * landed on disk. */
   private def frozenBm25(s: SparkSession, dir: String): Bm25.Bm25Index = {
-    val memoKey = s"bm25:$dir@${corpusFingerprint(dir, "documents.parquet")}"
+    val memoKey = s"bm25:$dir@${corpusFingerprint(s, dir, "documents.parquet")}"
     val p = memoized(builtPersisted, memoKey)(new java.io.File(_).exists) {
-      val path = s"$ivfTmpBase/bm25-${memoTag(memoKey)}"
+      val path = s"$ivfTmpBase/bm25-${Tables.digest(memoKey)}"
       Bm25.persist(Tables(s, dir, spread = true).documents, path)
       path
     }
@@ -312,9 +301,9 @@ object SparkEntry {
     * next to the corpus and every report reads it. */
   private def frozenRetrievalCore(s: SparkSession,
                                   dir: String): RetrievalEval.Core = {
-    val memoKey = s"reteval:$dir@${corpusFingerprint(dir, "documents.parquet")}"
+    val memoKey = s"reteval:$dir@${corpusFingerprint(s, dir, "documents.parquet")}"
     val p = memoized(builtPersisted, memoKey)(new java.io.File(_).exists) {
-      val path = s"$ivfTmpBase/reteval-${memoTag(memoKey)}"
+      val path = s"$ivfTmpBase/reteval-${Tables.digest(memoKey)}"
       val core = RetrievalEval.buildCore(Tables(s, dir, spread = true).documents,
         frozenBm25(s, dir))
       core.ret.write.mode("overwrite").parquet(s"$path/ret")
@@ -326,26 +315,13 @@ object SparkEntry {
       s.read.parquet(s"$p/ideal"), s.read.parquet(s"$p/qids"))
   }
 
-  /** Cheap driver-side fingerprint of the corpus files backing one of
-    * `dir`'s tables (names + sizes + mtimes): the memo key ingredient
-    * that invalidates a per-JVM index build when the corpus changes
-    * underneath the same path. Local `File` ops only — this keys a memo,
-    * it never touches executors. */
-  private def corpusFingerprint(dir: String,
-                                table: String = "embeddings.parquet"): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).fold(Seq.empty[java.io.File])(_.toSeq.flatMap(walk))
-      else Seq(f)
-    val root = new java.io.File(s"$dir/$table")
-    if (!root.exists) "missing"
-    else {
-      val sig = walk(root)
-        .map(f => s"${f.getPath}:${f.length}:${f.lastModified}")
-        .sorted.mkString("\n")
-      (scala.util.hashing.MurmurHash3.stringHash(sig) & 0x7fffffffL).toString
-    }
-  }
+  /** [[Tables.fingerprint]] of the corpus files backing one of `dir`'s
+    * tables: the memo key ingredient that invalidates a per-JVM index
+    * build when the corpus changes underneath the same path, on any
+    * Hadoop FileSystem. */
+  private def corpusFingerprint(s: SparkSession, dir: String,
+                                table: String = "embeddings.parquet"): String =
+    Tables.fingerprint(s, s"$dir/$table")
 
   /** Driver-checkable digest of a `(doc_id, embedding)` vector table:
     * dimension, floored L2 norm, nonzero count and the index-weighted
@@ -698,9 +674,9 @@ object SparkEntry {
     // regeneration. Same results/oracle as q_ivf_search.
     "q_ivf_persisted" -> ((s, dir) => {
       val t = Tables(s, dir, spread = true)
-      val memoKey = s"$dir@${corpusFingerprint(dir)}"
+      val memoKey = s"$dir@${corpusFingerprint(s, dir)}"
       val idx = memoized(builtPersisted, memoKey)(new java.io.File(_).exists) {
-        val p = s"$ivfTmpBase/persisted-${memoTag(memoKey)}"
+        val p = s"$ivfTmpBase/persisted-${Tables.digest(memoKey)}"
         IvfIndex.persist(t.embeddings, nCentroids = 16, path = p)
         p
       }
@@ -715,8 +691,8 @@ object SparkEntry {
     // (searchBucketed reads both the postings and `<tbl>_centroids`)
     "q_ivf_bucketed" -> ((s, dir) => {
       val t = Tables(s, dir, spread = true)
-      val memoKey = s"$dir@${corpusFingerprint(dir)}"
-      val tag = memoTag(memoKey)
+      val memoKey = s"$dir@${corpusFingerprint(s, dir)}"
+      val tag = Tables.digest(memoKey)
       val tbl = memoized(builtBucketed, memoKey)(t0 =>
         s.catalog.tableExists(t0) && s.catalog.tableExists(t0 + "_centroids")) {
         val t0 = s"graft_q_postings_$tag"
@@ -735,8 +711,8 @@ object SparkEntry {
     // answer, so the oracle is the same query over raw parquet
     "q_bucketed_join" -> ((s, dir) => {
       val t = Tables(s, dir, spread = true)
-      val memoKey = s"facts:$dir@${corpusFingerprint(dir, "lineitem.parquet")}"
-      val tag = memoTag(memoKey)
+      val memoKey = s"facts:$dir@${corpusFingerprint(s, dir, "lineitem.parquet")}"
+      val tag = Tables.digest(memoKey)
       val lTblOf = (o: String) => o.replace("orders", "lineitem")
       val oTbl = memoized(builtBucketed, memoKey)(o =>
         s.catalog.tableExists(o) && s.catalog.tableExists(lTblOf(o))) {
@@ -755,9 +731,9 @@ object SparkEntry {
     // the other layouts, answer identical to filtering the raw table
     "q_partition_prune" -> ((s, dir) => {
       val t = Tables(s, dir, spread = true)
-      val memoKey = s"evdays:$dir@${corpusFingerprint(dir, "events.parquet")}"
+      val memoKey = s"evdays:$dir@${corpusFingerprint(s, dir, "events.parquet")}"
       val path = memoized(builtPersisted, memoKey)(new java.io.File(_).exists) {
-        val p = s"$ivfTmpBase/evdays-${memoTag(memoKey)}"
+        val p = s"$ivfTmpBase/evdays-${Tables.digest(memoKey)}"
         Relational.persistPartitionedEvents(t, p); p
       }
       Relational.prunedDailyEvents(s, path)
@@ -776,9 +752,9 @@ object SparkEntry {
     // must equal q_pq_search — the LAYOUT never changes the answer
     "q_pq_persisted" -> ((s, dir) => {
       val t = Tables(s, dir, spread = true)
-      val memoKey = s"pq:$dir@${corpusFingerprint(dir)}"
+      val memoKey = s"pq:$dir@${corpusFingerprint(s, dir)}"
       val idx = memoized(builtPersisted, memoKey)(new java.io.File(_).exists) {
-        val p = s"$ivfTmpBase/pq-${memoTag(memoKey)}"
+        val p = s"$ivfTmpBase/pq-${Tables.digest(memoKey)}"
         ProductQuantizer.persist(t.embeddings, p, m = 4, k = 16)
         p
       }
@@ -952,8 +928,8 @@ object SparkEntry {
     "dedup_semantic_incremental" -> ((s, dir) => {
       val t = Tables(s, dir, spread = true)
       val memoKey =
-        s"semblocks:$dir@${corpusFingerprint(dir, "embeddings.parquet")}"
-      val tag = memoTag(memoKey)
+        s"semblocks:$dir@${corpusFingerprint(s, dir, "embeddings.parquet")}"
+      val tag = Tables.digest(memoKey)
       val tbl = memoized(builtBucketed, memoKey)(s.catalog.tableExists) {
         val t0 = s"graft_sem_blocks_$tag"
         Dedup.persistSemanticBlocks(
@@ -972,8 +948,8 @@ object SparkEntry {
     // answer (the q_ivf_persisted contract).
     "dedup_incremental" -> ((s, dir) => {
       val t = Tables(s, dir, spread = true)
-      val memoKey = s"sig:$dir@${corpusFingerprint(dir, "documents.parquet")}"
-      val tag = memoTag(memoKey)
+      val memoKey = s"sig:$dir@${corpusFingerprint(s, dir, "documents.parquet")}"
+      val tag = Tables.digest(memoKey)
       val tbl = memoized(builtBucketed, memoKey)(s.catalog.tableExists) {
         val t0 = s"graft_sig_store_$tag"
         Dedup.persistSignatures(t.documents.filter(col("doc_id") < 250), t0,
@@ -994,8 +970,8 @@ object SparkEntry {
     "dedup_shingle_incremental" -> ((s, dir) => {
       val t = Tables(s, dir, spread = true)
       val memoKey =
-        s"shinc:$dir@${corpusFingerprint(dir, "documents.parquet")}"
-      val tag = memoTag(memoKey)
+        s"shinc:$dir@${corpusFingerprint(s, dir, "documents.parquet")}"
+      val tag = Tables.digest(memoKey)
       val tbl = memoized(builtBucketed, memoKey)(s.catalog.tableExists) {
         val t0 = s"graft_shingle_inc_$tag"
         Dedup.persistShingles(t.documents.filter(col("doc_id") < 250), t0,
@@ -1014,8 +990,8 @@ object SparkEntry {
     "dedup_jaccard_incremental" -> ((s, dir) => {
       val t = Tables(s, dir, spread = true)
       val memoKey =
-        s"shbase:$dir@${corpusFingerprint(dir, "documents.parquet")}"
-      val tag = memoTag(memoKey)
+        s"shbase:$dir@${corpusFingerprint(s, dir, "documents.parquet")}"
+      val tag = Tables.digest(memoKey)
       val tbl = memoized(builtBucketed, memoKey)(s.catalog.tableExists) {
         val t0 = s"graft_shingle_base_$tag"
         Dedup.persistShingles(t.documents.filter(col("doc_id") < 250), t0,
@@ -1648,8 +1624,8 @@ object SparkEntry {
     * re-check self-heals if a test drops either table. */
   private def snapshotPairBucketed(s: SparkSession,
                                    dir: String): (String, String) = {
-    val memoKey = s"snap:$dir@${corpusFingerprint(dir, "documents.parquet")}"
-    val tag = memoTag(memoKey)
+    val memoKey = s"snap:$dir@${corpusFingerprint(s, dir, "documents.parquet")}"
+    val tag = Tables.digest(memoKey)
     val curOf = (b: String) => b.replace("_base_", "_cur_")
     val baseTbl = memoized(builtBucketed, memoKey)(b =>
       s.catalog.tableExists(b) && s.catalog.tableExists(curOf(b))) {

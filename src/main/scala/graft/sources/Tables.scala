@@ -27,9 +27,13 @@ final case class Tables(spark: SparkSession, dir: String,
     * before a broadcast build is pure overhead. */
   private def f(name: String): DataFrame =
     if (spread)
-      Tables.parallelismFloor(t(name),
-        cacheKey = Some(s"${spark.sparkContext.applicationId}:$dir/$name"))
+      Tables.parallelismFloor(t(name), cacheKey = Some(
+        s"${spark.sparkContext.applicationId}:$dir/$name@${fingerprint(name)}"))
     else t(name)
+
+  /** [[Tables.fingerprint]] of one of this corpus's tables. */
+  def fingerprint(name: String): String =
+    Tables.fingerprint(spark, s"$dir/$name.parquet")
 
   def region: DataFrame     = t("region")
   def nation: DataFrame     = t("nation")
@@ -75,6 +79,38 @@ final case class Tables(spark: SparkSession, dir: String,
 }
 
 object Tables {
+  /** Collision-resistant 64-bit tag of `text`: a SHA-256 prefix in hex.
+    * It names memo builds on disk: `hashCode` (32 bits, trivially
+    * collidable) let two corpora map to the same parquet path, the second
+    * build silently overwriting the first while the first memo entry
+    * still pointed at it. Hex keeps the tag a valid identifier fragment
+    * for catalog table names too. */
+  def digest(text: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(text.getBytes("UTF-8"))
+      .take(8).map("%02x".format(_)).mkString
+
+  /** Identity of the files under `path` on whatever Hadoop `FileSystem`
+    * the path names (local disk, `file:`, `hdfs://`, `s3a://`): the
+    * [[digest]] of every file's qualified path, length and modification
+    * time, from one recursive listing on the driver. A
+    * corpus rewritten in place reads a new fingerprint, so it keys the
+    * caches that must never serve a stale build; a path that does not
+    * exist reads `"missing"`. */
+  def fingerprint(spark: SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val it = fs.listFiles(p, true)
+      val files = scala.collection.mutable.ArrayBuffer.empty[String]
+      while (it.hasNext) {
+        val f = it.next()
+        files += s"${f.getPath}:${f.getLen}:${f.getModificationTime}"
+      }
+      digest(files.sorted.mkString("\n"))
+    } catch { case _: java.io.FileNotFoundException => "missing" }
+  }
+
   /** Scale-adaptive scan-parallelism floor (guide §2.5 "input skew …
     * repartition immediately after the read"): a corpus delivered as
     * fewer splittable units than the cluster has cores serializes every
@@ -98,13 +134,13 @@ object Tables {
     * pruning through a Repartition node, so scans keep their
     * PushedFilters/ReadSchema. */
   /** The floor DECISION (repartition target, or 0 for no-op) cached per
-    * (application, path, cores, targetBytes): deciding costs two extra
-    * plannings of the scan (a stats pass plus the `df.rdd` partition-count
-    * probe), which every documents access paid — ~130 consumers × 2 plans
-    * per suite of pure driver time. The decision is size-derived and
-    * perf-only, so caching it cannot change results; a corpus REGENERATED
-    * at the same path inside one long-lived application keeps the old
-    * floor (worst case: a suboptimal partition count, never wrong rows). */
+    * (application, path, [[fingerprint]], cores, targetBytes): deciding
+    * costs two extra plannings of the scan (a stats pass plus the `df.rdd`
+    * partition-count probe), which every documents access paid — ~130
+    * consumers × 2 plans per suite of pure driver time. The decision is
+    * size-derived and perf-only, so caching it cannot change results; the
+    * fingerprint gives a corpus REGENERATED at the same path a fresh
+    * decision. */
   private val floorDecisions =
     scala.collection.concurrent.TrieMap.empty[String, Int]
 

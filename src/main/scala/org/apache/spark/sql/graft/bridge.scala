@@ -23,6 +23,24 @@ object bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `df`'s rows as an RDD persisted at `level`, and a DataFrame over that
+    * RDD: `localCheckpoint` without the lineage cut, so a lost block is
+    * recomputed from `df`'s plan instead of failing the query. Lazy — the
+    * caller's first action on the RDD fills the blocks; the caller owns
+    * the RDD (unpersists it, checks `getPersistentRDDs` for it). The frame
+    * carries `df`'s statistics and output partitioning, as a checkpoint's
+    * does. */
+  def persisted(df: org.apache.spark.sql.DataFrame,
+                level: org.apache.spark.storage.StorageLevel)
+      : (org.apache.spark.sql.DataFrame,
+         org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val rows = ds.queryExecution.toRdd.map(_.copy()).persist(level)
+    (org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
+      org.apache.spark.sql.execution.LogicalRDD.fromDataset(rows, ds,
+        isStreaming = false)), rows)
+  }
+
   /** Analyzed logical plan of a DataFrame. */
   def planOf(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =

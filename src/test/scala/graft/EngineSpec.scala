@@ -1,6 +1,12 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
+import graft.functions.hash_embed
+import graft.functions.TextFunctions.preprocess
+import graft.operators.Search
+import graft.sources.Tables
 
 class EngineSpec extends SparkSuite {
 
@@ -43,6 +49,95 @@ class EngineSpec extends SparkSuite {
 
   test("healthCheck") {
     assert(engine.healthCheck())
+    // false, not an exception, when the corpus is missing or unreadable
+    val dir = java.nio.file.Files.createTempDirectory("graft-health")
+    assert(!new SearchEngine(spark, dir.toString).healthCheck())
+    java.nio.file.Files.writeString(dir.resolve("documents.parquet"), "not parquet")
+    assert(!new SearchEngine(spark, dir.toString).healthCheck())
+  }
+
+  private def queryVector(text: String): DataFrame =
+    spark.range(1).select(col("id").as("query_id"),
+      hash_embed(preprocess(lit(text)), 64).as("qv"))
+
+  /** `e`'s answers against `Search.bruteForceTopK` and
+    * `Search.thresholdRetrieval` over its own `buildIndex()`, with every
+    * description the text of its document. */
+  private def assertServesBuildIndex(e: SearchEngine, dir: String,
+                                     cases: Seq[(String, Int)]): Unit = {
+    val vectors = e.buildIndex().select(col("doc_id").as("vec_id"), col("embedding"))
+    val texts = Tables(spark, dir).documents
+      .select(col("doc_id"), col("text")).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    cases.foreach { case (text, k) =>
+      val q = queryVector(text)
+      val want = Search.bruteForceTopK(q, vectors, math.min(k, 20))
+        .select(col("rank"), col("vec_id"), col("score")).collect().toSeq
+      val got = e.search(text, k).collect().toSeq
+      assert(got.map(r => Row(r.getLong(0), r.getLong(1), r.getDouble(2))) == want,
+        s"search('$text', $k)")
+      assert(got.forall(r => r.getString(3) == texts(r.getLong(1))),
+        s"search('$text', $k): description is not the document's text")
+      assert(e.qaContext(text).collect().toSeq ==
+        Search.thresholdRetrieval(q, vectors, maxDistance = 0.4).collect().toSeq,
+        s"qaContext('$text')")
+    }
+  }
+
+  private val Probe = "fast hash join on the big table"
+
+  test("resident index: search and qaContext equal the exact operators over buildIndex") {
+    assertServesBuildIndex(engine, sfDir, Seq(
+      Probe -> 1, "table scan" -> 3, "window agg over a stream" -> 20,
+      "vector filter scan with a small key" -> 25, "merge sort part" -> 1,
+      "customer order line value" -> 3, "spark batch stream" -> 20,
+      "group by query row data" -> 25, "slow column hash" -> 3,
+      "zebra quantum marmalade harpsichord" -> 3))
+  }
+
+  test("resident index: a corpus rewritten at a file: URI is served fresh") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-engine")
+    val docs = s"$dir/documents.parquet"
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/documents.parquet"),
+      java.nio.file.Paths.get(docs))
+    val uri = dir.toUri.toString.stripSuffix("/")
+    val e = new SearchEngine(spark, uri)
+    assertServesBuildIndex(e, uri, Seq(Probe -> 5))
+    val before = e.search(Probe, 5).collect().toSeq
+    // every document takes its successor's text: same ids, new answers
+    val orig = Tables(spark, sfDir).documents
+    val n = orig.count()
+    orig.select(((col("doc_id") + n - 1) % n).as("doc_id"), col("text"))
+      .write.mode("overwrite").parquet(docs)
+    assertServesBuildIndex(e, uri, Seq(Probe -> 5, "table scan" -> 1))
+    assert(e.search(Probe, 5).collect().toSeq != before)
+  }
+
+  test("resident index: still correct after every persisted RDD is unpersisted") {
+    val e = new SearchEngine(spark, sfDir)
+    assertServesBuildIndex(e, sfDir, Seq(Probe -> 5))
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    assertServesBuildIndex(e, sfDir, Seq(Probe -> 5, "table scan" -> 1))
+  }
+
+  test("resident index: a warm search and qaContext run no job before they return") {
+    val e = new SearchEngine(spark, sfDir)
+    e.search(Probe).collect()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          job: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val frames = Seq(e.search(Probe, 5), e.qaContext(Probe))
+      bridge.drainListenerBus(spark)
+      assert(jobs.get == 0, "jobs launched while constructing a warm request")
+      frames.foreach(_.collect())
+      bridge.drainListenerBus(spark)
+      assert(jobs.get > 0, "the listener saw no job at all")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("queries and oracles are in 1:1 correspondence") {

@@ -52,4 +52,35 @@ class SourceSpec extends SparkSuite {
     assert(got.select("doc_id").orderBy("doc_id")
       .collect().map(_.getLong(0)).toSeq == Seq(1L, 2L))
   }
+
+  test("fingerprint: same files under a plain path or a file: URI, fresh after a rewrite") {
+    val dir = Files.createTempDirectory("graft-fp")
+    val p = dir.resolve("documents.parquet")
+    t.documents.limit(10).write.parquet(p.toString)
+    val fp = Tables.fingerprint(spark, p.toString)
+    assert(fp.matches("[0-9a-f]{16}"))
+    assert(Tables.fingerprint(spark, p.toUri.toString) == fp)
+    t.documents.limit(20).write.mode("overwrite").parquet(p.toString)
+    assert(Tables.fingerprint(spark, p.toUri.toString) != fp)
+    assert(Tables.fingerprint(spark, dir.resolve("absent").toString) == "missing")
+  }
+
+  test("parallelismFloor: a corpus rewritten at the same path gets a fresh decision") {
+    val docs = Files.createTempDirectory("graft-floor").resolve("documents.parquet")
+    val cores = spark.sparkContext.defaultParallelism
+    def partitions(): Int = Tables(spark, docs.getParent.toString, spread = true)
+      .documents.rdd.getNumPartitions
+    // one document: at most one target's worth of bytes, so no floor
+    t.documents.limit(1).coalesce(1).write.parquet(docs.toString)
+    val target = spark.read.parquet(docs.toString)
+      .queryExecution.optimizedPlan.stats.sizeInBytes
+    spark.conf.set("spark.graft.spreadTargetBytes", target.toString)
+    try {
+      assert(partitions() == 1)
+      // every document, still one file: many targets' worth, spread to
+      // every core
+      t.documents.coalesce(1).write.mode("overwrite").parquet(docs.toString)
+      assert(partitions() == cores)
+    } finally spark.conf.unset("spark.graft.spreadTargetBytes")
+  }
 }
