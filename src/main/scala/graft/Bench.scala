@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Driver benchmark contract: one JSON line on stdout.
   * Optional args narrow to specific queries (local iteration only). */
@@ -12,46 +11,7 @@ object Bench {
     // operators, not the hash-compare contract's global orderBy
     sys.props("graft.sort") = "false"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_SATURATED=1: disable runtime broadcast promotion so
-    // every vocabulary join takes its 100 TB shape (shuffle join) at
-    // EVERY SF. This is the mode the shuffle-records LINEARITY gate
-    // benches in: comparing records across SFs only measures growth
-    // when the plan shape is held fixed — otherwise AQE's (correct!)
-    // small-scale broadcast wins read as super-linear growth at the SF
-    // where the join transitions to SMJ (measured on q_tfidf: 2 pair
-    // shuffles at sf1, 3 at sf10, per-stage ratios exactly 10×).
-    // Wall-clock/headline benches run WITHOUT this: adaptive wins are
-    // real performance and belong in the timing numbers.
-    val saturated = sys.env.get("SPARK_GRAFT_SATURATED").contains("1")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // trust bucket sortBy metadata at scan (self-guarded: ordering is
-      // claimed only for single-file buckets, which persistShingles
-      // guarantees) — the bucketed shingle join runs sort-free
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-    // OPT-IN network-timeout bump (e.g. SPARK_GRAFT_NET_TIMEOUT=800s).
-    // Round 15 set 800s unconditionally after a saturated sf10 run
-    // GC-stalled past the in-process 120 s heartbeat — but the stall's
-    // CAUSE was AQE picking ShuffledHashJoin over corpus-sized build
-    // sides (~40 GB live, no spill path). That is fixed at the source
-    // (merge hints + PlanDoctor's shuffled-hash-join-unbounded-build
-    // rule), so the bench now runs on stock timeouts by default and the
-    // crutch must be asked for explicitly — a run that needs it is
-    // evidence of a plan regression, not a config problem.
-    sys.env.get("SPARK_GRAFT_NET_TIMEOUT").foreach { t =>
-      builder.config("spark.network.timeout", t)
-      builder.config("spark.executor.heartbeatInterval", "30s")
-    }
-    if (saturated) {
-      builder.config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      builder.config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    }
-    val spark = builder.getOrCreate()
+    val spark = GraftSession(GraftSession.cores(4))
     spark.sparkContext.setLogLevel("WARN")
     // per-query shuffle accounting: the scale design lives or dies on
     // shuffle volume, so the bench reports it next to wall time (bytes
@@ -176,7 +136,7 @@ object Bench {
     // "sort":false is a methodology flag: timings EXCLUDE the trailing
     // oracle-determinism sorts (graft.sort=false above). Rounds ≤ 9
     // included them — cross-round comparisons must account for it.
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","sort":${Determinism.enabled},"saturated":$saturated,"phase_rows_in_total":false,"queries":$qs,"failed":$failed,"shuffle_mb":$shuffle,"shuffle_rec":$shuffleRec,"spill_mem_mb":$spillMemS,"spill_disk_mb":$spillDiskS,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","sort":${Determinism.enabled},"saturated":${GraftSession.saturated},"phase_rows_in_total":false,"queries":$qs,"failed":$failed,"shuffle_mb":$shuffle,"shuffle_rec":$shuffleRec,"spill_mem_mb":$spillMemS,"spill_disk_mb":$spillDiskS,"sf":"$sfDir"}"""
     println(full)
     // the driver records only the LAST 2000 stdout chars, which until
     // round 9 captured the (deterministic) shuffle map and truncated the

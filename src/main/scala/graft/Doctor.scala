@@ -1,12 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Catalog-wide PlanDoctor sweep (not part of the driver contract):
   * prints every finding at or above the requested severity for every
   * `SparkEntry` query — the command-line form of PlanAuditSpec's gate,
   * for iterating on a rule before pinning its allowlist in the spec.
   * Usage: `sbt "runMain graft.Doctor warn [queryName...]"`.
+  *
+  * Audits the plans of a [[GraftSession]] at `SPARK_GRAFT_CPUS`
+  * (default 4, PlanAuditSpec's setting), so its findings are the gate's
+  * findings, over the corpus at `SPARK_GRAFT_SF_DIR` (default sf0.01).
   */
 object Doctor {
   def main(args: Array[String]): Unit = {
@@ -18,10 +20,7 @@ object Doctor {
     val min = rank(if (sevGiven) args.head else "warn")
     val only = (if (sevGiven) args.drop(1) else args).toSet
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.cores(4))
     spark.sparkContext.setLogLevel("ERROR")
     // GRAFT_DOCTOR_JSON=<path>: additionally write every finding (at any
     // severity) as one JSON object per query — the committable round

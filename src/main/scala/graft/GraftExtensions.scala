@@ -9,8 +9,8 @@ import graft.functions._
 /** SQL integration for graft's native expressions.
   *
   * Two paths:
-  *  - session build time: `SparkSession.builder().withExtensions(new
-  *    GraftExtensions)` — the library-deployment path;
+  *  - session build time: `withExtensions(new GraftExtensions)` on the
+  *    session builder — the library-deployment path;
   *  - runtime: [[GraftSql.register]] — for sessions built elsewhere (the
   *    driver's, notebooks).
   */

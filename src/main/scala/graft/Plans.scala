@@ -1,14 +1,20 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 
-/** Plan-audit dump: `runMain graft.Plans <sfDir> <outFile>` writes the
-  * formatted physical plan of EVERY catalog query so the plan shapes
-  * (pushdown, broadcasts, partial aggregation, codegen spans, absence of
-  * unexpected Exchanges) can be reviewed without running Spark.
-  * Regenerate with:
-  * `sbt "runMain graft.Plans /root/testdata/sf0.01 PLANS.md"`. */
+/** Plan-audit dump, in two forms:
+  *  - `runMain graft.Plans <sfDir> <outFile>` writes the formatted
+  *    physical plan of EVERY catalog query so the plan shapes (pushdown,
+  *    broadcasts, partial aggregation, codegen spans, absence of
+  *    unexpected Exchanges) can be reviewed without running Spark.
+  *    PLANS.md is this dump of the sf0.01 corpus;
+  *  - `runMain graft.Plans <sfDir> <outDir> <suffix> <query...>` writes
+  *    one file per named query or `#`-phase key ([[dump]]).
+  * Both plan on `GraftSession(4)`: the settings Bench and Verify run
+  * with at their default core count, and the session PlanAuditSpec
+  * gates. */
 object Plans {
 
   /** EVERY catalog key, sorted — PLANS.md covers the whole correctness
@@ -18,8 +24,6 @@ object Plans {
     * entry lands in the next regeneration automatically, and a key
     * whose DataFrame fails to build fails the dump loudly. */
   def headline: Seq[String] = SparkEntry.queries.keys.toSeq.sorted
-
-
 
   /** Hand-audited runtime observations rendered under a query's header —
     * facts the static sf0.01 explain below cannot show (AQE decisions are
@@ -121,18 +125,28 @@ object Plans {
         |only the 1-row smoothed total rides a broadcast
         |crossJoin.""".stripMargin)
 
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, outFile) = args.take(2)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // match Bench/Verify: trust single-file-bucket sortBy metadata so
-      // the dumped bucketed-shingle plans show the sort-free join shape
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  /** Per-query form: writes `<outDir>/<query>_<suffix>.txt` for each
+    * name, the before/after plan pairs of the optimization evidence
+    * files (`plans/r<N>/`). `#`-phase keys (`SparkEntry.benchPhases`)
+    * are accepted; the '#' becomes '_' in the file name. Returns the
+    * files written, in `names` order. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           suffix: String, names: Seq[String]): Seq[Path] = {
+    Files.createDirectories(Paths.get(outDir))
+    val catalog = SparkEntry.queries ++ SparkEntry.benchPhases
+    names.map { name =>
+      val txt = s"NOTE: '$suffix' plan, $sfDir.\n\n```\n" +
+        catalog(name)(spark, sfDir).queryExecution
+          .explainString(FormattedMode) + "```\n"
+      val f = Paths.get(outDir, s"${name.replace('#', '_')}_$suffix.txt")
+      Files.writeString(f, txt)
+      println(s"[plans] wrote $f")
+      f
+    }
+  }
+
+  /** Catalog form: every [[headline]] key, with its [[notes]]. */
+  private def catalogDump(spark: SparkSession, sfDir: String): String = {
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of the FULL query catalog\n\n")
     sb.append(s"Covers all ${headline.size} `SparkEntry.queries` keys " +
@@ -149,11 +163,23 @@ object Plans {
       sb.append(s"\n## $name\n\n")
       notes.get(name).foreach(n => sb.append(n.trim + "\n\n"))
       sb.append("```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+      sb.append(df.queryExecution.explainString(FormattedMode))
       sb.append("```\n")
     }
-    Files.writeString(Paths.get(outFile), sb.toString)
+    sb.toString
+  }
+
+  def main(args: Array[String]): Unit = {
+    val usage = "usage: graft.Plans <sfDir> <outFile> | " +
+      "graft.Plans <sfDir> <outDir> <suffix> <query...>"
+    require(args.length == 2 || args.length >= 4, usage)
+    // fixed at 4 cores, PlanAuditSpec's setting: plan artifacts compare
+    // across runs and machines only at one partition count
+    val spark = GraftSession(4)
+    spark.sparkContext.setLogLevel("ERROR")
+    if (args.length == 2)
+      Files.writeString(Paths.get(args(1)), catalogDump(spark, args(0)))
+    else dump(spark, args(0), args(1), args(2), args.drop(3).toSeq)
     spark.stop()
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{IvfIndex, ProductQuantizer, RandomProjection, Search}
@@ -38,13 +38,7 @@ object RecallCurve {
     val sfDir = args(0)
     val outPath = args(1)
     val nQueries = if (args.length > 2) args(2).toInt else 200
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.cores(4))
     spark.sparkContext.setLogLevel("WARN")
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Bench-data scale-up: replicate an SF directory `reps`× into a larger
@@ -49,14 +49,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir) = args.take(2)
     val reps = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.cores(8))
     spark.sparkContext.setLogLevel("WARN")
     def read(t: String) = spark.read.parquet(s"$srcDir/$t.parquet")
     // Replicated tables keep the UNION's natural partitioning, so the

@@ -1,32 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-STAGE shuffle accounting for one query — the drill-down behind
   * Bench's per-query totals (`runMain graft.StageProbe <sfDir> <query>`).
   * When a query's total record ratio exceeds the data ratio, this names
   * the stage that inflates: each completed stage prints its task count,
   * shuffle-write records/bytes and the stage name (which carries the
   * operator line), so "which aggregate stopped combining" is a read,
-  * not a theory. */
+  * not a theory.
+  *
+  * Builds its session with [[GraftSession]] at `SPARK_GRAFT_CPUS`
+  * (default 4), like Bench, so it drills into the plan Bench times —
+  * bucketed-join sort elision included. `SPARK_GRAFT_SATURATED=1`
+  * probes the fixed plan shapes of the linearity gate. */
 object StageProbe {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, qname) = args.take(2)
     sys.props("graft.sort") = "false"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_SATURATED=1: the Bench linearity-gate mode (broadcast
-    // promotion off) — probe the SAME fixed plan shape the gate measured
-    if (sys.env.get("SPARK_GRAFT_SATURATED").contains("1")) {
-      builder.config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      builder.config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    }
-    val spark = builder.getOrCreate()
+    val spark = GraftSession(GraftSession.cores(4))
     spark.sparkContext.setLogLevel("WARN")
     // job-level view: serialized barrier/action jobs show up as many
     // short jobs with driver-side gaps between them — the gap column

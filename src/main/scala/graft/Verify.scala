@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,18 +8,7 @@ object Verify {
     // fast local iteration; the driver always passes exactly two args
     val Array(sfDir, outDir) = args.take(2)
     val subset = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // trust bucket sortBy metadata at scan (self-guarded: Spark only
-      // claims the ordering when each bucket has at most one file —
-      // which persistShingles guarantees via same-hash repartition);
-      // elides the join-side Sorts over the bucketed shingle store
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.cores(4))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val dumped = SparkEntry.queries

@@ -1077,7 +1077,10 @@ object TextAnalysis {
 
   /** [[vocabGrowth]] over any `(doc_id, text)` table. */
   def vocabGrowth(docs: DataFrame, buckets: Int): DataFrame = {
-    val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
+    // an empty corpus has a null max: any cut works, and the curve has
+    // zero rows
+    val maxRow = docs.agg(max(col("doc_id"))).head()
+    val maxId = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)
     val toks = docs
       .select(
         floor(col("doc_id") * buckets / lit(maxId + 1)).cast("int")

@@ -173,8 +173,11 @@ object AutoFuseWindowTopK extends Rule[LogicalPlan] {
     (gate, shape, core) match {
       case (Some((_, k)), Some((qid, sim, vid, rnAttr)),
             p @ Project(plist, join: Join))
+          // the fused node outputs exactly (qid, vid, sim, rn): a window
+          // that carries any other column (mmrRerank keeps `embedding`)
+          // stays unfused, or its consumers would lose that column
           if k > 0 && join.joinType == Cross && join.condition.isEmpty &&
-            p.outputSet.contains(qid) && p.outputSet.contains(vid) =>
+            p.outputSet == AttributeSet(Seq(qid, vid, sim)) =>
         val cosOpt = plist.collectFirst {
           case al @ Alias(cos: CosineSimilarity, _)
               if al.exprId == sim.exprId => cos

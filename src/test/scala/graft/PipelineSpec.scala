@@ -834,6 +834,14 @@ class PipelineSpec extends SparkSuite {
     assert(!audit.exists(f => f.severity == "error"), audit.mkString("\n"))
   }
 
+  test("vocabGrowth: an empty corpus gives zero rows, same schema") {
+    val docs = Seq((0L, "a b"), (1L, "c")).toDF("doc_id", "text")
+    val full = operators.TextAnalysis.vocabGrowth(docs, buckets = 10)
+    val empty = operators.TextAnalysis.vocabGrowth(docs.limit(0), buckets = 10)
+    assert(empty.collect().isEmpty)
+    assert(empty.schema == full.schema)
+  }
+
   test("entropy: uniform text maxes, constant text zeroes, empty is 0") {
     val docs = Seq(
       (1L, "aaaa"),          // one char class → char entropy 0

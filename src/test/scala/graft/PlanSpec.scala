@@ -39,6 +39,20 @@ class PlanSpec extends SparkSuite {
     } finally Search.installSqlAutoFusion(spark)
   }
 
+  test("SQL auto-fusion skips a window that carries extra columns (q_mmr)") {
+    // mmrRerank's candidate window keeps `embedding` beside (qid, vid,
+    // sim); fusing it dropped that column, so q_mmr failed whenever
+    // q_sql_search had installed the rule earlier in the session
+    val mmr = SparkEntry.queries("q_mmr")
+    Search.installSqlAutoFusion(spark)
+    val withRule = mmr(spark, sfDir).collect().toSeq
+    assert(withRule.nonEmpty)
+    try {
+      Search.uninstallSqlAutoFusion(spark)
+      assert(mmr(spark, sfDir).collect().toSeq == withRule)
+    } finally Search.installSqlAutoFusion(spark)
+  }
+
   test("selective filter is pushed to the parquet scan (q6)") {
     val plan = planOf(Relational.forecastRevenue(t))
     assert(plan.contains("PushedFilters"), plan)

@@ -17,17 +17,7 @@ trait SparkSuite extends AnyFunSuite {
 
 object SparkSuite {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // trust single-file-bucket sortBy metadata at scan (see Bench) —
-      // the bucketed shingle join's sort elision is spec-pinned here
-      .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession(4)
     s.sparkContext.setLogLevel("WARN")
     s
   }
