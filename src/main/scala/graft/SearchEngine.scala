@@ -3,12 +3,12 @@ package graft
 import scala.util.control.NonFatal
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.storage.StorageLevel
 import graft.functions._
 import graft.functions.TextFunctions.preprocess
-import graft.operators.Search
 import graft.sources.Tables
 
 /** API-level facade: the reference's HTTP surface re-expressed as batch
@@ -22,8 +22,8 @@ import graft.sources.Tables
   * | GET /health                   | [[healthCheck]] |
   *
   * Embeddings use the deterministic hashing-trick encoder standing in for
-  * the reference's sentence-transformer model; the search path (broadcast
-  * query × corpus scan × bounded top-k) is the part that must scale.
+  * the reference's sentence-transformer model; the search path (literal
+  * query × resident-index scan × bounded sort) is the part that must scale.
   *
   * '''Resident index.''' [[search]], [[qaContext]] and [[healthCheck]]
   * serve from one materialized `(vec_id, embedding, text)` relation,
@@ -44,6 +44,13 @@ import graft.sources.Tables
   *    queries) is rebuilt on the next request;
   *  - built under the engine's lock, so concurrent first requests build
   *    it once.
+  *
+  * '''Request plan: one job.''' A warm [[search]] or [[qaContext]] is one
+  * Spark job in total. The query vector is folded on the driver into a
+  * literal, and the resident rows go through one bounded sort,
+  * `orderBy(sim desc, vec_id).limit(n)` (`TakeOrderedAndProject`): no
+  * cross join, no aggregate shuffle, no join back to the texts and no
+  * range sort of the result.
   */
 final class SearchEngine(spark: SparkSession, dir: String, dim: Int = 64) {
   private val t = Tables(spark, dir)
@@ -86,34 +93,51 @@ final class SearchEngine(spark: SparkSession, dir: String, dim: Int = 64) {
       }
   }
 
-  private def vectors(index: DataFrame): DataFrame =
-    index.select(col("vec_id"), col("embedding"))
+  /** The query's embedding as a literal vector: `hash_embed(preprocess(
+    * lit(text)), dim)` is analyzed and evaluated on the driver, so no job
+    * runs and the corpus scan compares against a constant. */
+  private def queryVector(queryText: String): Column = {
+    val e = bridge.planOf(spark.range(1).select(
+      hash_embed(preprocess(lit(queryText)), dim))).expressions.head
+    bridge.column(Literal(e.eval(), e.dataType))
+  }
 
-  private def queryVector(queryText: String): DataFrame =
-    spark.range(0, 1, 1, 1).select(
-      col("id").as("query_id"),
-      hash_embed(preprocess(lit(queryText)), dim).as("qv"))
+  /** The `n` resident rows most similar to the query, best first, with
+    * `sim`: one bounded sort (`TakeOrderedAndProject`) by sim desc, then
+    * vec_id asc, after dropping null ids and null or NaN sims — the order
+    * and the skips of `top_k_by_score`, without its shuffle. */
+  private def ranked(queryText: String, n: Int): DataFrame = {
+    val sim = cosine_similarity(queryVector(queryText), col("embedding"))
+    index().frame
+      .select(col("vec_id"), col("text"), sim.as("sim"))
+      .filter(col("vec_id").isNotNull && col("sim").isNotNull && !isnan(col("sim")))
+      .orderBy(col("sim").desc, col("vec_id"))
+      .limit(n)
+  }
+
+  private def floored(c: Column): Column = floor(c * 1e6) / 1e6
 
   /** Reference: controllers/search_controller.py — k capped at 20, query
-    * length capped at 500 chars, score = 1 - cosine distance. */
+    * length capped at 500 chars, score = 1 - cosine distance. The hits
+    * come out of the sort in one partition, in rank order, so
+    * `monotonically_increasing_id` numbers them 0, 1, … without a window. */
   def search(queryText: String, k: Int = 3): DataFrame = {
     require(queryText.trim.nonEmpty, "Query parameter 'q' is required")
     require(queryText.length <= 500, "Query text is too long (max 500 characters)")
-    val kk = math.min(k, 20)
-    val idx = index().frame
-    val top = Search.bruteForceTopK(queryVector(queryText), vectors(idx), kk)
-    // the k hits are broadcast, never the corpus side
-    idx.select(col("vec_id"), col("text")).join(broadcast(top), Seq("vec_id"))
-      .select(col("rank"), col("vec_id").as("doc_id"), col("score"),
+    ranked(queryText, math.min(k, 20))
+      .select((monotonically_increasing_id() + 1).as("rank"),
+        col("vec_id").as("doc_id"), floored(col("sim")).as("score"),
         col("text").as("description"))
-      .orderBy(col("rank"))
   }
 
   /** Reference: qa_service.get_product_context_from_query — best match,
-    * kept only when cosine distance < 0.4. */
+    * kept only when cosine distance < 0.4. The columns of
+    * `Search.thresholdRetrieval` for one query; no row for an empty
+    * corpus. */
   def qaContext(queryText: String): DataFrame =
-    Search.thresholdRetrieval(queryVector(queryText), vectors(index().frame),
-      maxDistance = 0.4)
+    ranked(queryText, 1).select(lit(0L).as("query_id"),
+      col("vec_id").as("best_id"), floored(col("sim")).as("best_score"),
+      (lit(1.0) - col("sim") < 0.4).as("accepted"))
 
   /** Reference: controllers/health_controller.py — data reachable and
     * index non-empty; `false`, never an exception, when the corpus is

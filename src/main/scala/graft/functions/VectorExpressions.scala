@@ -43,18 +43,9 @@ abstract class BinaryVectorExpression extends BinaryExpression {
 
   protected def loopBody: String // java: computes `out` from dot/na/nb loop
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < n) {
-      val x = a.getFloat(i).toDouble
-      val y = b.getFloat(i).toDouble
-      dot += x * y; na += x * x; nb += y * y; i += 1
-    }
-    evalFromSums(dot, na, nb)
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    BinaryVectorExpression.fold(l.asInstanceOf[ArrayData],
+      r.asInstanceOf[ArrayData])(evalFromSums)
 
   protected def evalFromSums(dot: Double, na: Double, nb: Double): Double
 
@@ -77,13 +68,40 @@ abstract class BinaryVectorExpression extends BinaryExpression {
     })
 }
 
+object BinaryVectorExpression {
+  /** The interpreted form of the loop `doGenCode` emits: dot, |a|² and
+    * |b|² over the common prefix, float32 read, double accumulated left
+    * to right, handed to `out`. Driver-side scoring calls this directly
+    * (no `Literal` per pair), so it can never drift from the expression. */
+  def fold(a: ArrayData, b: ArrayData)(out: (Double, Double, Double) => Double)
+      : Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < n) {
+      val x = a.getFloat(i).toDouble
+      val y = b.getFloat(i).toDouble
+      dot += x * y; na += x * x; nb += y * y; i += 1
+    }
+    out(dot, na, nb)
+  }
+}
+
+object CosineSimilarity {
+  def fromSums(dot: Double, na: Double, nb: Double): Double =
+    if (na == 0.0 || nb == 0.0) 0.0
+    else dot / (math.sqrt(na) * math.sqrt(nb))
+
+  /** `cosine_similarity(a, b)` of two non-null vectors, on the driver. */
+  def of(a: ArrayData, b: ArrayData): Double =
+    BinaryVectorExpression.fold(a, b)(fromSums)
+}
+
 /** cosine(a, b) ∈ [-1, 1]; 0.0 when either vector has zero norm
   * (reference space: hnswlib "cosine", services/index_service.py:72). */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryVectorExpression {
   override protected def evalFromSums(dot: Double, na: Double, nb: Double): Double =
-    if (na == 0.0 || nb == 0.0) 0.0
-    else dot / (math.sqrt(na) * math.sqrt(nb))
+    CosineSimilarity.fromSums(dot, na, nb)
   override protected def loopBody: String =
     "(NA == 0.0 || NB == 0.0) ? 0.0 : DOT / (java.lang.Math.sqrt(NA) * java.lang.Math.sqrt(NB))"
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =

@@ -1,8 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.functions._
+import graft.sources.Tables
 import graft.operators.Barrier.BarrierOps
 
 /** IVF (inverted-file) approximate search: the scale path that replaces the
@@ -252,27 +257,114 @@ object IvfIndex {
         .agg(top_k_by_score(col("sim"), col("vec_id"), k).as("topk")))
   }
 
+  /** What [[searchPersisted]] keeps of one persisted index between calls:
+    * the [[Tables.fingerprint]] it was read at, its centroids and its
+    * postings schema. */
+  private final case class Resident(fingerprint: String,
+                                    centroids: Array[(Long, ArrayData)],
+                                    postings: StructType)
+
+  /** Indexes kept resident; past this many the least recently used goes. */
+  private val MaxResident = 8
+  private val resident =
+    new java.util.LinkedHashMap[String, Resident](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, Resident]): Boolean =
+        size() > MaxResident
+    }
+
+  private def vector(r: Row, i: Int): ArrayData =
+    ArrayData.toArrayData(r.getSeq[Float](i).toArray)
+
+  /** The resident centroids and postings schema of the index at `path`,
+    * read again first when its fingerprint moved. */
+  private def residentIndex(spark: SparkSession, path: String): Resident = {
+    val fp = Tables.fingerprint(spark, path)
+    require(fp != "missing", s"no persisted IVF index at $path")
+    Option(resident.synchronized(resident.get(path)))
+      .filter(_.fingerprint == fp)
+      .getOrElse {
+        val cents = spark.read.parquet(s"$path/centroids")
+          .filter(col("centroid_id").isNotNull && col("cv").isNotNull)
+          .select(col("centroid_id"), col("cv"))
+          .collect() // BOUNDED: k × dim
+          .map(r => r.getLong(0) -> vector(r, 1))
+        // an empty corpus writes no posting partitions, so no schema
+        val postings =
+          if (cents.isEmpty) EmptyPostings
+          else spark.read.parquet(s"$path/postings").schema
+        val r = Resident(fp, cents, postings)
+        resident.synchronized(resident.put(path, r))
+        r
+      }
+  }
+
   /** Search a persisted index: probe centroids, then scan ONLY the probed
     * posting-list partitions (directory-level pruning via the partition
-    * column filter — verify `PartitionFilters` in the scan). */
-  def searchPersisted(spark: org.apache.spark.sql.SparkSession, path: String,
+    * column filter — verify `PartitionFilters` in the scan).
+    *
+    * Resident lifecycle: the index's centroids (k × dim floats) and its
+    * postings schema stay on the driver, keyed by the
+    * [[Tables.fingerprint]] of `path`, which is re-checked on every call
+    * with one recursive listing — an index rewritten by [[persist]] or
+    * appended to by `IndexMaintenance.appendBatch` is read again, never
+    * served stale. At most `MaxResident` paths are kept. A warm call
+    * collects the queries (the one job before it returns, bounded by the
+    * batch), probes their `nprobe` nearest centroids on the driver with
+    * the `cosine_similarity` loop and `top_k_by_score`'s order, and plans
+    * the postings scan with the known schema (no inference); the probes
+    * reach the plan as a literal map from `centroid_id` to the ids of the
+    * queries that probe it, and the result's sort is bounded by its size,
+    * queries × k (`TakeOrderedAndProject`). An index with no centroids
+    * answers zero rows without reading postings; a missing `path` is an
+    * `IllegalArgumentException`. */
+  def searchPersisted(spark: SparkSession, path: String,
                       queries: DataFrame, nprobe: Int, k: Int): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids")
-    // materialized once: ids for partition pruning + the broadcast side
-    val probes = probeCentroids(cents, queries, nprobe).barrier()
-    val probedIds = probes.select(col("centroid_id")).distinct()
-      .collect().map(_.getLong(0)) // BOUNDED: <= queries x nprobe
-    val postings = spark.read.parquet(s"$path/postings")
-      .filter(col("centroid_id").isin(probedIds.toSeq.map(x => x: Any): _*))
+    require(nprobe > 0 && k > 0, s"nprobe and k must be > 0, got $nprobe, $k")
+    val idx = residentIndex(spark, path)
+    val qid = queries.schema("query_id")
+    require(VectorTypeCheck.isFloatVector(queries.schema("qv").dataType),
+      s"qv must be array<float>, got ${queries.schema("qv").dataType.simpleString}")
+    // centroid_id → the ids of the queries that probe it
+    val probes: Map[Long, Seq[Any]] = queries.select(col("query_id"), col("qv"))
+      .collect() // BOUNDED: the query batch
+      .filterNot(_.isNullAt(1))
+      .groupBy(_.get(0)).toSeq
+      .flatMap { case (q, rows) =>
+        val best = new TopKBuffer(nprobe)
+        rows.foreach { r =>
+          val qv = vector(r, 1)
+          idx.centroids.foreach { case (id, cv) => best.add(CosineSimilarity.of(qv, cv), id) }
+        }
+        best.sorted.map { case (_, id) => id -> q }
+      }
+      .groupMap(_._1)(_._2)
+    val probing = bridge.column(Literal.create(probes,
+      MapType(LongType, ArrayType(qid.dataType, qid.nullable), valueContainsNull = false)))
+    val postings =
+      if (probes.isEmpty)
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), idx.postings)
+      else spark.read.schema(idx.postings).parquet(s"$path/postings")
+        .filter(col("centroid_id").isin(probes.keys.toSeq: _*))
     val scored = postings
-      .join(broadcast(probes), Seq("centroid_id"))
+      .select(col("vec_id"), col("embedding"),
+        explode(probing(col("centroid_id").cast(LongType))).as("query_id"))
       .join(broadcast(queries), Seq("query_id"))
       .select(col("query_id"), col("vec_id"),
         cosine_similarity(col("qv"), col("embedding")).as("sim"))
+    val maxRows = probes.values.flatten.toSeq.distinct.length.toLong * k
     Search.explodeTopK(
-      scored.groupBy(col("query_id"))
-        .agg(top_k_by_score(col("sim"), col("vec_id"), k).as("topk")))
+        scored.groupBy(col("query_id"))
+          .agg(top_k_by_score(col("sim"), col("vec_id"), k).as("topk")))
+      .limit(math.min(maxRows, Int.MaxValue.toLong).toInt)
   }
+
+  /** The postings schema [[persist]] writes for `(vec_id bigint, embedding
+    * array<float>)` vectors. */
+  private val EmptyPostings = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType, containsNull = false)),
+    StructField("centroid_id", IntegerType)))
 
   /** Probe the `nprobe` nearest centroids per query, then exact top-k over
     * only those centroids' posting lists. */

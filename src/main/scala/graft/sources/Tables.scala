@@ -96,19 +96,23 @@ object Tables {
     * time, from one recursive listing on the driver. A
     * corpus rewritten in place reads a new fingerprint, so it keys the
     * caches that must never serve a stale build; a path that does not
-    * exist reads `"missing"`. */
+    * exist reads `"missing"`.
+    *
+    * The walk uses `listStatus`, not `listFiles`: a `LocatedFileStatus`
+    * copies each file's owner and permissions, which the local
+    * FileSystem reads by forking `ls -ld` per file when the native
+    * Hadoop library is absent. */
   def fingerprint(spark: SparkSession, path: String): String = {
+    import org.apache.hadoop.fs.FileStatus
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      val it = fs.listFiles(p, true)
-      val files = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (it.hasNext) {
-        val f = it.next()
-        files += s"${f.getPath}:${f.getLen}:${f.getModificationTime}"
-      }
-      digest(files.sorted.mkString("\n"))
-    } catch { case _: java.io.FileNotFoundException => "missing" }
+    def files(s: FileStatus): Iterator[FileStatus] =
+      if (s.isDirectory) fs.listStatus(s.getPath).iterator.flatMap(files)
+      else Iterator(s)
+    try digest(files(fs.getFileStatus(p))
+        .map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}")
+        .toSeq.sorted.mkString("\n"))
+    catch { case _: java.io.FileNotFoundException => "missing" }
   }
 
   /** Scale-adaptive scan-parallelism floor (guide §2.5 "input skew …

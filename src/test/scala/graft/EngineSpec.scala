@@ -92,7 +92,30 @@ class EngineSpec extends SparkSuite {
       "vector filter scan with a small key" -> 25, "merge sort part" -> 1,
       "customer order line value" -> 3, "spark batch stream" -> 20,
       "group by query row data" -> 25, "slow column hash" -> 3,
-      "zebra quantum marmalade harpsichord" -> 3))
+      "zebra quantum marmalade harpsichord" -> 3, "!!!" -> 5, "!!!" -> 1))
+    val docs = Tables(spark, sfDir).documents.select(col("doc_id"), col("text"))
+    val n = docs.count()
+    // every document twice: each sim is tied, and the lower doc_id ranks first
+    val twice = corpusOf(docs.unionByName(
+      docs.select((col("doc_id") + n).as("doc_id"), col("text"))))
+    assertServesBuildIndex(new SearchEngine(spark, twice), twice,
+      Seq(Probe -> 6, "table scan" -> 1, "!!!" -> 4, "spark batch stream" -> 25))
+    // fewer documents than k
+    val few = corpusOf(docs.filter(col("doc_id") < 3))
+    assertServesBuildIndex(new SearchEngine(spark, few), few,
+      Seq(Probe -> 5, "!!!" -> 20, "table scan" -> 25))
+    // no documents: zero rows from both
+    val none = corpusOf(docs.filter(lit(false)))
+    assertServesBuildIndex(new SearchEngine(spark, none), none,
+      Seq(Probe -> 5, "!!!" -> 1))
+    assert(new SearchEngine(spark, none).search(Probe, 5).collect().isEmpty)
+  }
+
+  /** A corpus directory whose `documents.parquet` holds `docs`. */
+  private def corpusOf(docs: DataFrame): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-corpus").toString
+    docs.write.parquet(s"$dir/documents.parquet")
+    dir
   }
 
   test("resident index: a corpus rewritten at a file: URI is served fresh") {
@@ -134,9 +157,12 @@ class EngineSpec extends SparkSuite {
       val frames = Seq(e.search(Probe, 5), e.qaContext(Probe))
       bridge.drainListenerBus(spark)
       assert(jobs.get == 0, "jobs launched while constructing a warm request")
-      frames.foreach(_.collect())
-      bridge.drainListenerBus(spark)
-      assert(jobs.get > 0, "the listener saw no job at all")
+      frames.foreach { f =>
+        jobs.set(0)
+        f.collect()
+        bridge.drainListenerBus(spark)
+        assert(jobs.get == 1, s"a warm request ran ${jobs.get} jobs, want 1")
+      }
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 

@@ -86,6 +86,68 @@ class IvfSpec extends SparkSuite {
     assert(plan.contains("PartitionFilters: [centroid_id"), plan)
   }
 
+  test("persisted index: a rewrite at the same file: URI is served fresh") {
+    val uri = java.nio.file.Files.createTempDirectory("graft-ivf-rw")
+      .toUri.toString.stripSuffix("/")
+    IvfIndex.persist(t.embeddings, nCentroids = 16, path = uri)
+    val before = IvfIndex.searchPersisted(spark, uri, queries, 4, 5).collect().toSeq
+    assert(before == IvfIndex.search(queries, t.embeddings, 16, 4, 5).collect().toSeq)
+    IvfIndex.persist(t.embeddings, nCentroids = 4, path = uri)
+    val after = IvfIndex.searchPersisted(spark, uri, queries, 4, 5).collect().toSeq
+    assert(after == IvfIndex.search(queries, t.embeddings, 4, 4, 5).collect().toSeq)
+    assert(after != before, "4 of 4 probes must answer differently from 4 of 16")
+  }
+
+  test("persisted index: rows appended by appendBatch are served on the next call") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-append").toString
+    IvfIndex.persist(t.embeddings.filter($"vec_id" % 2 === 0), nCentroids = 16, path = dir)
+    val half = IvfIndex.searchPersisted(spark, dir, queries, 16, 5).collect().toSeq
+    streaming.IndexMaintenance.appendBatch(t.embeddings.filter($"vec_id" % 2 === 1),
+      spark.read.parquet(s"$dir/centroids"), dir)
+    // every centroid probed: the answer is exact over all rows, odd ones included
+    val full = IvfIndex.searchPersisted(spark, dir, queries, 16, 5).collect().toSeq
+    assert(full == Search.bruteForceTopK(queries, t.embeddings, 5).collect().toSeq)
+    assert(full != half)
+  }
+
+  test("persisted index: a warm search runs at most one job before it returns") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-warm").toString
+    IvfIndex.persist(t.embeddings, nCentroids = 16, path = dir)
+    IvfIndex.searchPersisted(spark, dir, queries, 4, 5).collect()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          job: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val frame = IvfIndex.searchPersisted(spark, dir, queries, 4, 5)
+      org.apache.spark.sql.graft.bridge.drainListenerBus(spark)
+      assert(jobs.get <= 1, s"${jobs.get} jobs before a warm search returned")
+      assert(frame.collect().length == 10 * 5)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("persisted index over an empty corpus: zero rows, usual schema") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-empty").toString
+    IvfIndex.persist(t.embeddings.filter(lit(false)), nCentroids = 16, path = dir)
+    val got = IvfIndex.searchPersisted(spark, dir, queries, 4, 5)
+    assert(got.collect().isEmpty)
+    val full = java.nio.file.Files.createTempDirectory("graft-ivf-full").toString
+    IvfIndex.persist(t.embeddings, nCentroids = 16, path = full)
+    val usual = IvfIndex.searchPersisted(spark, full, queries, 4, 5).schema
+    assert(got.schema.map(f => f.name -> f.dataType) ==
+      usual.map(f => f.name -> f.dataType))
+  }
+
+  test("persisted index: a path that does not exist is a named error") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-none").toString
+    val e = intercept[IllegalArgumentException](
+      IvfIndex.searchPersisted(spark, s"$dir/absent", queries, 4, 5))
+    assert(e.getMessage.contains("no persisted IVF index"), e.getMessage)
+  }
+
   test("loadOrRebuild: rebuilds on missing or count-mismatched index") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf2").toString
     assert(!IvfIndex.loadOrRebuild(spark, dir, t.embeddings, 16)) // built
