@@ -2383,9 +2383,11 @@ $rounds
     }),
     // the shingle-store build half behind dedup_jaccard_bucketed /
     // dedup_containment_bucketed (whose timed rows measure the serve
-    // path — the store lands in warm-up): the df-capped shingle table
-    // materialization, which is also exactly the build work the
-    // RECOMPUTE rows (dedup_jaccard/containment) pay inline every run
+    // path — the store lands in warm-up): the df-capped shingle table —
+    // the shingle-set barrier at construction, then the explode and the
+    // df-cap window's exchange when the row runs — which is also the
+    // build work the RECOMPUTE rows (dedup_jaccard/containment) pay
+    // inline every run, there feeding the pair join directly
     "dedup_shingles#build" -> ((s, dir) =>
       Dedup.cappedShingleTable(Tables(s, dir, spread = true).documents, 3, 1000)),
     // the semantic-base BUILD half behind dedup_semantic_incremental

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions._
@@ -443,11 +443,9 @@ object Dedup {
       .barrier() // read thrice: id semi-join + the two set joins
     val ids = surv.select(col("id1").as("doc_id"))
       .union(surv.select(col("id2").as("doc_id"))).distinct()
-    val sets = docs.join(ids, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"),
-        array_distinct(
-          shingles(tokens(preprocess(col("text"))), shingleLen)).as("shs"))
-      .barrier() // barrier: see jaccardNeighbors; read twice
+    val sets = shingleSets(docs.join(ids, Seq("doc_id"), "left_semi"),
+        shingleLen)
+      .barrier() // barrier: see cappedShingleTable; read twice
     val inter = size(array_intersect(col("sh1"), col("sh2")))
     val uni = size(col("sh1")) + size(col("sh2")) - inter
     surv
@@ -715,15 +713,36 @@ object Dedup {
     perDocSummary(hashed, pairs)
   }
 
-  /** The df-capped per-doc shingle table `(doc_id, n_sh, sh)` shared by
-    * [[jaccardNeighbors]] and [[containmentNeighbors]] — built once,
-    * checkpointed, read by both sides of the self-join.
+  /** The per-doc shingle SET `(doc_id, shs)`: the distinct word
+    * `shingleLen`-grams of the normalized text, built array-side
+    * (`array_distinct` over [[graft.functions.WordShingles]]). The one
+    * definition behind [[cappedShingleTable]], [[dfProfile]] and
+    * [[verifiedDuplicates]]. */
+  private[graft] def shingleSets(docs: DataFrame,
+                                 shingleLen: Int): DataFrame =
+    docs.select(col("doc_id"),
+      array_distinct(
+        shingles(tokens(preprocess(col("text"))), shingleLen)).as("shs"))
+
+  /** The df-capped per-doc shingle table `(doc_id, n_sh, sh)` behind
+    * [[jaccardNeighbors]], [[containmentNeighbors]] and the shingle
+    * store.
     *
-    * The per-doc shingle SET is built array-side (`array_distinct` over
-    * [[graft.functions.WordShingles]]) and checkpointed BEFORE the
-    * explode — the barrier that stops Generate from re-evaluating the
-    * array build per output row (the round-1 33 s quadratic blowup).
-    * Building the set array-side also yields `n_sh = size(set)` for free.
+    * The per-doc shingle SET ([[shingleSets]]) is checkpointed BEFORE
+    * the explode — the barrier that stops Generate from re-evaluating
+    * the array build per output row (the round-1 33 s quadratic
+    * blowup). Building the set array-side also yields `n_sh =
+    * size(set)` for free.
+    *
+    * Everything after that barrier is lazy. The df-cap window
+    * hash-partitions and sorts the table on `sh`, which is exactly the
+    * distribution and order [[pairIntersections]]' merge join needs: the
+    * self-join reuses the window's one exchange on both sides and
+    * neither re-shuffles nor re-sorts. A barrier here would erase that
+    * clustering (the join would re-sort the whole table) and run the
+    * exchange at construction. A consumer joining the table against
+    * something else, as [[jaccardIncrementalFromStore]] does, puts its
+    * own barrier on it.
     *
     * Shingles travel as their 64-bit FNV, not the string: ~3-4× less
     * shuffle per row and cheaper join probes. `n_sh` counts distinct
@@ -748,10 +767,7 @@ object Dedup {
   private[graft] def cappedShingleTable(docs: DataFrame, shingleLen: Int,
                                  maxShingleDf: Int,
                                  minDf: Int = 2): DataFrame =
-    docs
-      .select(col("doc_id"),
-        array_distinct(
-          shingles(tokens(preprocess(col("text"))), shingleLen)).as("shs"))
+    shingleSets(docs, shingleLen)
       .barrier() // barrier: see minhashCandidates
       .select(col("doc_id"), size(col("shs")).as("n_sh"),
         explode(col("shs")).as("s"))
@@ -760,8 +776,6 @@ object Dedup {
       .withColumn("__df", count(lit(1)).over(Window.partitionBy(col("sh"))))
       .filter(col("__df") <= maxShingleDf && col("__df") >= minDf)
       .drop("__df")
-      // both sides of the self-join read the materialized shingle table
-      .barrier()
 
   /** Shingle document-frequency profile: the df distribution in log2
     * buckets, each bucket carrying its shingle count, posting mass, and
@@ -783,10 +797,7 @@ object Dedup {
     * corpus scale overflows a LONG. */
   def dfProfile(docs: DataFrame, shingleLen: Int = 3,
                 capBucket: Int = 20): DataFrame = {
-    val dfs = docs
-      .select(col("doc_id"),
-        array_distinct(
-          shingles(tokens(preprocess(col("text"))), shingleLen)).as("shs"))
+    val dfs = shingleSets(docs, shingleLen)
       .barrier() // see minhashCandidates: Generate re-evaluation cut
       .select(explode(col("shs")).as("s"))
       .select(graft.functions.fnv1a64(col("s")).as("sh"))
@@ -810,63 +821,73 @@ object Dedup {
 
   /** Word-n-gram Jaccard nearest neighbor per doc (docs sharing no shingle
     * have no neighbor and drop out — same on the oracle side). Built on
-    * [[cappedShingleTable]]; at local sf0.1 the wall time is
-    * join-dominated (~2.9 s warm) and the default df cap is above the max
+    * [[cappedShingleTable]]; the default df cap is above the max
     * observed df at oracle scale, so sf0.01 results are exact. */
   def jaccardNeighbors(docs: DataFrame, shingleLen: Int = 3,
                        maxShingleDf: Int = 1000): DataFrame =
     jaccardNeighborsOn(cappedShingleTable(docs, shingleLen, maxShingleDf))
 
-  /** The jaccard join+fold over an already-built (df-capped) shingle
-    * table — shared by the recompute path ([[jaccardNeighbors]]) and
-    * the bucketed store ([[jaccardNeighborsFromStore]]), so there is
-    * one implementation of the measure. */
-  private def jaccardNeighborsOn(sh: DataFrame): DataFrame = {
-    // the self-join shuffles only (doc_id, sh) — n_sh stays out of the
-    // widest shuffle of the pipeline (~1/3 of its bytes) and joins back
-    // onto the candidate-PAIR table, which is orders of magnitude smaller
-    // than the shingle table
-    val slim = sh.select(col("doc_id"), col("sh"))
-    val sizes = sh.select(col("doc_id"), col("n_sh")).distinct()
-    // intersection counts are SYMMETRIC, so each unordered pair is joined
-    // and aggregated ONCE (id1 < id2) — halving the pair aggregate, the
-    // widest shuffle of the pipeline (guide §2.3: shuffle fewer bytes) —
-    // and both orderings are re-emitted AFTER the fold by one explode
-    // over the aggregated, candidate-pair-sized table. Identical multiset
-    // to the two-sided join: pair {x,y} with k shared shingles produced
-    // (x,y,k) and (y,x,k) before; it produces (x,y,k) exploded to both now.
-    // merge hint: corpus-sized on both sides — never hash-build
-    // (see bandedPairs; the saturated-SHJ OOM profile)
-    val inter = slim.hint("merge").as("a")
-      .join(slim.hint("merge").as("b"), col("a.sh") === col("b.sh") &&
+  /** The shingle pair kernel behind the whole jaccard/containment family,
+    * recompute and store paths alike: over a `(doc_id, n_sh, sh)` table
+    * (a [[cappedShingleTable]] or a [[persistShingles]] store scan), every
+    * pair of docs sharing at least one shingle as `(doc_id, other_id, n1,
+    * n2, inter)`, in BOTH orderings — `n1` is `doc_id`'s set size, `n2`
+    * `other_id`'s, `inter` the shared-shingle count.
+    *
+    * One pipeline, no barrier: the merge join consumes the input's
+    * `sh`-clustering as is — the df-cap window's exchange (reused by
+    * both sides) or the store's buckets — so the corpus-sized side is
+    * neither re-shuffled nor re-sorted. The merge hint keeps it that
+    * way: both sides are corpus-sized, never hash-build (see
+    * [[bandedPairs]]; the saturated-SHJ OOM profile).
+    *
+    * Intersection counts are SYMMETRIC, so each unordered pair is joined
+    * and aggregated ONCE (id1 < id2) — halving the pair aggregate, the
+    * widest shuffle of the pipeline — and both orderings are re-emitted
+    * AFTER the fold by one explode over the candidate-pair-sized table.
+    * `n_sh` rides the join and the group key: it is functionally
+    * dependent on `doc_id`, so grouping on `(id1, n1, id2, n2)` forms
+    * the same groups as `(id1, id2)` and the denominators need no
+    * back-join (the [[jaccardIncrementalFromStore]] pattern). */
+  private def pairIntersections(sh: DataFrame): DataFrame = {
+    val side = sh.select(col("doc_id"), col("n_sh"), col("sh")).hint("merge")
+    side.as("a")
+      .join(side.as("b"), col("a.sh") === col("b.sh") &&
         col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
+      .groupBy(col("a.doc_id").as("id1"), col("a.n_sh").as("n1"),
+        col("b.doc_id").as("id2"), col("b.n_sh").as("n2"))
       .agg(count(lit(1)).as("inter"))
-    val jac = inter
       .select(explode(array(
-        struct(col("id1").as("doc_id"), col("id2").as("neighbor_id"),
-          col("inter")),
-        struct(col("id2").as("doc_id"), col("id1").as("neighbor_id"),
-          col("inter")))).as("p"))
-      .select(col("p.doc_id").as("doc_id"),
-        col("p.neighbor_id").as("neighbor_id"), col("p.inter").as("inter"))
-      .join(sizes.select(col("doc_id"), col("n_sh").as("n1")), Seq("doc_id"))
-      .join(sizes.select(col("doc_id").as("neighbor_id"),
-        col("n_sh").as("n2")), Seq("neighbor_id"))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("n1") + col("n2") - col("inter")))
-    // top-1 as the codegen'd struct-max, (jaccard desc, neighbor_id asc)
-    // — the jaccardIncrementalFromStore argmax encoding: a
-    // partial-aggregable fold instead of an exchange+sort+row_number
-    // window, selecting exactly the window's rn=1 row (total order on
-    // finite doubles; -neighbor_id flips the tie-break to ascending)
-    jac.groupBy(col("doc_id"))
-      .agg(max(struct(col("jaccard"), (-col("neighbor_id")).as("nid")))
-        .as("best"))
-      .select(col("doc_id"), (-col("best.nid")).as("neighbor_id"),
-        (floor(col("best.jaccard") * 1e6) / 1e6).as("jaccard"))
-      .transform(graft.Determinism.sorted(_)(col("doc_id")))
+        struct(col("id1").as("doc_id"), col("id2").as("other_id"),
+          col("n1"), col("n2"), col("inter")),
+        struct(col("id2").as("doc_id"), col("id1").as("other_id"),
+          col("n2").as("n1"), col("n1").as("n2"), col("inter")))).as("p"))
+      .select(col("p.doc_id"), col("p.other_id"), col("p.n1"), col("p.n2"),
+        col("p.inter"))
   }
+
+  /** Per doc, the pair with the highest `score`, ties to the smallest
+    * `other_id`: `(doc_id, other_id, score)`, `score` unfloored. The
+    * codegen'd struct-max — a partial-aggregable fold instead of an
+    * exchange+sort+row_number window, selecting exactly the window's
+    * rn=1 row (total order on finite doubles; -other_id flips the
+    * tie-break to ascending). */
+  private def bestPair(pairs: DataFrame, score: Column): DataFrame =
+    pairs.groupBy(col("doc_id"))
+      .agg(max(struct(score.as("score"), (-col("other_id")).as("nid")))
+        .as("best"))
+      .select(col("doc_id"), (-col("best.nid")).as("other_id"),
+        col("best.score").as("score"))
+
+  /** [[jaccardNeighbors]] over an already-built (df-capped) shingle
+    * table: |A∩B| / (|A| + |B| − |A∩B|) on the [[pairIntersections]]
+    * kernel, top-1 by [[bestPair]], floored AFTER the argmax. */
+  private def jaccardNeighborsOn(sh: DataFrame): DataFrame =
+    bestPair(pairIntersections(sh),
+        col("inter").cast("double") / (col("n1") + col("n2") - col("inter")))
+      .select(col("doc_id"), col("other_id").as("neighbor_id"),
+        (floor(col("score") * 1e6) / 1e6).as("jaccard"))
+      .transform(graft.Determinism.sorted(_)(col("doc_id")))
 
   /** ASYMMETRIC containment dedup: for each doc, the corpus doc that best
     * CONTAINS it — containment(A→B) = |shingles(A) ∩ shingles(B)| /
@@ -878,13 +899,10 @@ object Dedup {
     * jaccard, so A⊂B pairs rarely collide — which is why this runs on the
     * shingle-join candidate path, not the banded one.)
     *
-    * Same scale shape as [[jaccardNeighbors]] and built on the same
-    * [[cappedShingleTable]]: pairs exist only where a (df-capped) shingle
-    * is shared, the self-join shuffles only `(doc_id, sh)`, and the
-    * denominator join lands on the much smaller candidate-pair table.
-    * The self-join emits both orderings of every pair, which is exactly
-    * what an asymmetric measure needs — A→B and B→A get different scores
-    * from the same intersection count.
+    * Same scale shape as [[jaccardNeighbors]]: the same
+    * [[cappedShingleTable]] and the same [[pairIntersections]] kernel,
+    * whose two orderings are exactly what an asymmetric measure needs —
+    * A→B and B→A get different scores from the same intersection count.
     *
     * Output: per doc, the best container (ties → smallest id) with
     * `containment` and the `is_contained` gate at `threshold`; docs
@@ -895,60 +913,27 @@ object Dedup {
     containmentNeighborsOn(
       cappedShingleTable(docs, shingleLen, maxShingleDf), threshold)
 
-  /** The containment join+fold over an already-built shingle table —
-    * see [[jaccardNeighborsOn]]. */
+  /** [[containmentNeighbors]] over an already-built shingle table: only
+    * the CONTAINED side's size enters the measure; the gate evaluates on
+    * the argmax row's raw containment, before the floor. */
   private def containmentNeighborsOn(sh: DataFrame,
-                                     threshold: Double): DataFrame = {
-    val slim = sh.select(col("doc_id"), col("sh"))
-    val sizes = sh.select(col("doc_id"), col("n_sh")).distinct()
-    // the intersection count is symmetric even though the MEASURE is
-    // asymmetric: join/aggregate each unordered pair once (id1 < id2,
-    // halving the widest shuffle — see jaccardNeighborsOn) and explode
-    // both orderings after the fold; each direction then divides by its
-    // own contained side's size exactly as the two-sided join did.
-    // merge hint: corpus-sized on both sides — never hash-build
-    // (see bandedPairs; the saturated-SHJ OOM profile)
-    val inter = slim.hint("merge").as("a")
-      .join(slim.hint("merge").as("b"), col("a.sh") === col("b.sh") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-      .agg(count(lit(1)).as("inter"))
-    val cont = inter
-      .select(explode(array(
-        struct(col("id1").as("doc_id"), col("id2").as("container_id"),
-          col("inter")),
-        struct(col("id2").as("doc_id"), col("id1").as("container_id"),
-          col("inter")))).as("p"))
-      .select(col("p.doc_id").as("doc_id"),
-        col("p.container_id").as("container_id"), col("p.inter").as("inter"))
-      // only the CONTAINED side's size enters the measure — the
-      // denominator join stays one-sided
-      .join(sizes.select(col("doc_id"), col("n_sh").as("n1")), Seq("doc_id"))
-      .withColumn("containment",
+                                     threshold: Double): DataFrame =
+    bestPair(pairIntersections(sh),
         col("inter").cast("double") / col("n1").cast("double"))
-    // top-1 as the codegen'd struct-max (containment desc, container_id
-    // asc) — see jaccardNeighborsOn; the gate evaluates on the argmax
-    // row's raw containment exactly as the window's rn=1 filter did
-    cont.groupBy(col("doc_id"))
-      .agg(max(struct(col("containment"), (-col("container_id")).as("cid")))
-        .as("best"))
-      .select(col("doc_id"), (-col("best.cid")).as("container_id"),
-        (floor(col("best.containment") * 1e6) / 1e6).as("containment"),
-        (col("best.containment") >= threshold).as("is_contained"))
+      .select(col("doc_id"), col("other_id").as("container_id"),
+        (floor(col("score") * 1e6) / 1e6).as("containment"),
+        (col("score") >= threshold).as("is_contained"))
       .transform(graft.Determinism.sorted(_)(col("doc_id")))
-  }
 
   /** Persist the df-capped shingle table BUCKETED BY SHINGLE HASH — the
     * build-once layout for the shingle-join family (the
     * [[persistSignatures]] pattern applied to [[jaccardNeighbors]] /
     * [[containmentNeighbors]]): both sides of the self-join read
     * co-located, within-bucket-SORTED files, so the join runs with NO
-    * exchange and NO sort on the corpus-sized table. That matters
-    * beyond the shuffle bytes: the recompute path's barrier erases the
-    * df-cap window's (sh)-clustering, so its SMJ re-sorts the whole
-    * shingle table per run — the sort/spill constant measured
-    * superlinear in the decade sweeps. The store pays that cost ONCE at
-    * build; every later dedup pass starts at the join.
+    * exchange and NO sort on the corpus-sized table. The recompute path
+    * pays the df-cap window's exchange and sort on every run (its join
+    * reuses them, so it pays them once per run); the store pays them
+    * ONCE at build, and every later dedup pass starts at the join.
     *
     * `repartition(nBuckets, sh)` uses the same hash as the bucket
     * layout, so each task holds exactly one bucket and writes ONE file
@@ -1110,7 +1095,12 @@ object Dedup {
         "left_anti")
       .select(col("doc_id").as("base_id"),
         col("n_sh").as("n_base"), col("sh"))
+    // barrier: materializing the increment's table keeps the df-cap
+    // window's exchange (partitioned for the window, not for the store's
+    // buckets) out of the probe plan, so the un-hinted join's one sh
+    // Exchange is the increment side's
     val nw = cappedShingleTable(newDocs, shingleLen, maxShingleDf, minDf = 1)
+      .barrier()
       .select(col("doc_id").as("new_id"), col("n_sh").as("n_new"), col("sh"))
     val probeSide = if (autoBroadcast) broadcast(nw) else nw
     b.join(probeSide, Seq("sh"))
@@ -1822,9 +1812,19 @@ object Dedup {
               .as("dist"),
             lit(cid).as("cid"))
         }
-        val best = if (structs.sizeIs == 1) structs.head else least(structs: _*)
-        embeddings.select(best.getField("cid").as("block"), col("vec_id"),
-          col("embedding"))
+        val block = structs match {
+          // no centroid: zero rows on an empty table (typed block); the
+          // seeds are the vec_ids below k, so a non-empty table without
+          // one is a named error rather than a 0-argument least()
+          case Seq() =>
+            require(embeddings.isEmpty,
+              s"semanticNeighbors seeds its $k centroids from vec_id < $k, " +
+                "and no vec_id is below it")
+            lit(null).cast("long")
+          case Seq(only) => only.getField("cid")
+          case _ => least(structs: _*).getField("cid")
+        }
+        embeddings.select(block.as("block"), col("vec_id"), col("embedding"))
       } else {
         // NARROW argmin + linear re-attach join (r19): the min-struct is
         // (dist, centroid_id) ONLY. Carrying the embedding inside the

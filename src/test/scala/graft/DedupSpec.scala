@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions._
 import graft.functions.TextFunctions._
@@ -1059,5 +1060,164 @@ class DedupSpec extends SparkSuite {
       assert(e.getMessage.contains("rebuild the base"), e.getMessage)
     } finally Seq("", "_centroids", "_coarse", "_meta")
       .foreach(s => spark.sql(s"DROP TABLE IF EXISTS $tbl$s"))
+  }
+
+  /** The shingle pair family computed with plain Scala sets over the
+    * engine's own per-doc shingle sets: the df window, the pair join,
+    * both measures and the (score desc, id asc) argmax, floored to the
+    * 1e-6 grid. Returns (jaccard, containment at 0.8) per doc. */
+  private def shingleReference(docs: DataFrame, maxDf: Int)
+      : (Map[Long, (Long, Double)], Map[Long, (Long, Double, Boolean)]) = {
+    val sets = operators.Dedup.shingleSets(docs, 3).collect()
+      .map(r => r.getLong(0) -> r.getSeq[String](1).toSet).toMap
+    val df = sets.values.toSeq.flatten.groupBy(identity)
+      .map { case (s, xs) => s -> xs.size }
+    val joinable = sets.map { case (id, s) =>
+      id -> s.filter(x => df(x) >= 2 && df(x) <= maxDf) }
+    val n = sets.map { case (id, s) => id -> s.size.toLong }
+    val pairs = for {
+      (a, sa) <- joinable.toSeq; (b, sb) <- joinable.toSeq
+      if a != b
+      inter = (sa intersect sb).size.toLong
+      if inter > 0
+    } yield (a, b, inter)
+    def best(score: (Long, Long, Long) => Double): Map[Long, (Long, Double)] =
+      pairs.groupBy(_._1).map { case (a, ps) =>
+        val (b, s) = ps.map { case (_, b, i) => (b, score(a, b, i)) }
+          .sortBy { case (b, s) => (-s, b) }(
+            Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+          .head
+        a -> ((b, s))
+      }
+    def floor6(x: Double) = math.floor(x * 1e6) / 1e6
+    val jac = best((a, b, i) => i.toDouble / (n(a) + n(b) - i))
+      .map { case (a, (b, s)) => a -> ((b, floor6(s))) }
+    val cont = best((a, _, i) => i.toDouble / n(a).toDouble)
+      .map { case (a, (b, s)) => a -> ((b, floor6(s), s >= 0.8)) }
+    (jac, cont)
+  }
+
+  private def jaccardMap(df: DataFrame) =
+    df.collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2))))
+      .toMap
+
+  private def containmentMap(df: DataFrame) =
+    df.collect().map(r =>
+      r.getLong(0) -> ((r.getLong(1), r.getDouble(2), r.getBoolean(3)))).toMap
+
+  test("jaccard + containment equal a plain Scala set reference") {
+    val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    val small = "red orange yellow green blue indigo violet"
+    val docs = Seq(
+      (1L, a), (4L, a), (9L, a),                   // exact duplicates
+      (2L, small),                                 // contained in 7
+      (7L, small + " cyan magenta black white grey"),
+      (3L, "lone wolf walks alone tonight"),       // shares nothing
+      // 5 shares one shingle with 6 and one with 8, same sizes: a tie
+      (8L, "x2 y2 z2 four five six"),
+      (5L, "one two three four five six"),
+      (6L, "one two three x1 y1 z1")) ++
+      // a boilerplate shingle pair with df 4
+      (10L to 13L).map(i => (i, s"copyright all rights reserved u$i v$i w$i"))
+    val corpus = docs.toDF("doc_id", "text")
+    // 1000: no cap binds; 3: the df-4 boilerplate drops; 2: the df-3
+    // duplicate family drops too
+    val refs = Seq(1000, 3, 2).map { maxDf =>
+      val (jacRef, contRef) = shingleReference(corpus, maxDf)
+      assert(jaccardMap(operators.Dedup.jaccardNeighbors(corpus,
+        maxShingleDf = maxDf)) == jacRef, s"jaccard, maxShingleDf=$maxDf")
+      assert(containmentMap(operators.Dedup.containmentNeighbors(corpus,
+        maxShingleDf = maxDf)) == contRef, s"containment, maxShingleDf=$maxDf")
+      (jacRef, contRef)
+    }
+    val (jac, cont) = refs.head
+    // the reference itself reads what the corpus was built to show
+    assert(jac(4L) == ((1L, 1.0)) && jac(9L) == ((1L, 1.0)) &&
+      jac(1L) == ((4L, 1.0)), s"duplicates: $jac")
+    assert(cont(2L) == ((7L, 1.0, true)) && cont(7L) == ((2L, 0.5, false)),
+      s"containment: $cont")
+    assert(jac(5L)._1 == 6L && cont(5L)._1 == 6L, "tie must go to id 6")
+    assert(!jac.contains(3L) && !cont.contains(3L), "isolated doc kept")
+    assert(jac.contains(10L) && !refs(1)._1.contains(10L),
+      "maxShingleDf=3 must drop the boilerplate family")
+    assert(refs(1)._1.contains(1L) && !refs(2)._1.contains(1L),
+      "maxShingleDf=2 must drop the duplicate family")
+  }
+
+  test("jaccard + containment on degenerate corpora: empty, all-null, " +
+    "one repeated text") {
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val nulls = (1L to 5L).map(i => (i, null: String)).toDF("doc_id", "text")
+    Seq(empty, nulls).foreach { d =>
+      val j = operators.Dedup.jaccardNeighbors(d)
+      val c = operators.Dedup.containmentNeighbors(d)
+      assert(j.columns.toSeq == Seq("doc_id", "neighbor_id", "jaccard"))
+      assert(c.columns.toSeq ==
+        Seq("doc_id", "container_id", "containment", "is_contained"))
+      assert(j.collect().isEmpty && c.collect().isEmpty)
+    }
+    // one text five times: every doc's best is the smallest other id at
+    // 1.0; with the cap below the df (5), no shingle may join
+    val same = (1L to 5L).map(i => (i, "the same words in every document"))
+      .toDF("doc_id", "text")
+    val want = (1L to 5L).map(i => i -> (if (i == 1L) 2L else 1L)).toMap
+    assert(jaccardMap(operators.Dedup.jaccardNeighbors(same)) ==
+      want.map { case (i, o) => i -> ((o, 1.0)) })
+    assert(containmentMap(operators.Dedup.containmentNeighbors(same)) ==
+      want.map { case (i, o) => i -> ((o, 1.0, true)) })
+    assert(operators.Dedup.jaccardNeighbors(same, maxShingleDf = 4)
+      .collect().isEmpty)
+    assert(operators.Dedup.containmentNeighbors(same, maxShingleDf = 4)
+      .collect().isEmpty)
+  }
+
+  test("jaccard + containment run only the shingle-set barrier's jobs " +
+    "before they return") {
+    val docs = sources.Tables(spark, sfDir).documents
+    docs.schema
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          job: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsWhile(build: => DataFrame): Int = {
+      org.apache.spark.sql.graft.bridge.drainListenerBus(spark)
+      jobs.set(0)
+      build
+      org.apache.spark.sql.graft.bridge.drainListenerBus(spark)
+      jobs.get
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val barrier = jobsWhile(
+        operators.Barrier(operators.Dedup.shingleSets(docs, 3)))
+      assert(barrier > 0, "the shingle-set barrier ran no job")
+      val jac = jobsWhile(operators.Dedup.jaccardNeighbors(docs))
+      val cont = jobsWhile(operators.Dedup.containmentNeighbors(docs))
+      assert(jac == barrier && cont == barrier,
+        s"construction jobs: jaccard $jac, containment $cont, " +
+          s"the barrier alone $barrier")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("semantic dedup on an empty embeddings table: zero rows, usual " +
+    "schema; no seed vec_id is a named error") {
+    val vecs = Seq(
+      (0L, Array(1f, 0f, 0f, 0f)),
+      (1L, Array(0f, 1f, 0f, 0f)),
+      (2L, Array(0.999f, 0.04f, 0f, 0f))).toDF("vec_id", "embedding")
+    val want = operators.Dedup.semanticNeighbors(vecs, nCentroids = 2)
+    Seq(0, 2).foreach { k =>
+      val got = operators.Dedup.semanticNeighbors(vecs.limit(0),
+        nCentroids = k)
+      assert(got.schema == want.schema, s"nCentroids=$k")
+      assert(got.collect().isEmpty, s"nCentroids=$k")
+    }
+    val e = intercept[IllegalArgumentException] {
+      operators.Dedup.semanticNeighbors(
+        vecs.withColumn("vec_id", $"vec_id" + 100L), nCentroids = 2)
+    }
+    assert(e.getMessage.contains("vec_id < 2"), e.getMessage)
   }
 }

@@ -15,6 +15,7 @@ class EntrypointSpec extends SparkSuite {
     assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
     assert(conf.get("spark.sql.legacy.bucketedTableScan.outputOrdering") ==
       "true")
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") == "5000")
     assert(conf.get("spark.ui.enabled") == "false")
     assert(spark.sparkContext.uiWebUrl.isEmpty)
   }
