@@ -74,6 +74,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         builder))
     }
     e.injectPlannerStrategy(_ => graft.plans.VectorTopKStrategy)
+    e.injectPlannerStrategy(_ => graft.plans.ResidentTopKStrategy)
     e.injectOptimizerRule(_ => graft.plans.PushThresholdIntoVectorTopK)
   }
 }

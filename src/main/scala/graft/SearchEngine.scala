@@ -2,13 +2,18 @@ package graft
 
 import scala.util.control.NonFatal
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions._
 import graft.functions.TextFunctions.preprocess
+import graft.plans.{ResidentTopK, ResidentTopKStrategy}
 import graft.sources.Tables
 
 /** API-level facade: the reference's HTTP surface re-expressed as batch
@@ -22,8 +27,9 @@ import graft.sources.Tables
   * | GET /health                   | [[healthCheck]] |
   *
   * Embeddings use the deterministic hashing-trick encoder standing in for
-  * the reference's sentence-transformer model; the search path (literal
-  * query × resident-index scan × bounded sort) is the part that must scale.
+  * the reference's sentence-transformer model; the search path (query
+  * vector × resident-index scan × bounded heap) is the part that must
+  * scale.
   *
   * '''Resident index.''' [[search]], [[qaContext]] and [[healthCheck]]
   * serve from one materialized `(vec_id, embedding, text)` relation,
@@ -45,12 +51,20 @@ import graft.sources.Tables
   *  - built under the engine's lock, so concurrent first requests build
   *    it once.
   *
-  * '''Request plan: one job.''' A warm [[search]] or [[qaContext]] is one
-  * Spark job in total. The query vector is folded on the driver into a
-  * literal, and the resident rows go through one bounded sort,
-  * `orderBy(sim desc, vec_id).limit(n)` (`TakeOrderedAndProject`): no
-  * cross join, no aggregate shuffle, no join back to the texts and no
-  * range sort of the result.
+  * '''Request plan: one leaf node, one job.''' A warm [[search]] or
+  * [[qaContext]] is one logical node, [[graft.plans.ResidentTopK]], whose
+  * output is the request's final columns; [[ResidentTopKStrategy]]
+  * (installed here at runtime, or by [[GraftExtensions]]) plans it into
+  * one exec that ranks the resident blocks and merges the partition heads
+  * on the driver in exactly one Spark job, submitted without closure
+  * cleaning. No projection, sort or generated code sits above it. The query vector comes from one bound
+  * `hash_embed(preprocess(text), dim)` expression per engine, analyzed
+  * once and evaluated per request without a Dataset.
+  *
+  * '''Thread safety.''' Requests may run concurrently on one engine. The
+  * index build runs under the engine's lock; the bound query expression
+  * holds Spark's `RegExpReplace`, which keeps mutable state for
+  * interpreted evaluation, so it is only evaluated under its own lock.
   */
 final class SearchEngine(spark: SparkSession, dir: String, dim: Int = 64) {
   private val t = Tables(spark, dir)
@@ -66,10 +80,10 @@ final class SearchEngine(spark: SparkSession, dir: String, dim: Int = 64) {
       preprocess(col("text")).as("clean_text"),
       embedding)
 
-  /** The materialized index, the corpus fingerprint it was built from, its
-    * persisted blocks and its row count. */
-  private final case class Resident(fingerprint: String, frame: DataFrame,
-                                    blocks: RDD[_], size: Long)
+  /** The persisted `(vec_id, embedding, text)` blocks, the corpus
+    * fingerprint they were built from and their row count. */
+  private final case class Resident(fingerprint: String,
+                                    blocks: RDD[InternalRow], size: Long)
   private var resident: Option[Resident] = None
 
   /** The resident index, rebuilt first when the corpus fingerprint moved
@@ -81,53 +95,55 @@ final class SearchEngine(spark: SparkSession, dir: String, dim: Int = 64) {
       .getOrElse {
         resident.foreach(_.blocks.unpersist(blocking = false))
         resident = None
-        val (frame, blocks) = bridge.persisted(
+        val blocks = bridge.persisted(
           t.documents.select(col("doc_id").as("vec_id"), embedding, col("text")),
           StorageLevel.MEMORY_AND_DISK)
         val size =
           try blocks.count()
           catch { case e: Throwable => blocks.unpersist(blocking = false); throw e }
-        val r = Resident(fp, frame, blocks, size)
+        val r = Resident(fp, blocks, size)
         resident = Some(r)
         r
       }
   }
 
-  /** The query's embedding as a literal vector: `hash_embed(preprocess(
-    * lit(text)), dim)` is analyzed and evaluated on the driver, so no job
-    * runs and the corpus scan compares against a constant. */
-  private def queryVector(queryText: String): Column = {
-    val e = bridge.planOf(spark.range(1).select(
-      hash_embed(preprocess(lit(queryText)), dim))).expressions.head
-    bridge.column(Literal(e.eval(), e.dataType))
+  /** `hash_embed(preprocess(text), dim)`, analyzed once against a
+    * one-column string input and bound to its ordinal. `RegExpReplace`
+    * keeps mutable state for interpreted evaluation, so the expression is
+    * only ever evaluated under its own lock. */
+  private lazy val queryEmbedding: Expression = {
+    val plan = bridge.planOf(spark.createDataFrame(
+        java.util.List.of[Row](), StructType(Seq(StructField("text", StringType))))
+      .select(hash_embed(preprocess(col("text")), dim)))
+    BindReferences.bindReference(plan.expressions.head, plan.children.head.output)
   }
 
-  /** The `n` resident rows most similar to the query, best first, with
-    * `sim`: one bounded sort (`TakeOrderedAndProject`) by sim desc, then
-    * vec_id asc, after dropping null ids and null or NaN sims — the order
-    * and the skips of `top_k_by_score`, without its shuffle. */
-  private def ranked(queryText: String, n: Int): DataFrame = {
-    val sim = cosine_similarity(queryVector(queryText), col("embedding"))
-    index().frame
-      .select(col("vec_id"), col("text"), sim.as("sim"))
-      .filter(col("vec_id").isNotNull && col("sim").isNotNull && !isnan(col("sim")))
-      .orderBy(col("sim").desc, col("vec_id"))
-      .limit(n)
+  /** The query's embedding, evaluated on the driver: no Dataset, no
+    * analysis and no job per request. */
+  private[graft] def queryVector(queryText: String): Array[Float] = {
+    val e = queryEmbedding
+    e.synchronized {
+      e.eval(InternalRow(UTF8String.fromString(queryText)))
+        .asInstanceOf[ArrayData].toFloatArray()
+    }
   }
 
-  private def floored(c: Column): Column = floor(c * 1e6) / 1e6
+  /** One request as one leaf node over the resident blocks: the `n` rows
+    * most similar to the query, in `shape`'s final columns. */
+  private def request(queryText: String, n: Int,
+                      shape: ResidentTopK.Shape): DataFrame = {
+    bridge.installStrategy(spark, ResidentTopKStrategy)
+    bridge.ofRows(spark,
+      ResidentTopK(index().blocks, queryVector(queryText), n, shape))
+  }
 
   /** Reference: controllers/search_controller.py — k capped at 20, query
-    * length capped at 500 chars, score = 1 - cosine distance. The hits
-    * come out of the sort in one partition, in rank order, so
-    * `monotonically_increasing_id` numbers them 0, 1, … without a window. */
+    * length capped at 500 chars, score = 1 - cosine distance. */
   def search(queryText: String, k: Int = 3): DataFrame = {
     require(queryText.trim.nonEmpty, "Query parameter 'q' is required")
     require(queryText.length <= 500, "Query text is too long (max 500 characters)")
-    ranked(queryText, math.min(k, 20))
-      .select((monotonically_increasing_id() + 1).as("rank"),
-        col("vec_id").as("doc_id"), floored(col("sim")).as("score"),
-        col("text").as("description"))
+    require(k >= 0, s"k must be >= 0, got $k")
+    request(queryText, math.min(k, 20), ResidentTopK.Ranked)
   }
 
   /** Reference: qa_service.get_product_context_from_query — best match,
@@ -135,9 +151,7 @@ final class SearchEngine(spark: SparkSession, dir: String, dim: Int = 64) {
     * `Search.thresholdRetrieval` for one query; no row for an empty
     * corpus. */
   def qaContext(queryText: String): DataFrame =
-    ranked(queryText, 1).select(lit(0L).as("query_id"),
-      col("vec_id").as("best_id"), floored(col("sim")).as("best_score"),
-      (lit(1.0) - col("sim") < 0.4).as("accepted"))
+    request(queryText, 1, ResidentTopK.Gated)
 
   /** Reference: controllers/health_controller.py — data reachable and
     * index non-empty; `false`, never an exception, when the corpus is

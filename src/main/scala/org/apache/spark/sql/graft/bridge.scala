@@ -23,22 +23,39 @@ object bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** `df`'s rows as an RDD persisted at `level`, and a DataFrame over that
-    * RDD: `localCheckpoint` without the lineage cut, so a lost block is
-    * recomputed from `df`'s plan instead of failing the query. Lazy — the
-    * caller's first action on the RDD fills the blocks; the caller owns
-    * the RDD (unpersists it, checks `getPersistentRDDs` for it). The frame
-    * carries `df`'s statistics and output partitioning, as a checkpoint's
-    * does. */
+  /** `df`'s rows as an RDD persisted at `level`: `localCheckpoint`
+    * without the lineage cut, so a lost block is recomputed from `df`'s
+    * plan instead of failing the query. Lazy — the caller's first action
+    * fills the blocks; the caller owns the RDD (unpersists it, checks
+    * `getPersistentRDDs` for it). */
   def persisted(df: org.apache.spark.sql.DataFrame,
                 level: org.apache.spark.storage.StorageLevel)
-      : (org.apache.spark.sql.DataFrame,
-         org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-    val rows = ds.queryExecution.toRdd.map(_.copy()).persist(level)
-    (org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
-      org.apache.spark.sql.execution.LogicalRDD.fromDataset(rows, ds,
-        isStreaming = false)), rows)
+      : org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+      .queryExecution.toRdd.map(_.copy()).persist(level)
+
+  /** `rdd.mapPartitions(f)` without closure cleaning (`private[spark]`):
+    * for per-request RDDs whose function captures only plain values. */
+  def mapPartitionsInternal[T, U: scala.reflect.ClassTag](
+      rdd: org.apache.spark.rdd.RDD[T])(
+      f: Iterator[T] => Iterator[U]): org.apache.spark.rdd.RDD[U] =
+    rdd.mapPartitionsInternal(f)
+
+  /** `f` over every partition of `rdd` in one job, like
+    * `SparkContext.runJob(rdd, f)` but without closure cleaning, which
+    * reads the class file of `f`'s declaring class and of `SparkContext`
+    * (for its own wrapper lambda) with ASM on every call. For per-request
+    * jobs whose function captures only plain values; the job keeps the
+    * caller's local properties (job tags, SQL execution id). */
+  def runJob[T, U: scala.reflect.ClassTag](
+      rdd: org.apache.spark.rdd.RDD[T], f: Iterator[T] => U): Array[U] = {
+    val sc = rdd.sparkContext
+    val results = new Array[U](rdd.partitions.length)
+    sc.dagScheduler.runJob(rdd,
+      (_: org.apache.spark.TaskContext, it: Iterator[T]) => f(it),
+      rdd.partitions.indices, sc.getCallSite(),
+      (i: Int, r: U) => results(i) = r, sc.getLocalProperties)
+    results
   }
 
   /** Analyzed logical plan of a DataFrame. */
@@ -56,6 +73,12 @@ object bridge {
       s.experimental.extraStrategies =
         s.experimental.extraStrategies :+ strategy
   }
+
+  /** The planner strategies a session built with `ext` adds. */
+  def plannerStrategies(ext: org.apache.spark.sql.SparkSessionExtensions,
+                        spark: org.apache.spark.sql.SparkSession)
+      : Seq[org.apache.spark.sql.execution.SparkStrategy] =
+    ext.buildPlannerStrategies(spark)
 
   /** Remove a previously installed strategy / optimizer rule. */
   def uninstallStrategy(spark: org.apache.spark.sql.SparkSession,

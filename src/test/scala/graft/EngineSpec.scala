@@ -166,6 +166,72 @@ class EngineSpec extends SparkSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  /** The simple `explain()` of `df`. */
+  private def explained(df: DataFrame): String = {
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(out)) { df.explain() }
+    out.toString("UTF-8")
+  }
+
+  test("a warm search and qaContext each execute as one graft exec") {
+    val e = new SearchEngine(spark, sfDir)
+    e.search(Probe).collect()
+    Seq(e.search(Probe, 5) -> 5, e.qaContext(Probe) -> 1).foreach { case (f, n) =>
+      val plan = f.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+        .queryExecution.executedPlan
+      val nodes = plan.collect { case p => p }
+      assert(nodes.map(_.getClass) == Seq(classOf[graft.plans.ResidentTopKExec]),
+        s"executed plan is not one graft exec:\n$plan")
+      Seq("Sort", "TakeOrderedAndProject", "WholeStageCodegen", "Exchange")
+        .foreach(op => assert(!plan.toString.contains(op), s"$op in\n$plan"))
+      val text = explained(f)
+      assert(text.contains("ResidentTopK") && text.contains(s"n=$n") &&
+        text.contains("dim=64"), text)
+      assert(!"""\d\.\d+(E-?\d+)?,\s*-?\d\.\d""".r.findFirstIn(text).isDefined,
+        s"explain prints the query vector:\n$text")
+    }
+  }
+
+  test("concurrent search and qaContext requests answer as one thread does") {
+    val e = new SearchEngine(spark, sfDir)
+    val texts = Seq(Probe, "table scan", "window agg over a stream",
+      "vector filter scan with a small key", "customer order line value",
+      "zebra quantum marmalade harpsichord", "!!!", "spark batch stream")
+    def answer(i: Int, text: String): Seq[Row] =
+      if (i % 2 == 0) e.search(text, 1 + i % 7).collect().toSeq
+      else e.qaContext(text).collect().toSeq
+    val cases = (0 until 4).map(t => (0 until 25).map(j => (t + j, texts((t * 3 + j) % texts.size))))
+    val want = cases.flatten.distinct.map(c => c -> answer(c._1, c._2)).toMap
+    val vectors = texts.map(t => t -> e.queryVector(t).toSeq).toMap
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val runs = cases.map { mine =>
+        pool.submit(new java.util.concurrent.Callable[Seq[String]] {
+          def call(): Seq[String] = {
+            val wrong = mine.filter(c => answer(c._1, c._2) != want(c)).map(_.toString)
+            // the bound query expression alone, many times over, so that
+            // overlapping evaluations are certain to happen
+            wrong ++ (0 until 4000).map(i => texts(i % texts.size))
+              .filter(t => e.queryVector(t).toSeq != vectors(t)).distinct
+          }
+        })
+      }
+      val wrong = runs.flatMap(_.get(5, java.util.concurrent.TimeUnit.MINUTES))
+      assert(wrong.isEmpty, s"answers differ from the single-threaded ones: $wrong")
+    } finally pool.shutdownNow()
+  }
+
+  test("a session built with GraftExtensions plans a request's leaf node") {
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    val strategies = bridge.plannerStrategies(ext, spark)
+    assert(strategies.contains(graft.plans.ResidentTopKStrategy))
+    val node = graft.plans.ResidentTopK(spark.sparkContext.emptyRDD,
+      Array(1f, 0f), 3, graft.plans.ResidentTopK.Ranked)
+    assert(strategies.flatMap(_(node)).map(_.getClass) ==
+      Seq(classOf[graft.plans.ResidentTopKExec]))
+  }
+
   test("queries and oracles are in 1:1 correspondence") {
     val orphanOracles = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphanOracles.isEmpty, s"oracle without query: $orphanOracles")
