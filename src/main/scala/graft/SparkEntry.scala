@@ -61,141 +61,88 @@ object SparkEntry {
         graft.functions.hash_embed(
           graft.functions.TextFunctions.preprocess(col("text")), 64).as("qv"))
 
-  /** Process-private base dir + per-corpus memo for the build-once index
-    * queries: reused within a JVM, never shared across processes (no
-    * /tmp path races), and keyed on (dir, corpus file fingerprint) so a
-    * corpus REGENERATED at the same path within a long-lived session gets
-    * a fresh build instead of stale search results. */
-  private lazy val ivfTmpBase: String =
-    java.nio.file.Files.createTempDirectory("graft-ivf").toString
-  private val builtPersisted =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private val builtBucketed =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** computeIfAbsent-style critical section for the build-once layouts:
-    * check-validity → build → memo-insert runs under one lock, so two
-    * query threads arriving together can't both run the (side-effecting,
-    * overwrite-mode) build against the same path. Builds are rare
-    * (once per JVM+corpus) and the bench runs queries sequentially, so
-    * one global lock costs nothing; `valid` re-checks disk/catalog state
-    * because a memo entry can outlive a dropped table or cleaned tmp. */
-  private val memoLock = new Object
-  private def memoized(map: scala.collection.concurrent.TrieMap[String, String],
-                       memoKey: String)(valid: String => Boolean)
-                      (build: => String): String =
-    memoLock.synchronized {
-      map.get(memoKey).filter(valid).getOrElse {
-        val v = build
-        map(memoKey) = v
-        v
-      }
-    }
-
-  /** The curation funnel's verdict table, materialized ONCE per
-    * (JVM, corpus) and served to BOTH `q_curate` (the rows) and
-    * `q_curate_report` (one aggregate over its 1-bit columns) — the
-    * report must never re-run the corpus-sized funnel it summarizes.
-    * Same build-once contract and memo mechanics as the index layouts
-    * (parquet under the process-private tmp base, fingerprint-keyed):
-    * a disk memo survives the bench's per-query block sweep where a
-    * cached DataFrame would not, and it IS the production shape — a
-    * pipeline lands the verdict table next to the corpus and every
-    * consumer reads it. */
+  /** The curation funnel's verdict table, an [[Artifacts]] build served
+    * to BOTH `q_curate` (the rows) and `q_curate_report` (one aggregate
+    * over its 1-bit columns) — the report must never re-run the
+    * corpus-sized funnel it summarizes. A disk artifact survives the
+    * bench's per-query block sweep where a cached DataFrame would not,
+    * and it IS the production shape — a pipeline lands the verdict table
+    * next to the corpus and every consumer reads it. */
   private def curatedVerdicts(s: SparkSession, dir: String): DataFrame = {
-    val memoKey = s"curate:$dir@${corpusFingerprint(s, dir, "documents.parquet")}"
-    val path = memoized(builtPersisted, memoKey)(new java.io.File(_).exists) {
-      val p = s"$ivfTmpBase/curate-${Tables.digest(memoKey)}"
+    val a = Artifacts(s, "curate", dir, "documents.parquet") { a =>
       Pipeline.curate(Tables(s, dir, spread = true).documents)
-        .write.mode("overwrite").parquet(p)
-      p
+        .write.mode("overwrite").parquet(a.path)
     }
-    s.read.parquet(path).orderBy(col("doc_id"))
+    s.read.parquet(a.path).orderBy(col("doc_id"))
   }
 
-  /** The converged near-dup cluster assignment `(doc_id, cluster_id,
-    * cluster_size)`, materialized ONCE per (JVM, corpus) — the
-    * [[curatedVerdicts]] rule applied to the cluster family:
-    * [[Dedup.clusters]] is the shared upstream of `dedup_clusters`,
-    * `dedup_hist`, `dedup_canonical` and `dedup_canonical_quality`, and
-    * a release pipeline lands the converged assignment next to the
-    * corpus — every apply/report step reads it rather than re-running
-    * LSH + label propagation per consumer (the pre-memo shape paid the
-    * full funnel FOUR times per suite). All columns are longs, so the
-    * parquet round-trip is exact and the derived rows stay bit-identical
-    * to the unmemoized compositions (oracle-checked per key). */
-  /** The capped LSH candidate PAIR table (id1 < id2, distinct),
-    * materialized ONCE per (JVM, corpus) — one level UPSTREAM of
-    * [[clusteredTable]]: candidate generation (minhash → banding →
-    * capped intra-bucket pairs) is the shared stage of the whole
-    * pair-consumer family (`dedup_minhash` summary, the cluster
-    * iteration, `q_graph_rank`), and a pipeline generates candidates
-    * once per release. Longs only → exact round-trip; every consumer
-    * stays individually oracle-checked. */
   /** The banded signature table `(doc_id, band, h)` at the production
-    * parameters, materialized ONCE per (JVM, corpus) — the build
-    * artifact [[candidatePairsTable]] derives from and the cap audit
-    * censuses. Longs/ints only → exact round-trip. */
+    * parameters, built once — the artifact [[candidatePairsTable]]
+    * derives from and the cap audit censuses. Longs/ints only → exact
+    * round-trip. */
   private def bandedSigTable(s: SparkSession, dir: String): DataFrame = {
-    val memoKey =
-      s"bandedsig:$dir@${corpusFingerprint(s, dir, "documents.parquet")}"
-    val path = memoized(builtPersisted, memoKey)(new java.io.File(_).exists) {
-      val p = s"$ivfTmpBase/bandedsig-${Tables.digest(memoKey)}"
+    val a = Artifacts(s, "bandedsig", dir, "documents.parquet") { a =>
       Dedup.bandedSignatures(Tables(s, dir, spread = true).documents)
-        .write.mode("overwrite").parquet(p)
-      p
+        .write.mode("overwrite").parquet(a.path)
     }
-    s.read.parquet(path)
+    s.read.parquet(a.path)
   }
 
+  /** The capped LSH candidate PAIR table (id1 < id2, distinct), built
+    * once — one level UPSTREAM of [[clusteredTable]]: candidate
+    * generation (minhash → banding → capped intra-bucket pairs) is the
+    * shared stage of the whole pair-consumer family (`dedup_minhash`
+    * summary, the cluster iteration, `q_graph_rank`), and a pipeline
+    * generates candidates once per release. Longs only → exact
+    * round-trip; every consumer stays individually oracle-checked. */
   private def candidatePairsTable(s: SparkSession, dir: String): DataFrame = {
-    val memoKey =
-      s"candpairs:$dir@${corpusFingerprint(s, dir, "documents.parquet")}"
-    val path = memoized(builtPersisted, memoKey)(new java.io.File(_).exists) {
-      val p = s"$ivfTmpBase/candpairs-${Tables.digest(memoKey)}"
+    val a = Artifacts(s, "candpairs", dir, "documents.parquet") { a =>
       Dedup.candidatePairsFrom(bandedSigTable(s, dir))
-        .write.mode("overwrite").parquet(p)
-      p
+        .write.mode("overwrite").parquet(a.path)
     }
-    s.read.parquet(path)
+    s.read.parquet(a.path)
   }
 
   /** The bigram-LM score table `(doc_id, n_bigrams, avg_nll, keep)`,
-    * materialized ONCE per (JVM, corpus) — the [[curatedVerdicts]] rule
-    * applied to the LM pair: `text_lm_score` (the per-doc scores) and
-    * `q_lm_buckets` (the CDF-cut report over them) are two reads of one
-    * scoring pass. `avg_nll` is 1e-4-floored before the write, so the
-    * double round-trips exactly; the other columns are integral. */
+    * built once — the [[curatedVerdicts]] rule applied to the LM pair:
+    * `text_lm_score` (the per-doc scores) and `q_lm_buckets` (the CDF-cut
+    * report over them) are two reads of one scoring pass. `avg_nll` is
+    * 1e-4-floored before the write, so the double round-trips exactly;
+    * the other columns are integral. */
   private def lmScoredTable(s: SparkSession, dir: String): DataFrame = {
-    val memoKey = s"lmscore:$dir@${corpusFingerprint(s, dir, "documents.parquet")}"
-    val path = memoized(builtPersisted, memoKey)(new java.io.File(_).exists) {
-      val p = s"$ivfTmpBase/lmscore-${Tables.digest(memoKey)}"
+    val a = Artifacts(s, "lmscore", dir, "documents.parquet") { a =>
       TextAnalysis.lmScores(Tables(s, dir, spread = true).documents)
-        .write.mode("overwrite").parquet(p)
-      p
+        .write.mode("overwrite").parquet(a.path)
     }
-    s.read.parquet(path)
+    s.read.parquet(a.path)
   }
 
+  /** The converged near-dup cluster assignment `(doc_id, cluster_id,
+    * cluster_size)`, built once — the [[curatedVerdicts]] rule applied to
+    * the cluster family: [[Dedup.clusters]] is the shared upstream of
+    * `dedup_clusters`, `dedup_hist`, `dedup_canonical` and
+    * `dedup_canonical_quality`, and a release pipeline lands the
+    * converged assignment next to the corpus — every apply/report step
+    * reads it rather than re-running LSH + label propagation per
+    * consumer (the pre-memo shape paid the full funnel FOUR times per
+    * suite). All columns are longs, so the parquet round-trip is exact
+    * and the derived rows stay bit-identical to the unmemoized
+    * compositions (oracle-checked per key). */
   private def clusteredTable(s: SparkSession, dir: String): DataFrame = {
-    val memoKey =
-      s"clusters:$dir@${corpusFingerprint(s, dir, "documents.parquet")}"
-    val path = memoized(builtPersisted, memoKey)(new java.io.File(_).exists) {
-      val p = s"$ivfTmpBase/clusters-${Tables.digest(memoKey)}"
+    val a = Artifacts(s, "clusters", dir, "documents.parquet") { a =>
       Dedup.clustersFromPairs(Tables(s, dir, spread = true).documents,
           candidatePairsTable(s, dir))
-        .write.mode("overwrite").parquet(p)
-      p
+        .write.mode("overwrite").parquet(a.path)
     }
-    s.read.parquet(path)
+    s.read.parquet(a.path)
   }
 
   /** The release-keyed dataset-card table (one row per snapshot release),
-    * materialized ONCE per (JVM, corpus) — `q_card_diff`'s build-once
-    * artifact. Each release computes its card once anyway
-    * ([[Pipeline.cardDiff]]'s stated contract: "ZERO corpus passes beyond
-    * the cards themselves"), so the diff stitches two persisted 1-row
-    * slices instead of replaying both releases' full card chains inline.
+    * built once — `q_card_diff`'s artifact. Each release computes its
+    * card once anyway ([[Pipeline.cardDiff]]'s stated contract: "ZERO
+    * corpus passes beyond the cards themselves"), so the diff stitches two
+    * persisted 1-row slices instead of replaying both releases' full card
+    * chains inline.
     * Both releases' cards land in ONE union write — a single job, so the
     * two independent assemble DAGs run in parallel exactly as the inline
     * form did (building them as two sequential memo entries measured
@@ -203,10 +150,7 @@ object SparkEntry {
     * every card column is a long or an already-1e-4-floored double. */
   private def releaseCard(s: SparkSession, dir: String,
                           release: String): DataFrame = {
-    val memoKey =
-      s"cards:$dir@${corpusFingerprint(s, dir, "documents.parquet")}"
-    val path = memoized(builtPersisted, memoKey)(new java.io.File(_).exists) {
-      val p = s"$ivfTmpBase/cards-${Tables.digest(memoKey)}"
+    val a = Artifacts(s, "cards", dir, "documents.parquet") { a =>
       val (base, cur) = snapshotPair(Tables(s, dir, spread = true))
       // the two releases' card constructions are independent and each
       // runs two eager barrier jobs (clean, toks) plus its own Catalyst
@@ -219,109 +163,80 @@ object SparkEntry {
           .select(lit("base").as("release"), col("*")),
         () => Pipeline.datasetCardFrom(cur)
           .select(lit("cur").as("release"), col("*"))))
-      baseCard.unionByName(curCard).write.mode("overwrite").parquet(p)
-      p
+      baseCard.unionByName(curCard).write.mode("overwrite").parquet(a.path)
     }
-    s.read.parquet(path).filter(col("release") === release).drop("release")
+    s.read.parquet(a.path).filter(col("release") === release).drop("release")
   }
 
   /** The one-vs-rest scored table `(vec_id, class, s_grid, pos)` behind
-    * the ML-eval trio (`q_auc` / `q_calibration` / `q_pr_curve`),
-    * materialized ONCE per (JVM, corpus) — the `curatedVerdicts` rule:
-    * three reports over one scoring pass must never re-run the pass.
-    * Every column is integral, so the parquet round-trip is exact and
-    * the reports stay bit-identical to the unmemoized composition. */
+    * the ML-eval trio (`q_auc` / `q_calibration` / `q_pr_curve`), built
+    * once — the `curatedVerdicts` rule: three reports over one scoring
+    * pass must never re-run the pass. Every column is integral, so the
+    * parquet round-trip is exact and the reports stay bit-identical to
+    * the unmemoized composition. */
   private def ovrScored(s: SparkSession, dir: String): DataFrame = {
-    val memoKey = s"ovr:$dir@${corpusFingerprint(s, dir, "embeddings.parquet")}"
-    val path = memoized(builtPersisted, memoKey)(new java.io.File(_).exists) {
-      val p = s"$ivfTmpBase/ovr-${Tables.digest(memoKey)}"
+    val a = Artifacts(s, "ovr", dir, "embeddings.parquet") { a =>
       MlEval.scoredOneVsRest(Tables(s, dir, spread = true).embeddings)
-        .write.mode("overwrite").parquet(p)
-      p
+        .write.mode("overwrite").parquet(a.path)
     }
-    s.read.parquet(path)
+    s.read.parquet(a.path)
   }
 
   /** The held-out classification table behind the classify trio
-    * (`q_classify` / `q_classify_eval` / `q_classify_f1`) — same memo
-    * mechanics as [[ovrScored]]; `dist` is floored to the 1e-6 grid
-    * BEFORE the write, so the double round-trips exactly. */
+    * (`q_classify` / `q_classify_eval` / `q_classify_f1`); `dist` is
+    * floored to the 1e-6 grid BEFORE the write, so the double
+    * round-trips exactly. */
   private def classifiedTable(s: SparkSession, dir: String): DataFrame = {
-    val memoKey = s"cls:$dir@${corpusFingerprint(s, dir, "embeddings.parquet")}"
-    val path = memoized(builtPersisted, memoKey)(new java.io.File(_).exists) {
-      val p = s"$ivfTmpBase/cls-${Tables.digest(memoKey)}"
+    val a = Artifacts(s, "cls", dir, "embeddings.parquet") { a =>
       Classifier.classify(Tables(s, dir, spread = true).embeddings)
-        .write.mode("overwrite").parquet(p)
-      p
+        .write.mode("overwrite").parquet(a.path)
     }
-    s.read.parquet(path).orderBy(col("vec_id"))
+    s.read.parquet(a.path).orderBy(col("vec_id"))
   }
 
-  /** The persisted df-capped BUCKETED shingle store — built ONCE per
-    * (JVM, corpus) and shared by both shingle-join serve rows
-    * (`dedup_jaccard_bucketed`, `dedup_containment_bucketed`): the
-    * self-join reads co-located, within-bucket-sorted files, so the
-    * recompute path's corpus-sized exchange AND sort disappear. */
-  private def frozenShingles(s: SparkSession, dir: String): String = {
-    val memoKey =
-      s"shingle:$dir@${corpusFingerprint(s, dir, "documents.parquet")}"
-    val tag = Tables.digest(memoKey)
-    memoized(builtBucketed, memoKey)(s.catalog.tableExists) {
-      val t0 = s"graft_shingle_store_$tag"
-      Dedup.persistShingles(Tables(s, dir, spread = true).documents, t0,
-        path = s"$ivfTmpBase/shingle-$tag")
-      t0
-    }
-  }
+  /** The persisted df-capped BUCKETED shingle store shared by both
+    * shingle-join serve rows (`dedup_jaccard_bucketed`,
+    * `dedup_containment_bucketed`): the self-join reads co-located,
+    * within-bucket-sorted files, so the recompute path's corpus-sized
+    * exchange AND sort disappear. */
+  private def frozenShingles(s: SparkSession, dir: String): String =
+    Artifacts(s, "shingle", dir, "documents.parquet",
+        tag => Seq(s"graft_shingle_store_$tag")) { a =>
+      Dedup.persistShingles(Tables(s, dir, spread = true).documents,
+        a.tables.head, path = a.path)
+    }.tables.head
 
   /** The frozen BM25 index (postings term-clustered + one-row stats),
-    * persisted ONCE per (JVM, corpus) and loaded on every use — the
-    * lexical build-once/search-many seam shared by `q_bm25_persisted`
-    * and `q_hybrid_rrf`'s lexical side, so the fused query never
-    * re-tokenizes the corpus to rebuild an index another query already
-    * landed on disk. */
+    * loaded on every use — the lexical build-once/search-many seam
+    * shared by `q_bm25_persisted` and `q_hybrid_rrf`'s lexical side, so
+    * the fused query never re-tokenizes the corpus to rebuild an index
+    * another query already landed on disk. */
   private def frozenBm25(s: SparkSession, dir: String): Bm25.Bm25Index = {
-    val memoKey = s"bm25:$dir@${corpusFingerprint(s, dir, "documents.parquet")}"
-    val p = memoized(builtPersisted, memoKey)(new java.io.File(_).exists) {
-      val path = s"$ivfTmpBase/bm25-${Tables.digest(memoKey)}"
-      Bm25.persist(Tables(s, dir, spread = true).documents, path)
-      path
+    val a = Artifacts(s, "bm25", dir, "documents.parquet") { a =>
+      Bm25.persist(Tables(s, dir, spread = true).documents, a.path)
     }
-    Bm25.load(s, p)
+    Bm25.load(s, a.path)
   }
 
   /** The retrieval-eval CORE (labeled system rankings, ideal positions,
-    * query grid — all bounded by systems × queries × k), materialized
-    * ONCE per (JVM, corpus) and served to ALL THREE eval reports
-    * (`q_retrieval_eval`, `_summary`, `_cutoffs`) — the reports must
-    * never re-run the corpus-sized ranking+labeling they summarize
-    * (the `curatedVerdicts` rule). Same memo mechanics: parquet under
-    * the process-private tmp base, fingerprint-keyed; it IS the
-    * production shape — an eval run lands the labeled-ranking core
-    * next to the corpus and every report reads it. */
+    * query grid — all bounded by systems × queries × k), served to ALL
+    * THREE eval reports (`q_retrieval_eval`, `_summary`, `_cutoffs`) —
+    * the reports must never re-run the corpus-sized ranking+labeling
+    * they summarize (the `curatedVerdicts` rule). It IS the production
+    * shape — an eval run lands the labeled-ranking core next to the
+    * corpus and every report reads it. */
   private def frozenRetrievalCore(s: SparkSession,
                                   dir: String): RetrievalEval.Core = {
-    val memoKey = s"reteval:$dir@${corpusFingerprint(s, dir, "documents.parquet")}"
-    val p = memoized(builtPersisted, memoKey)(new java.io.File(_).exists) {
-      val path = s"$ivfTmpBase/reteval-${Tables.digest(memoKey)}"
+    val p = Artifacts(s, "reteval", dir, "documents.parquet") { a =>
       val core = RetrievalEval.buildCore(Tables(s, dir, spread = true).documents,
         frozenBm25(s, dir))
-      core.ret.write.mode("overwrite").parquet(s"$path/ret")
-      core.ideal.write.mode("overwrite").parquet(s"$path/ideal")
-      core.queryIds.write.mode("overwrite").parquet(s"$path/qids")
-      path
-    }
+      core.ret.write.mode("overwrite").parquet(s"${a.path}/ret")
+      core.ideal.write.mode("overwrite").parquet(s"${a.path}/ideal")
+      core.queryIds.write.mode("overwrite").parquet(s"${a.path}/qids")
+    }.path
     RetrievalEval.Core(s.read.parquet(s"$p/ret"),
       s.read.parquet(s"$p/ideal"), s.read.parquet(s"$p/qids"))
   }
-
-  /** [[Tables.fingerprint]] of the corpus files backing one of `dir`'s
-    * tables: the memo key ingredient that invalidates a per-JVM index
-    * build when the corpus changes underneath the same path, on any
-    * Hadoop FileSystem. */
-  private def corpusFingerprint(s: SparkSession, dir: String,
-                                table: String = "embeddings.parquet"): String =
-    Tables.fingerprint(s, s"$dir/$table")
 
   /** Driver-checkable digest of a `(doc_id, embedding)` vector table:
     * dimension, floored L2 norm, nonzero count and the index-weighted
@@ -666,77 +581,58 @@ object SparkEntry {
     // build-once/search-many: the reference persists its index and serves
     // every query from it (services/index_service.py:75-99; the
     // load-or-rebuild endpoint semantics are exercised in IvfSpec). Here
-    // the build is memoized PER JVM under a fresh process-private temp
-    // dir — repeated invocations (tests, bench, verify) reuse the index
-    // and time ONLY the search (probe → scan only the probed partitions,
-    // no assignment recompute), while a new process always rebuilds, so
-    // no cross-process path race and no stale index can survive a corpus
-    // regeneration. Same results/oracle as q_ivf_search.
+    // the index is an [[Artifacts]] build — repeated invocations (tests,
+    // bench, verify) reuse the index and time ONLY the search (probe →
+    // scan only the probed partitions, no assignment recompute). Same
+    // results/oracle as q_ivf_search.
     "q_ivf_persisted" -> ((s, dir) => {
       val t = Tables(s, dir, spread = true)
-      val memoKey = s"$dir@${corpusFingerprint(s, dir)}"
-      val idx = memoized(builtPersisted, memoKey)(new java.io.File(_).exists) {
-        val p = s"$ivfTmpBase/persisted-${Tables.digest(memoKey)}"
-        IvfIndex.persist(t.embeddings, nCentroids = 16, path = p)
-        p
+      val a = Artifacts(s, "persisted", dir, "embeddings.parquet") { a =>
+        IvfIndex.persist(t.embeddings, nCentroids = 16, path = a.path)
       }
-      IvfIndex.searchPersisted(s, idx,
+      IvfIndex.searchPersisted(s, a.path,
         t.embeddings.filter(col("vec_id") < 5)
           .select(col("vec_id").as("query_id"), col("embedding").as("qv")),
         nprobe = 4, k = 5)
     }),
     // same contract over the BUCKETED catalog layout (postings bucketed by
-    // centroid_id + companion centroids table), memoized the same way;
-    // the tableExists re-check self-heals if a test drops EITHER table
-    // (searchBucketed reads both the postings and `<tbl>_centroids`)
+    // centroid_id + companion centroids table); searchBucketed reads both
+    // the postings and `<tbl>_centroids`, so both are named
     "q_ivf_bucketed" -> ((s, dir) => {
       val t = Tables(s, dir, spread = true)
-      val memoKey = s"$dir@${corpusFingerprint(s, dir)}"
-      val tag = Tables.digest(memoKey)
-      val tbl = memoized(builtBucketed, memoKey)(t0 =>
-        s.catalog.tableExists(t0) && s.catalog.tableExists(t0 + "_centroids")) {
-        val t0 = s"graft_q_postings_$tag"
+      val tbl = Artifacts(s, "bucketed", dir, "embeddings.parquet",
+          tag => Seq("", "_centroids").map(s"graft_q_postings_$tag" + _)) { a =>
         IvfIndex.persistBucketed(t.embeddings, nCentroids = 16,
-          table = t0, path = s"$ivfTmpBase/bucketed-$tag")
-        t0
-      }
+          table = a.tables.head, path = s"${a.path}/postings")
+      }.tables.head
       IvfIndex.searchBucketed(s, tbl,
         t.embeddings.filter(col("vec_id") < 5)
           .select(col("vec_id").as("query_id"), col("embedding").as("qv")),
         nprobe = 4, k = 5)
     }),
     // the co-located fact-fact join: orders and lineitem bucketed on the
-    // orderkey (build memoized per JVM+corpus like the index layouts),
-    // joined with NO Exchange on either side — layout never changes the
-    // answer, so the oracle is the same query over raw parquet
+    // orderkey, joined with NO Exchange on either side — layout never
+    // changes the answer, so the oracle is the same query over raw parquet
     "q_bucketed_join" -> ((s, dir) => {
       val t = Tables(s, dir, spread = true)
-      val memoKey = s"facts:$dir@${corpusFingerprint(s, dir, "lineitem.parquet")}"
-      val tag = Tables.digest(memoKey)
-      val lTblOf = (o: String) => o.replace("orders", "lineitem")
-      val oTbl = memoized(builtBucketed, memoKey)(o =>
-        s.catalog.tableExists(o) && s.catalog.tableExists(lTblOf(o))) {
-        val o = s"graft_q_orders_b_$tag"
-        Relational.persistBucketedFacts(t, o, lTblOf(o),
-          s"$ivfTmpBase/facts-$tag")
-        o
-      }
-      Relational.bucketedOrderRevenue(s, oTbl, lTblOf(oTbl))
+      val Seq(oTbl, lTbl) = Artifacts(s, "facts", dir, "lineitem.parquet",
+          tag => Seq(s"graft_q_orders_b_$tag", s"graft_q_lineitem_b_$tag")) { a =>
+        Relational.persistBucketedFacts(t, a.tables(0), a.tables(1), a.path)
+      }.tables
+      Relational.bucketedOrderRevenue(s, oTbl, lTbl)
     }),
     // MERGE-style upsert: broadcast anti-join + union — the base table
     // never shuffles for a daily CDC batch; per-status rollup checks it
     "q_upsert" -> q(Relational.upsertSummary),
     // day-partitioned events layout: one day's rollup reads ONE partition
-    // directory (PartitionFilters-gated in PlanSpec); build memoized like
-    // the other layouts, answer identical to filtering the raw table
+    // directory (PartitionFilters-gated in PlanSpec), answer identical to
+    // filtering the raw table
     "q_partition_prune" -> ((s, dir) => {
       val t = Tables(s, dir, spread = true)
-      val memoKey = s"evdays:$dir@${corpusFingerprint(s, dir, "events.parquet")}"
-      val path = memoized(builtPersisted, memoKey)(new java.io.File(_).exists) {
-        val p = s"$ivfTmpBase/evdays-${Tables.digest(memoKey)}"
-        Relational.persistPartitionedEvents(t, p); p
+      val a = Artifacts(s, "evdays", dir, "events.parquet") { a =>
+        Relational.persistPartitionedEvents(t, a.path)
       }
-      Relational.prunedDailyEvents(s, path)
+      Relational.prunedDailyEvents(s, a.path)
     }),
     // the memory-lean production configuration: IVF pruning AND int8
     // posting lists (probe/assign on exact centroids, score dequantized)
@@ -747,18 +643,14 @@ object SparkEntry {
       t.embeddings.select(col("vec_id"), quantize8(col("embedding")).as("qcodes")),
       nCentroids = 16, nprobe = 4, k = 5)),
     // build-once/search-many for the PQ layout: codes + codebooks
-    // persisted (16× smaller at rest), search decodes at scan. Memoized
-    // per (JVM, corpus fingerprint) like the IVF index paths; results
+    // persisted (16× smaller at rest), search decodes at scan; results
     // must equal q_pq_search — the LAYOUT never changes the answer
     "q_pq_persisted" -> ((s, dir) => {
       val t = Tables(s, dir, spread = true)
-      val memoKey = s"pq:$dir@${corpusFingerprint(s, dir)}"
-      val idx = memoized(builtPersisted, memoKey)(new java.io.File(_).exists) {
-        val p = s"$ivfTmpBase/pq-${Tables.digest(memoKey)}"
-        ProductQuantizer.persist(t.embeddings, p, m = 4, k = 16)
-        p
+      val a = Artifacts(s, "pq", dir, "embeddings.parquet") { a =>
+        ProductQuantizer.persist(t.embeddings, a.path, m = 4, k = 16)
       }
-      ProductQuantizer.searchPersisted(s, idx,
+      ProductQuantizer.searchPersisted(s, a.path,
         t.embeddings.filter(col("vec_id") < 5)
           .select(col("vec_id").as("query_id"), col("embedding").as("qv")),
         topK = 5)
@@ -927,35 +819,28 @@ object SparkEntry {
     // neighbors come from the BASE only
     "dedup_semantic_incremental" -> ((s, dir) => {
       val t = Tables(s, dir, spread = true)
-      val memoKey =
-        s"semblocks:$dir@${corpusFingerprint(s, dir, "embeddings.parquet")}"
-      val tag = Tables.digest(memoKey)
-      val tbl = memoized(builtBucketed, memoKey)(s.catalog.tableExists) {
-        val t0 = s"graft_sem_blocks_$tag"
+      val tbl = Artifacts(s, "semblocks", dir, "embeddings.parquet",
+          tag => Seq("", "_centroids", "_coarse", "_meta")
+            .map(s"graft_sem_blocks_$tag" + _)) { a =>
         Dedup.persistSemanticBlocks(
-          t.embeddings.filter(col("vec_id") < 250), t0,
-          path = s"$ivfTmpBase/semblocks-$tag")
-        t0
-      }
+          t.embeddings.filter(col("vec_id") < 250), a.tables.head,
+          path = a.path)
+      }.tables.head
       Dedup.semanticIncrementalFromStore(
         t.embeddings.filter(col("vec_id") >= 250), s, tbl)
     }),
     // incremental: a new batch probed against the PERSISTED base-corpus
     // signature table (bucketed by band,h) — the base is never re-read and
-    // its signatures are never recomputed per increment; the store build
-    // is memoized per (JVM, corpus fingerprint) like the index paths.
-    // Same oracle as the recompute form: the LAYOUT never changes the
-    // answer (the q_ivf_persisted contract).
+    // its signatures are never recomputed per increment. Same oracle as
+    // the recompute form: the LAYOUT never changes the answer (the
+    // q_ivf_persisted contract).
     "dedup_incremental" -> ((s, dir) => {
       val t = Tables(s, dir, spread = true)
-      val memoKey = s"sig:$dir@${corpusFingerprint(s, dir, "documents.parquet")}"
-      val tag = Tables.digest(memoKey)
-      val tbl = memoized(builtBucketed, memoKey)(s.catalog.tableExists) {
-        val t0 = s"graft_sig_store_$tag"
-        Dedup.persistSignatures(t.documents.filter(col("doc_id") < 250), t0,
-          path = s"$ivfTmpBase/sig-$tag")
-        t0
-      }
+      val tbl = Artifacts(s, "sig", dir, "documents.parquet",
+          tag => Seq(s"graft_sig_store_$tag")) { a =>
+        Dedup.persistSignatures(t.documents.filter(col("doc_id") < 250),
+          a.tables.head, path = a.path)
+      }.tables.head
       Dedup.incrementalCandidatesFromStore(
         t.documents.filter(col("doc_id") >= 250), s, tbl)
     }),
@@ -969,17 +854,14 @@ object SparkEntry {
     // scale, so the oracle is the recompute jaccard verbatim
     "dedup_shingle_incremental" -> ((s, dir) => {
       val t = Tables(s, dir, spread = true)
-      val memoKey =
-        s"shinc:$dir@${corpusFingerprint(s, dir, "documents.parquet")}"
-      val tag = Tables.digest(memoKey)
-      val tbl = memoized(builtBucketed, memoKey)(s.catalog.tableExists) {
-        val t0 = s"graft_shingle_inc_$tag"
+      val tbl = Artifacts(s, "shinc", dir, "documents.parquet",
+          tag => Seq(s"graft_shingle_inc_$tag")) { a =>
+        val t0 = a.tables.head
         Dedup.persistShingles(t.documents.filter(col("doc_id") < 250), t0,
-          path = s"$ivfTmpBase/shinc-$tag", minDf = 1)
+          path = a.path, minDf = 1)
         Dedup.appendShingles(t.documents.filter(col("doc_id") >= 250), t0)
         Dedup.compactShingleStore(s, t0)
-        t0
-      }
+      }.tables.head
       Dedup.jaccardNeighborsFromStore(s, tbl)
     }),
     // the EXACT-verified incremental probe: a new batch's best BASE
@@ -989,15 +871,11 @@ object SparkEntry {
     // the base never moves
     "dedup_jaccard_incremental" -> ((s, dir) => {
       val t = Tables(s, dir, spread = true)
-      val memoKey =
-        s"shbase:$dir@${corpusFingerprint(s, dir, "documents.parquet")}"
-      val tag = Tables.digest(memoKey)
-      val tbl = memoized(builtBucketed, memoKey)(s.catalog.tableExists) {
-        val t0 = s"graft_shingle_base_$tag"
-        Dedup.persistShingles(t.documents.filter(col("doc_id") < 250), t0,
-          path = s"$ivfTmpBase/shbase-$tag", minDf = 1)
-        t0
-      }
+      val tbl = Artifacts(s, "shbase", dir, "documents.parquet",
+          tag => Seq(s"graft_shingle_base_$tag")) { a =>
+        Dedup.persistShingles(t.documents.filter(col("doc_id") < 250),
+          a.tables.head, path = a.path, minDf = 1)
+      }.tables.head
       Dedup.jaccardIncrementalFromStore(
         t.documents.filter(col("doc_id") >= 250), s, tbl)
     }),
@@ -1619,23 +1497,15 @@ object SparkEntry {
   )
 
   /** The bucketed snapshot-pair layout behind `q_cdc_bucketed`: both
-    * releases of [[snapshotPair]] persisted bucketed by `doc_id`,
-    * memoized per (JVM, corpus) like the index layouts; the tableExists
-    * re-check self-heals if a test drops either table. */
+    * releases of [[snapshotPair]] persisted bucketed by `doc_id`. */
   private def snapshotPairBucketed(s: SparkSession,
                                    dir: String): (String, String) = {
-    val memoKey = s"snap:$dir@${corpusFingerprint(s, dir, "documents.parquet")}"
-    val tag = Tables.digest(memoKey)
-    val curOf = (b: String) => b.replace("_base_", "_cur_")
-    val baseTbl = memoized(builtBucketed, memoKey)(b =>
-      s.catalog.tableExists(b) && s.catalog.tableExists(curOf(b))) {
-      val b = s"graft_q_snap_base_$tag"
+    val Seq(baseTbl, curTbl) = Artifacts(s, "snap", dir, "documents.parquet",
+        tag => Seq(s"graft_q_snap_base_$tag", s"graft_q_snap_cur_$tag")) { a =>
       val (base, cur) = snapshotPair(Tables(s, dir, spread = true))
-      Warehouse.persistSnapshotPair(base, cur, b, curOf(b),
-        s"$ivfTmpBase/snap-$tag")
-      b
-    }
-    (baseTbl, curOf(baseTbl))
+      Warehouse.persistSnapshotPair(base, cur, a.tables(0), a.tables(1), a.path)
+    }.tables
+    (baseTbl, curTbl)
   }
 
   /** The q_cdc / q_cdc_bucketed oracle: the snapshot pair full-outer

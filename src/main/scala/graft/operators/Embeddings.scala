@@ -186,11 +186,15 @@ object Embeddings {
   def dimProfile(embeddings: DataFrame): DataFrame =
     dimProfileFromCells(dimCells(embeddings))
 
-  /** The per-dimension moment cells behind [[dimProfile]] — batch/stream-
-    * shared (as a streaming aggregation the state is bounded by the d-cell
-    * dimension domain; [[graft.streaming.DimProfileStream]] is this over
-    * `readStream`, served through [[dimProfileFromCells]]). */
-  private[graft] def dimCells(embeddings: DataFrame): DataFrame = {
+  /** The per-dimension moment cells `(dim, n, sx, sxx, mn, mx)` behind
+    * [[dimProfile]] — batch/stream-shared. Over `readStream` (update
+    * mode) this is the streaming per-dimension monitor, served through
+    * [[dimProfileFromCells]]: the key domain is the embedding
+    * DIMENSIONALITY, so the state store holds d cells whatever the corpus
+    * size (the SketchStream discipline). After any prefix of a stream the
+    * cells equal this over the same rows in batch — asserted bit-for-bit
+    * in the streaming spec under both state backends. */
+  def dimCells(embeddings: DataFrame): DataFrame = {
     val x = col("col").cast("double")
     embeddings
       .select(posexplode(col("embedding")))
@@ -251,11 +255,17 @@ object Embeddings {
   def anisotropy(embeddings: DataFrame): DataFrame =
     anisotropyFromCells(anisotropyCells(embeddings))
 
-  /** The per-dimension resultant/self-mass cells behind [[anisotropy]] —
-    * batch/stream-shared (d bounded cells of long/DECIMAL sums;
-    * [[graft.streaming.AnisotropyStream]] is this over `readStream`,
-    * served through [[anisotropyFromCells]]). */
-  private[graft] def anisotropyCells(embeddings: DataFrame): DataFrame = {
+  /** The per-dimension resultant/self-mass cells `(pos, cnt, sd, self_d)`
+    * behind [[anisotropy]] — batch/stream-shared, d bounded cells of
+    * long/DECIMAL sums. Over `readStream` (update mode) this is the
+    * streaming anisotropy monitor, served through [[anisotropyFromCells]]:
+    * the sum identity collapses the quadratic pair integral to d cells, so
+    * the state store holds d rows forever, and an encoder that starts to
+    * emit collapsed directions is caught WHILE a backfill runs, not after.
+    * After any prefix of a stream the cells equal this over the same rows
+    * in batch — asserted bit-for-bit in the streaming spec under both
+    * state backends. */
+  def anisotropyCells(embeddings: DataFrame): DataFrame = {
     val unit = embeddings
       .select(col("embedding"), l2_norm(col("embedding")).as("nrm"))
       .filter(col("nrm") > 0)

@@ -481,12 +481,14 @@ object EventAnalytics {
     seasonalityFromCells(seasonalityCells(events))
 
   /** The 7×24 `(dow, hour, n, value_sum)` cells — batch/stream-shared
-    * (a plain aggregation on a FIXED 168-cell key, so as a streaming
-    * aggregation the state store holds ≤ 168 counter rows forever —
-    * the [[graft.streaming.SketchStream]] fixed-state discipline;
-    * [[graft.streaming.SeasonalityStream]] is this over `readStream`).
-    * Sums stay exact DECIMAL here; [[seasonalityFromCells]] casts at
-    * the fold. */
+    * (a plain aggregation on a FIXED 168-cell key, so over `readStream`
+    * in update mode the state store holds ≤ 168 counter rows forever —
+    * the [[graft.streaming.SketchStream]] fixed-state discipline; epoch
+    * arithmetic keeps the grouping key a codegen'd projection, no
+    * calendar functions). After any prefix of a stream the cells equal
+    * this over the same rows in batch — asserted bit-for-bit in the
+    * streaming spec under both state backends. Sums stay exact DECIMAL
+    * here; [[seasonalityFromCells]] casts at the fold. */
   def seasonalityCells(events: DataFrame): DataFrame =
     events
       .select(col("ts").cast("long").as("sec"),
@@ -721,10 +723,12 @@ object EventAnalytics {
     madFromCells(madHistogram(events), k)
 
   /** The capped `(event_type, vg, c)` value histogram — batch/stream-
-    * shared. As a streaming aggregation the state is bounded by the
+    * shared. Over `readStream` (update mode) the state is bounded by the
     * CLAMPED grid (≤ madGridMax+1 cells per type by construction —
-    * which is exactly why the clamp exists;
-    * [[graft.streaming.MadOutliersStream]] is this over `readStream`). */
+    * which is exactly why the clamp exists: a raw `floor(value·1e4)` key
+    * would make the store ∝ distinct values seen). After any prefix of a
+    * stream the cells equal this over the same rows in batch — asserted
+    * bit-for-bit in the streaming spec under both state backends. */
   def madHistogram(events: DataFrame): DataFrame =
     events
       .select(col("event_type"),

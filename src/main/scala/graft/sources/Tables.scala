@@ -80,11 +80,11 @@ final case class Tables(spark: SparkSession, dir: String,
 
 object Tables {
   /** Collision-resistant 64-bit tag of `text`: a SHA-256 prefix in hex.
-    * It names memo builds on disk: `hashCode` (32 bits, trivially
-    * collidable) let two corpora map to the same parquet path, the second
-    * build silently overwriting the first while the first memo entry
-    * still pointed at it. Hex keeps the tag a valid identifier fragment
-    * for catalog table names too. */
+    * It names [[graft.Artifacts]] builds on disk: `hashCode` (32 bits,
+    * trivially collidable) let two corpora map to the same parquet path,
+    * the second build silently overwriting the first while the first
+    * memo entry still pointed at it. Hex keeps the tag a valid identifier
+    * fragment for catalog table names too. */
   def digest(text: String): String =
     java.security.MessageDigest.getInstance("SHA-256")
       .digest(text.getBytes("UTF-8"))
@@ -152,12 +152,6 @@ object Tables {
     parallelismFloor(df, cacheKey = None)
 
   def parallelismFloor(df: DataFrame, cacheKey: Option[String]): DataFrame = {
-    // experiment/ops kill-switch: -Dgraft.spread=false / GRAFT_SPREAD=false
-    // serves the exact pre-floor plans (same-binary A/B measurements; also
-    // the escape hatch if a deployment's scheduler dislikes the extra
-    // early stage)
-    if (sys.props.get("graft.spread").contains("false") ||
-        sys.env.get("GRAFT_SPREAD").contains("false")) return df
     val spark = df.sparkSession
     val cores = spark.sparkContext.defaultParallelism
     // partitions ∝ scan bytes, capped at the session's cores: thread-dump

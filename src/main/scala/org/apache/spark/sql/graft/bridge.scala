@@ -80,14 +80,7 @@ object bridge {
       : Seq[org.apache.spark.sql.execution.SparkStrategy] =
     ext.buildPlannerStrategies(spark)
 
-  /** Remove a previously installed strategy / optimizer rule. */
-  def uninstallStrategy(spark: org.apache.spark.sql.SparkSession,
-                        strategy: org.apache.spark.sql.execution.SparkStrategy)
-      : Unit = {
-    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    s.experimental.extraStrategies =
-      s.experimental.extraStrategies.filterNot(_ == strategy)
-  }
+  /** Remove a previously installed optimizer rule. */
   def uninstallOptimization(spark: org.apache.spark.sql.SparkSession,
       rule: org.apache.spark.sql.catalyst.rules.Rule[
         org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]): Unit = {

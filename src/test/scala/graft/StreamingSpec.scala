@@ -790,7 +790,7 @@ class StreamingSpec extends SparkSuite {
   test("streaming seasonality cells equal the batch fold, heap and RocksDB") {
     import spark.implicits._
     def run(name: String): Map[(Long, Long), (Long, java.math.BigDecimal)] = {
-      val q = SeasonalityStream.cells(streamEvents)
+      val q = operators.EventAnalytics.seasonalityCells(streamEvents)
         .writeStream.format("memory").queryName(name)
         .outputMode("update").start()
       try {
@@ -864,7 +864,7 @@ class StreamingSpec extends SparkSuite {
   test("streaming MAD histogram equals the batch fold, heap and RocksDB") {
     import spark.implicits._
     def run(name: String): Map[(String, Long), Long] = {
-      val q = MadOutliersStream.histogram(streamEvents)
+      val q = operators.EventAnalytics.madHistogram(streamEvents)
         .writeStream.format("memory").queryName(name)
         .outputMode("update").start()
       try {
@@ -953,7 +953,7 @@ class StreamingSpec extends SparkSuite {
                    Long, Long)] = {
       val stream = spark.readStream.schema(embSchema)
         .option("maxFilesPerTrigger", "1").parquet(s"$dir/chunk=*")
-      val q = DimProfileStream.cells(stream)
+      val q = operators.Embeddings.dimCells(stream)
         .writeStream.format("memory").queryName(name)
         .outputMode("update").start()
       try {
@@ -1006,7 +1006,7 @@ class StreamingSpec extends SparkSuite {
       : Map[Int, (Long, java.math.BigDecimal, java.math.BigDecimal)] = {
       val stream = spark.readStream.schema(embSchema)
         .option("maxFilesPerTrigger", "1").parquet(s"$dir/chunk=*")
-      val q = AnisotropyStream.cells(stream)
+      val q = operators.Embeddings.anisotropyCells(stream)
         .writeStream.format("memory").queryName(name)
         .outputMode("update").start()
       try {
