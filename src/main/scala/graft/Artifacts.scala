@@ -16,7 +16,7 @@ import graft.sources.Tables
   * - **Place:** `<kind>-<tag>` under one process-private temp base, where
   *   the tag is [[Tables.digest]] of the key. Builds are reused within a
   *   JVM and never shared across processes, so no two processes race on
-  *   one path.
+  *   one path. The base is deleted when the JVM exits.
   * - **Lock:** check → build → mark runs under one reentrant lock, so two
   *   threads asking for one artifact run its (side-effecting,
   *   overwrite-mode) build once, and a build may ask for another artifact
@@ -34,8 +34,12 @@ object Artifacts {
 
   private val Marker = "_GRAFT_BUILT"
 
-  private lazy val base: String =
-    Files.createTempDirectory("graft-artifacts").toString
+  /** Removed when the JVM exits, with every artifact under it. */
+  private[graft] lazy val base: String = {
+    val dir = Files.createTempDirectory("graft-artifacts").toString
+    org.apache.spark.sql.graft.bridge.deleteOnExit(dir)
+    dir
+  }
 
   private val lock = new ReentrantLock
 

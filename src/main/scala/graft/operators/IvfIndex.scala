@@ -7,7 +7,7 @@ import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions._
-import graft.sources.Tables
+import graft.sources.{FingerprintCache, Tables}
 import graft.operators.Barrier.BarrierOps
 
 /** IVF (inverted-file) approximate search: the scale path that replaces the
@@ -44,11 +44,17 @@ object IvfIndex {
     * the corpus-scaled posting-list contract without each caller
     * re-deriving k. */
   def centroids(corpus: DataFrame, nCentroids: Int): DataFrame = {
-    val k =
-      if (nCentroids > 0) nCentroids else autoCentroids(corpus.count())
+    val k = centroidCount(corpus, nCentroids)
     corpus.filter(col("vec_id") < k)
       .select(col("vec_id").as("centroid_id"), col("embedding").as("cv"))
   }
+
+  /** `nCentroids`, or [[autoCentroids]] of the corpus size when it is
+    * ≤ 0. The size is one job: each partition counts its rows, reading no
+    * column, where `Dataset.count` adds a shuffle stage, a second job. */
+  private def centroidCount(corpus: DataFrame, nCentroids: Int): Int =
+    if (nCentroids > 0) nCentroids
+    else autoCentroids(corpus.select().queryExecution.toRdd.count())
 
   /** (vec_id, centroid_id, dist): each corpus vector's nearest centroid,
     * argmin by (distance, centroid_id) — the ONE assignment core behind
@@ -176,16 +182,51 @@ object IvfIndex {
   /** Persist the index: centroids + posting lists partitioned on disk by
     * `centroid_id` (the durable form of the reference's `INDEX_FILE`,
     * services/index_service.py:75-99). A later search prunes partitions —
-    * it reads only the probed centroids' directories. */
+    * it reads only the probed centroids' directories.
+    *
+    * The seed centroids are resolved once, on the driver: k (one count
+    * when `nCentroids` ≤ 0) and one collect of the k seed rows. The
+    * centroids are written from that array, and each vector is assigned
+    * in the same map-only pass that writes its posting: argmin by
+    * (1 − `cosine_similarity(embedding, cv)`, `centroid_id`), the order of
+    * [[nearestCentroid]]'s struct min, so a null distance (a null centroid
+    * or vector) sorts first and NaN last. Rows with a null `vec_id` are
+    * not indexed, and a `vec_id` that appears in several rows is assigned
+    * per row. No join, no shuffle: at most four jobs.
+    *
+    * The write primes [[searchPersisted]]'s resident entry for `path`
+    * with the centroids and the postings schema it wrote, stamped with
+    * the [[Tables.fingerprint]] of the finished index, so the next search
+    * reads no centroids and infers no schema. */
   def persist(corpus: DataFrame, nCentroids: Int, path: String): Unit = {
-    val cents = centroids(corpus, nCentroids)
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    corpus.join(
-        nearestCentroid(corpus, cents).select(col("vec_id"), col("centroid_id")),
-        Seq("vec_id"))
-      .select(col("vec_id"), col("embedding"), col("centroid_id"))
+    val spark = corpus.sparkSession
+    val k = centroidCount(corpus, nCentroids)
+    val seeds = corpus.filter(col("vec_id") < k)
+      .select(col("vec_id"), col("embedding"))
+      .collect() // BOUNDED: k seed rows
+      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getSeq[Float](1).toArray))
+      .sortBy(_._1)
+    val centroidSchema = StructType(Seq(
+      corpus.schema("vec_id").copy(name = "centroid_id"),
+      corpus.schema("embedding").copy(name = "cv")))
+    spark.createDataFrame(
+        java.util.Arrays.asList(seeds.map { case (id, cv) => Row(id, cv) }: _*),
+        centroidSchema)
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+    val ids = seeds.map(_._1)
+    // a null distance sorts first: a null vector is nearest the smallest
+    // id, and a null centroid is nearest every other vector
+    val nearest = when(col("embedding").isNull, lit(ids.headOption.getOrElse(0L)))
+      .otherwise(seeds.collectFirst { case (id, null) => lit(id) }.getOrElse(
+        element_at(typedLit(ids.toSeq), (nearest_seed(col("embedding"),
+          typedLit(seeds.map(_._2.toSeq).toSeq)) + 1).cast(IntegerType))))
+    corpus.filter(col("vec_id").isNotNull && lit(seeds.nonEmpty))
+      .select(col("vec_id"), col("embedding"), nearest.as("centroid_id"))
       .write.mode("overwrite").partitionBy("centroid_id")
       .parquet(s"$path/postings")
+    val cents = seeds.collect { case (id, cv) if cv != null => id -> ArrayData.toArrayData(cv) }
+    resident.prime(path, Tables.fingerprint(spark, path), Resident(cents,
+      if (cents.isEmpty) EmptyPostings else postingsSchema(corpus.schema, ids)))
   }
 
   /** Reference semantics (services/index_service.py:77-90): a loaded index
@@ -258,20 +299,12 @@ object IvfIndex {
   }
 
   /** What [[searchPersisted]] keeps of one persisted index between calls:
-    * the [[Tables.fingerprint]] it was read at, its centroids and its
-    * postings schema. */
-  private final case class Resident(fingerprint: String,
-                                    centroids: Array[(Long, ArrayData)],
+    * its centroids and its postings schema. */
+  private final case class Resident(centroids: Array[(Long, ArrayData)],
                                     postings: StructType)
 
-  /** Indexes kept resident; past this many the least recently used goes. */
-  private val MaxResident = 8
-  private val resident =
-    new java.util.LinkedHashMap[String, Resident](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Resident]): Boolean =
-        size() > MaxResident
-    }
+  /** Indexes kept resident: at most 8, by path and fingerprint. */
+  private val resident = new FingerprintCache[Resident](8)
 
   private def vector(r: Row, i: Int): ArrayData =
     ArrayData.toArrayData(r.getSeq[Float](i).toArray)
@@ -281,22 +314,17 @@ object IvfIndex {
   private def residentIndex(spark: SparkSession, path: String): Resident = {
     val fp = Tables.fingerprint(spark, path)
     require(fp != "missing", s"no persisted IVF index at $path")
-    Option(resident.synchronized(resident.get(path)))
-      .filter(_.fingerprint == fp)
-      .getOrElse {
-        val cents = spark.read.parquet(s"$path/centroids")
-          .filter(col("centroid_id").isNotNull && col("cv").isNotNull)
-          .select(col("centroid_id"), col("cv"))
-          .collect() // BOUNDED: k × dim
-          .map(r => r.getLong(0) -> vector(r, 1))
-        // an empty corpus writes no posting partitions, so no schema
-        val postings =
-          if (cents.isEmpty) EmptyPostings
-          else spark.read.parquet(s"$path/postings").schema
-        val r = Resident(fp, cents, postings)
-        resident.synchronized(resident.put(path, r))
-        r
-      }
+    resident(path, fp) {
+      val cents = spark.read.parquet(s"$path/centroids")
+        .filter(col("centroid_id").isNotNull && col("cv").isNotNull)
+        .select(col("centroid_id"), col("cv"))
+        .collect() // BOUNDED: k × dim
+        .map(r => r.getLong(0) -> vector(r, 1))
+      // an empty corpus writes no posting partitions, so no schema
+      Resident(cents,
+        if (cents.isEmpty) EmptyPostings
+        else spark.read.parquet(s"$path/postings").schema)
+    }
   }
 
   /** Search a persisted index: probe centroids, then scan ONLY the probed
@@ -306,9 +334,11 @@ object IvfIndex {
     * Resident lifecycle: the index's centroids (k × dim floats) and its
     * postings schema stay on the driver, keyed by the
     * [[Tables.fingerprint]] of `path`, which is re-checked on every call
-    * with one recursive listing — an index rewritten by [[persist]] or
-    * appended to by `IndexMaintenance.appendBatch` is read again, never
-    * served stale. At most `MaxResident` paths are kept. A warm call
+    * with one recursive listing — an index rewritten or appended to by
+    * `IndexMaintenance.appendBatch` is read again, never served stale. A
+    * [[persist]] in this JVM primes the entry with what it wrote, so the
+    * first search after a rebuild is warm too. At most 8 paths are kept.
+    * A warm call
     * collects the queries (the one job before it returns, bounded by the
     * batch), probes their `nprobe` nearest centroids on the driver with
     * the `cosine_similarity` loop and `top_k_by_score`'s order, and plans
@@ -358,6 +388,13 @@ object IvfIndex {
           .agg(top_k_by_score(col("sim"), col("vec_id"), k).as("topk")))
       .limit(math.min(maxRows, Int.MaxValue.toLong).toInt)
   }
+
+  /** The postings schema a read of [[persist]]'s output infers from a
+    * `corpus` with these centroid `ids`: the written columns, nullable,
+    * and the partition column as an int when every id fits one. */
+  private def postingsSchema(corpus: StructType, ids: Array[Long]): StructType =
+    bridge.asNullable(StructType(Seq(corpus("vec_id"), corpus("embedding"))))
+      .add("centroid_id", if (ids.forall(_.isValidInt)) IntegerType else LongType)
 
   /** The postings schema [[persist]] writes for `(vec_id bigint, embedding
     * array<float>)` vectors. */
@@ -550,7 +587,8 @@ object IvfIndex {
     * sweep points re-read it; its size is queries × probed-corpus-share,
     * bounded by the audit's query-sample contract (same bound as the
     * probe-id collects). `queries.count`/`corpus.count` feed the ratio
-    * denominators — two cheap count jobs, not data collects. */
+    * denominators — two cheap count jobs, not data collects. An empty
+    * query set or corpus reads null `recall` and `scan_share`. */
   def recallSweep(queries: DataFrame, corpus: DataFrame, nCentroids: Int,
                   nprobes: Seq[Int] = Seq(1, 2, 4, 8), k: Int = 5)
       : DataFrame = {
@@ -580,6 +618,11 @@ object IvfIndex {
       .agg(count(lit(1)).as("psz"))
     val nq = queries.count()
     val n = corpus.count()
+    // an empty query set or corpus has no share to report
+    def share(c: Column, of: Long): Column =
+      if (of == 0) lit(null).cast(DoubleType)
+      else floor(c / lit(of.toDouble) * 1e6) / 1e6
+    val recallOf = if (n == 0) 0L else nq * k
     nprobes.map { p =>
       val approx = scored.filter(col("crank") <= p)
         .withColumn("rn", row_number().over(Window.partitionBy(col("query_id"))
@@ -594,11 +637,9 @@ object IvfIndex {
       hits.crossJoin(scanned).select(
         lit(p.toLong).as("nprobe"),
         col("n_hits"),
-        (floor(col("n_hits") / lit((nq * k).toDouble) * 1e6) / 1e6)
-          .as("recall"),
+        share(col("n_hits"), recallOf).as("recall"),
         col("n_scanned"),
-        (floor(col("n_scanned") / lit((nq * n).toDouble) * 1e6) / 1e6)
-          .as("scan_share"))
+        share(col("n_scanned"), nq * n).as("scan_share"))
     }.reduce(_ unionByName _).orderBy(col("nprobe"))
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions._
@@ -33,16 +34,22 @@ object Search {
   /** Fused top-k via the custom physical operator
     * [[graft.plans.VectorTopKJoinExec]]: one corpus scan, per-query bounded
     * heaps, no (corpus × query) row ever materialized. Same contract and
-    * output as [[bruteForceTopK]]. */
-  def fusedTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
+    * output rows as [[bruteForceTopK]], ordered by query and rank. */
+  def fusedTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    fused(queries, corpus)(graft.plans.VectorTopKJoin.ranked(_, _, k))
+
+  /** `node` over the `(query_id, qv)` and `(vec_id, embedding)` plans of
+    * `queries` and `corpus`, with the fused operator's strategy and
+    * threshold rule installed. */
+  private def fused(queries: DataFrame, corpus: DataFrame)(
+      node: (LogicalPlan, LogicalPlan) => LogicalPlan): DataFrame = {
     import org.apache.spark.sql.graft.bridge
     val spark = corpus.sparkSession
     bridge.installStrategy(spark, graft.plans.VectorTopKStrategy)
     bridge.installOptimization(spark, graft.plans.PushThresholdIntoVectorTopK)
-    bridge.ofRows(spark, graft.plans.VectorTopKJoin(
+    bridge.ofRows(spark, node(
       bridge.planOf(queries.select(col("query_id"), col("qv"))),
-      bridge.planOf(corpus.select(col("vec_id"), col("embedding"))),
-      k))
+      bridge.planOf(corpus.select(col("vec_id"), col("embedding")))))
   }
 
   /** FILTERED exact top-k: [[fusedTopK]] under a metadata predicate on
@@ -377,21 +384,24 @@ object Search {
 
   /** Top-1 with acceptance gate: the reference keeps the best match only if
     * cosine distance < `maxDistance` (qa_service.py:150-168, threshold 0.4).
-    * Every query keeps its row; `accepted` carries the gate. */
+    * `(query_id, best_id, best_score, accepted)`, ordered by query_id.
+    *
+    * Every distinct query id keeps its row once the corpus has one;
+    * `accepted` carries the gate, `1 - sim < maxDistance` on the unfloored
+    * sim, and `best_score` is the sim floored at 1e-6. The best is the
+    * highest sim, then the lowest vec_id ([[bruteForceTopK]]'s order). A
+    * query with nothing to rank (a null `qv`, or only null or NaN sims)
+    * keeps its row with null `best_id` and `best_score` and `accepted =
+    * false`. An empty corpus answers no rows.
+    *
+    * Runs on the fused operator ([[graft.plans.VectorTopKJoin.gated]]):
+    * one corpus scan with a one-entry heap per query, merged in runs of
+    * query ids, so the final order costs no sort. Beyond collecting the
+    * queries, it is one Spark job. */
   def thresholdRetrieval(queries: DataFrame, corpus: DataFrame,
-                         maxDistance: Double = 0.4): DataFrame = {
-    val sims = corpus.crossJoin(broadcast(queries))
-      .select(col("query_id"), col("vec_id"),
-        cosine_similarity(col("qv"), col("embedding")).as("sim"))
-    sims.groupBy(col("query_id"))
-      .agg(top_k_by_score(col("sim"), col("vec_id"), 1).as("topk"))
-      .select(col("query_id"),
-        col("topk").getItem(0).getField("id").as("best_id"),
-        (floor(col("topk").getItem(0).getField("score") * 1e6) / 1e6).as("best_score"),
-        (lit(1.0) - col("topk").getItem(0).getField("score") < maxDistance)
-          .as("accepted"))
+                         maxDistance: Double = 0.4): DataFrame =
+    fused(queries, corpus)(graft.plans.VectorTopKJoin.gated(_, _, maxDistance))
       .orderBy(col("query_id"))
-  }
 
   /** Topic-change detection: cosine of each vector vs the previous one in
     * its stream; change when similarity < `threshold`

@@ -2,15 +2,16 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeReference, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.Cross
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BinaryNode, Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.types._
-import graft.functions.{CosineSimilarity, TopKBuffer, TopKByScore}
+import graft.functions.{CosineSimilarity, TopKByScore}
 
 /** Logical node for a fused `group-by-query top_k_by_score(cosine)` — the
   * target of [[AutoFuseTopK]]. Output REUSES the attributes of the
@@ -253,6 +254,10 @@ case class VectorTopKAggExec(
       l: SparkPlan, r: SparkPlan): VectorTopKAggExec =
     copy(queries = l, corpus = r)
 
+  override def outputPartitioning: Partitioning =
+    FusedTopKSupport.ordered(output.head, conf.numShufflePartitions)
+  override def outputOrdering: Seq[SortOrder] = Seq(SortOrder(output.head, Ascending))
+
   override protected def doExecute(): RDD[InternalRow] = {
     val qidIdx = queries.output.indexWhere(_.exprId == qid.exprId)
     val qvIdx = queries.output.indexWhere(_.exprId == qv.exprId)
@@ -260,8 +265,8 @@ case class VectorTopKAggExec(
     val embIdx = corpus.output.indexWhere(_.exprId == emb.exprId)
     require(qidIdx >= 0 && qvIdx >= 0 && vidIdx >= 0 && embIdx >= 0)
 
-    val qRows = FusedTopKSupport.collectQueries(queries, qidIdx, qvIdx)
-    val bc = sparkContext.broadcast(qRows)
+    val qs = FusedTopKSupport.collectQueries(queries, qidIdx, qvIdx)
+    val bc = sparkContext.broadcast(qs)
     val kk = k
     val types = output.map(_.dataType).toArray
 
@@ -269,20 +274,21 @@ case class VectorTopKAggExec(
     // DISTINCT qid (duplicate query rows feed one shared group, exactly as
     // the cross join they replace duplicates every corpus score into the
     // group's multiset), a row with an EMPTY array when the corpus has
-    // rows but none scored (all-null), and NO row when the corpus is empty
-    // (the join under the Aggregate would produce no groups at all).
+    // rows but none scored (all-null, or a null qv), and NO row when the
+    // corpus is empty (the join under the Aggregate would produce no
+    // groups at all).
     val partials = FusedTopKSupport.partialHeaps(
       corpus, bc, vidIdx, embIdx, kk, Double.NegativeInfinity,
       emitMarkers = true)
-    FusedTopKSupport.mergeByQuery(partials,
-      FusedTopKSupport.numMergePartitions(qRows.length, conf.numShufflePartitions),
-      kk) { merged =>
+    FusedTopKSupport.mergeByQuery(partials, qs.ids.length,
+      conf.numShufflePartitions, kk) { merged =>
       val proj = UnsafeProjection.create(types)
-      merged.map { case (qid, heap) =>
+      val ids = bc.value.ids
+      merged.map { case (g, heap) =>
         val arr = new GenericArrayData(
           heap.sorted.map { case (s, id) =>
             InternalRow(s, id) }.asInstanceOf[Array[Any]])
-        proj(InternalRow(qid, arr))
+        proj(InternalRow(ids(g), arr))
       }
     }
   }

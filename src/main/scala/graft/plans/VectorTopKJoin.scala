@@ -2,11 +2,11 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.types._
-import graft.functions.TopKBuffer
 
 /** Fused vector top-k join: the whole-operator form of
   * `corpus × queries → cosine → top-k` (the reference's `knn_query`,
@@ -16,16 +16,30 @@ import graft.functions.TopKBuffer
   *
   * Physical shape: queries are collected (bounded by contract) and
   * broadcast; each corpus partition is scanned ONCE, maintaining one
-  * bounded heap per query; partials (queries × k per partition) merge in a
-  * single final task. Shuffle volume is partitions × queries × k —
-  * independent of corpus size — and no pair row ever exists.
+  * bounded heap per query; partials (queries × k per partition) merge in
+  * contiguous runs of query ids ([[FusedTopKSupport]]). Shuffle volume is
+  * partitions × queries × k — independent of corpus size — no pair row
+  * ever exists, and the output is ordered by query id.
+  *
+  * Two output shapes:
+  *  - ranked (`gate` = None): `(query_id, rank, vec_id, score)`, the top
+  *    `k` per query, `score` floored at 1e-6 ([[graft.operators.Search.bruteForceTopK]]'s
+  *    contract);
+  *  - gated (`gate` = Some(maxDistance), k = 1): `(query_id, best_id,
+  *    best_score, accepted)`, one row per distinct query id as soon as the
+  *    corpus has a row ([[graft.operators.Search.thresholdRetrieval]]'s
+  *    contract). `accepted` is `1 - sim < maxDistance` on the unfloored
+  *    sim; a query with no scored row (a null `qv`, or only null or NaN
+  *    sims) keeps its row with null `best_id` and `best_score` and
+  *    `accepted = false`.
   */
 case class VectorTopKJoin(
     queries: LogicalPlan,
     corpus: LogicalPlan,
     k: Int,
-    minScore: Double = Double.NegativeInfinity,
-    override val output: Seq[Attribute] = VectorTopKJoin.defaultOutput)
+    minScore: Double,
+    gate: Option[Double],
+    override val output: Seq[Attribute])
   extends BinaryNode {
   override def left: LogicalPlan = queries
   override def right: LogicalPlan = corpus
@@ -38,17 +52,37 @@ case class VectorTopKJoin(
 }
 
 object VectorTopKJoin {
-  def defaultOutput: Seq[Attribute] = Seq(
-    AttributeReference("query_id", LongType, nullable = false)(),
-    AttributeReference("rank", LongType, nullable = false)(),
-    AttributeReference("vec_id", LongType, nullable = false)(),
-    AttributeReference("score", DoubleType, nullable = false)())
+  /** The ranked top-`k` of `queries(query_id, qv)` over `corpus(vec_id,
+    * embedding)`. */
+  def ranked(queries: LogicalPlan, corpus: LogicalPlan, k: Int): VectorTopKJoin =
+    VectorTopKJoin(queries, corpus, k, Double.NegativeInfinity, None, Seq(
+      queryId(queries),
+      AttributeReference("rank", LongType, nullable = false)(),
+      AttributeReference("vec_id", LongType, nullable = false)(),
+      AttributeReference("score", DoubleType, nullable = false)()))
+
+  /** The gated top-1 of each query: the best match, kept when its cosine
+    * distance is below `maxDistance`. */
+  def gated(queries: LogicalPlan, corpus: LogicalPlan,
+            maxDistance: Double): VectorTopKJoin =
+    VectorTopKJoin(queries, corpus, 1, Double.NegativeInfinity, Some(maxDistance), Seq(
+      queryId(queries),
+      AttributeReference("best_id", LongType)(),
+      AttributeReference("best_score", DoubleType)(),
+      AttributeReference("accepted", BooleanType)()))
+
+  /** `query_id` as the node emits it: the queries' type and nullability. */
+  private def queryId(queries: LogicalPlan): Attribute = {
+    val q = queries.output.find(_.name == "query_id").getOrElse(
+      throw new IllegalArgumentException("queries must have a query_id column"))
+    AttributeReference("query_id", q.dataType, q.nullable)()
+  }
 }
 
 object VectorTopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case VectorTopKJoin(q, c, k, min, out) =>
-      VectorTopKJoinExec(planLater(q), planLater(c), k, min, out) :: Nil
+    case VectorTopKJoin(q, c, k, min, gate, out) =>
+      VectorTopKJoinExec(planLater(q), planLater(c), k, min, gate, out) :: Nil
     case _ => Nil
   }
 }
@@ -67,7 +101,7 @@ object PushThresholdIntoVectorTopK
   // because scores are monotone in rank the pruned rows are a rank suffix,
   // so surviving ranks are identical either way.
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case f @ Filter(cond, vtj: VectorTopKJoin) =>
+    case f @ Filter(cond, vtj: VectorTopKJoin) if vtj.gate.isEmpty =>
       val scoreAttr = vtj.output.find(_.name == "score").get
       cond match {
         case GreaterThanOrEqual(a: Attribute, Literal(v: Double, DoubleType))
@@ -86,6 +120,7 @@ case class VectorTopKJoinExec(
     corpus: SparkPlan,
     k: Int,
     minScore: Double,
+    gate: Option[Double],
     override val output: Seq[Attribute])
   extends BinaryExecNode {
 
@@ -96,6 +131,12 @@ case class VectorTopKJoinExec(
   override protected def withNewChildrenInternal(
       l: SparkPlan, r: SparkPlan): VectorTopKJoinExec =
     copy(queries = l, corpus = r)
+
+  override def outputPartitioning: Partitioning =
+    FusedTopKSupport.ordered(output.head, conf.numShufflePartitions)
+  // ranked: by query, then rank; gated: one row per query
+  override def outputOrdering: Seq[SortOrder] =
+    output.take(if (gate.isEmpty) 2 else 1).map(SortOrder(_, Ascending))
 
   private def fieldIndex(plan: SparkPlan, name: String): Int = {
     val i = plan.output.indexWhere(_.name == name)
@@ -110,23 +151,32 @@ case class VectorTopKJoinExec(
     val embIdx = fieldIndex(corpus, "embedding")
 
     // queries side is bounded by contract (a search request batch)
-    val qRows = FusedTopKSupport.collectQueries(queries, qidIdx, qvIdx)
-    val bc = sparkContext.broadcast(qRows)
+    val qs = FusedTopKSupport.collectQueries(queries, qidIdx, qvIdx)
+    val bc = sparkContext.broadcast(qs)
     val kk = k
+    val gt = gate
     val types = output.map(_.dataType).toArray
 
     val partials = FusedTopKSupport.partialHeaps(
-      corpus, bc, vidIdx, embIdx, kk, minScore, emitMarkers = false)
-    // hash-shuffled merge — see FusedTopKSupport for why coalesce(1) is
-    // wrong here. Empty heaps emit nothing (the declarative twin explodes
-    // the per-group array, so empty groups vanish there too).
-    FusedTopKSupport.mergeByQuery(partials,
-      FusedTopKSupport.numMergePartitions(qRows.length, conf.numShufflePartitions),
-      kk) { merged =>
+      corpus, bc, vidIdx, embIdx, kk, minScore, emitMarkers = gt.isDefined)
+    // Empty heaps emit nothing in the ranked shape (the declarative twin
+    // explodes the per-group array, so empty groups vanish there too),
+    // and a row with a null best in the gated shape.
+    FusedTopKSupport.mergeByQuery(partials, qs.ids.length,
+      conf.numShufflePartitions, kk) { merged =>
       val proj = UnsafeProjection.create(types)
-      merged.flatMap { case (qid, heap) =>
-        heap.sorted.iterator.zipWithIndex.map { case ((s, id), r) =>
-          proj(InternalRow(qid, (r + 1).toLong, id, math.floor(s * 1e6) / 1e6))
+      val ids = bc.value.ids
+      import ResidentTopK.floored
+      merged.flatMap { case (g, heap) =>
+        val best = heap.sorted
+        gt match {
+          case None => best.iterator.zipWithIndex.map { case ((s, id), r) =>
+            proj(InternalRow(ids(g), (r + 1).toLong, id, floored(s)))
+          }
+          case Some(maxDistance) => Iterator(proj(best.headOption match {
+            case Some((s, id)) => InternalRow(ids(g), id, floored(s), 1.0 - s < maxDistance)
+            case None => InternalRow(ids(g), null, null, false)
+          }))
         }
       }
     }

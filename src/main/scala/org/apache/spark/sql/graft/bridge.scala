@@ -58,6 +58,21 @@ object bridge {
     results
   }
 
+  /** `t` with every field, array element and map value nullable: the
+    * schema a parquet read infers for data written with `t`
+    * (`DataType.asNullable` is `private[spark]`). */
+  def asNullable(t: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = t.asNullable
+
+  /** Delete `dir` when the JVM exits, with Spark's own temp dirs
+    * (`ShutdownHookManager` is `private[spark]`). */
+  def deleteOnExit(dir: String): Unit =
+    org.apache.spark.util.ShutdownHookManager.registerShutdownDeleteDir(new java.io.File(dir))
+
+  /** Whether `dir` is registered with [[deleteOnExit]]. */
+  def deletedOnExit(dir: String): Boolean =
+    org.apache.spark.util.ShutdownHookManager.hasShutdownDeleteDir(new java.io.File(dir))
+
   /** Analyzed logical plan of a DataFrame. */
   def planOf(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =

@@ -123,4 +123,10 @@ class ArtifactsSpec extends SparkSuite {
       assert(count(a) == 5)
     } finally pool.shutdownNow()
   }
+
+  test("the artifact base is deleted when the JVM exits") {
+    val a = artifact(corpus(3), "exit", new AtomicInteger)
+    assert(a.path.startsWith(Artifacts.base))
+    assert(org.apache.spark.sql.graft.bridge.deletedOnExit(Artifacts.base))
+  }
 }
