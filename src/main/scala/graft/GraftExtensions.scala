@@ -3,16 +3,24 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.graft.bridge
 import graft.functions._
+import graft.plans._
 
-/** SQL integration for graft's native expressions.
+/** Everything graft adds to a session, in one list: its SQL functions,
+  * the strategies of its fused operators and the optimizer rules that plan
+  * into them. [[GraftSession]] installs it when it builds a session,
+  * `withExtensions(new GraftExtensions)` injects it into any other
+  * builder, and every operator that builds a fused node installs it on
+  * sessions graft did not build. So a session plans with all of it from
+  * its first graft call on, whichever queries ran before.
   *
-  * Two paths:
-  *  - session build time: `withExtensions(new GraftExtensions)` on the
-  *    session builder — the library-deployment path;
-  *  - runtime: [[GraftSql.register]] — for sessions built elsewhere (the
-  *    driver's, notebooks).
+  * Left out: `AutoFuseTopK`, opt-in through `Search.installAutoFusion`,
+  * since it rewrites `Search.bruteForceTopK`, the reference the fused
+  * operators are checked against.
   */
 object GraftSql {
 
@@ -58,10 +66,28 @@ object GraftSql {
       s"expected integer literal, got $other")
   }
 
+  /** The fused operators' planner strategies. */
+  val strategies: Seq[SparkStrategy] =
+    Seq(VectorTopKStrategy, ResidentTopKStrategy, VectorTopKAggStrategy)
+
+  /** The rules that rewrite declarative plans into the fused operators. */
+  val optimizerRules: Seq[Rule[LogicalPlan]] =
+    Seq(PushThresholdIntoVectorTopK, AutoFuseWindowTopK)
+
   /** Make all graft functions callable from `spark.sql` in this session. */
   def register(spark: SparkSession): Unit =
     functions.foreach { case (name, b) =>
       bridge.registerFunction(spark, name, b)
+    }
+
+  /** Give `spark` the whole list. Idempotent: a session that plans with
+    * every graft strategy already (installed here, or injected by
+    * [[GraftExtensions]]) costs one look at its planner's strategies. */
+  def install(spark: SparkSession): Unit =
+    if (!strategies.forall(bridge.plannerStrategies(spark).contains)) {
+      register(spark)
+      // strategies last: they are what the check above looks for
+      bridge.addRules(spark, strategies, optimizerRules)
     }
 }
 
@@ -73,8 +99,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo("graft", name),
         builder))
     }
-    e.injectPlannerStrategy(_ => graft.plans.VectorTopKStrategy)
-    e.injectPlannerStrategy(_ => graft.plans.ResidentTopKStrategy)
-    e.injectOptimizerRule(_ => graft.plans.PushThresholdIntoVectorTopK)
+    GraftSql.strategies.foreach(st => e.injectPlannerStrategy(_ => st))
+    GraftSql.optimizerRules.foreach(r => e.injectOptimizerRule(_ => r))
   }
 }

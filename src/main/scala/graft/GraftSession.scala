@@ -20,6 +20,10 @@ import org.apache.spark.sql.SparkSession
   *  - a codegen class cache of [[CodegenCacheEntries]];
   *  - the UI off.
   *
+  * Then it installs graft's functions and planner rules
+  * ([[GraftSql.install]]) before any query runs, so every plan the
+  * session builds sees the same fused operators.
+  *
   * Two environment switches:
   *  - `SPARK_GRAFT_SATURATED=1` disables runtime broadcast promotion, so
   *    every vocabulary join takes its 100 TB shape (shuffle join) at
@@ -70,6 +74,8 @@ object GraftSession {
       builder.config("spark.sql.autoBroadcastJoinThreshold", "-1")
       builder.config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     }
-    builder.getOrCreate()
+    val spark = builder.getOrCreate()
+    GraftSql.install(spark)
+    spark
   }
 }

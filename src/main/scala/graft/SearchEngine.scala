@@ -13,7 +13,7 @@ import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions._
 import graft.functions.TextFunctions.preprocess
-import graft.plans.{ResidentTopK, ResidentTopKStrategy}
+import graft.plans.ResidentTopK
 import graft.sources.Tables
 
 /** API-level facade: the reference's HTTP surface re-expressed as batch
@@ -53,8 +53,8 @@ import graft.sources.Tables
   *
   * '''Request plan: one leaf node, one job.''' A warm [[search]] or
   * [[qaContext]] is one logical node, [[graft.plans.ResidentTopK]], whose
-  * output is the request's final columns; [[ResidentTopKStrategy]]
-  * (installed here at runtime, or by [[GraftExtensions]]) plans it into
+  * output is the request's final columns; [[graft.plans.ResidentTopKStrategy]]
+  * (in [[GraftSql]]'s list, installed when the engine is made) plans it into
   * one exec that ranks the resident blocks and merges the partition heads
   * on the driver in exactly one Spark job, submitted without closure
   * cleaning. No projection, sort or generated code sits above it. The query vector comes from one bound
@@ -67,6 +67,7 @@ import graft.sources.Tables
   * interpreted evaluation, so it is only evaluated under its own lock.
   */
 final class SearchEngine(spark: SparkSession, dir: String, dim: Int = 64) {
+  GraftSql.install(spark)
   private val t = Tables(spark, dir)
 
   private def embedding: Column =
@@ -131,11 +132,9 @@ final class SearchEngine(spark: SparkSession, dir: String, dim: Int = 64) {
   /** One request as one leaf node over the resident blocks: the `n` rows
     * most similar to the query, in `shape`'s final columns. */
   private def request(queryText: String, n: Int,
-                      shape: ResidentTopK.Shape): DataFrame = {
-    bridge.installStrategy(spark, ResidentTopKStrategy)
+                      shape: ResidentTopK.Shape): DataFrame =
     bridge.ofRows(spark,
       ResidentTopK(index().blocks, queryVector(queryText), n, shape))
-  }
 
   /** Reference: controllers/search_controller.py — k capped at 20, query
     * length capped at 500 chars, score = 1 - cosine distance. */

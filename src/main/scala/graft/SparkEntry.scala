@@ -1308,8 +1308,7 @@ object SparkEntry {
     // and the window top-k pattern AUTO-FUSED into VectorTopKAggExec (the
     // user writes plain declarative SQL; PlanSpec gates the fused plan)
     "q_sql_search" -> ((s, dir) => {
-      GraftSql.register(s)
-      Search.installSqlAutoFusion(s)
+      GraftSql.install(s)
       Tables(s, dir, spread = true).embeddings.createOrReplaceTempView("embeddings_v")
       s.sql("""
         WITH q AS (SELECT vec_id AS query_id, embedding AS qv

@@ -110,26 +110,27 @@ object Governance {
     * same code path rather than assuming it.
     *
     * Scale shape: one narrow projection to `(fp, id_bucket,
-    * content_bucket)`, ONE fp-keyed groupBy (map-side combined; the two
-    * count-distincts expand ×2 over bounded bucket domains), one final
-    * single-row aggregate exploded into the two policy rows. Never an
-    * all-pairs step — duplicate classes come from hashing, not joins. */
+    * content_bucket)`, ONE fp-keyed groupBy (map-side combined; a group
+    * spans ≥ 2 buckets iff its min and max bucket differ, so no
+    * count-distinct `Expand`), one final single-row aggregate exploded
+    * into the two policy rows. Never an all-pairs step. */
   def leakageAudit(docs: DataFrame, nBuckets: Int = 10): DataFrame = {
+    def spans(bucket: Column): Column = min(bucket) < max(bucket)
     val grouped = docs
       .select(contentFp(col("text")).as("fp"),
         pmod(col("doc_id"), lit(nBuckets.toLong)).as("bi"))
       .withColumn("bc", pmod(col("fp"), lit(nBuckets.toLong)))
       .groupBy(col("fp"))
       .agg(count(lit(1)).as("n"),
-        countDistinct(col("bi")).as("k_id"),
-        countDistinct(col("bc")).as("k_content"))
+        spans(col("bi")).as("leak_id"),
+        spans(col("bc")).as("leak_content"))
     grouped.agg(
       count(lit(1)).as("n_groups"),
       sum(when(col("n") > 1, 1L).otherwise(0L)).as("n_dup_groups"),
-      sum(when(col("k_id") > 1, 1L).otherwise(0L)).as("gi"),
-      sum(when(col("k_id") > 1, col("n")).otherwise(0L)).as("di"),
-      sum(when(col("k_content") > 1, 1L).otherwise(0L)).as("gc"),
-      sum(when(col("k_content") > 1, col("n")).otherwise(0L)).as("dc"))
+      sum(when(col("leak_id"), 1L).otherwise(0L)).as("gi"),
+      sum(when(col("leak_id"), col("n")).otherwise(0L)).as("di"),
+      sum(when(col("leak_content"), 1L).otherwise(0L)).as("gc"),
+      sum(when(col("leak_content"), col("n")).otherwise(0L)).as("dc"))
       .select(explode(array(
         struct(lit("by_content").as("policy"), col("n_groups"),
           col("n_dup_groups"), col("gc").as("n_leaking_groups"),

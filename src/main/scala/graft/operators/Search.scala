@@ -39,14 +39,12 @@ object Search {
     fused(queries, corpus)(graft.plans.VectorTopKJoin.ranked(_, _, k))
 
   /** `node` over the `(query_id, qv)` and `(vec_id, embedding)` plans of
-    * `queries` and `corpus`, with the fused operator's strategy and
-    * threshold rule installed. */
+    * `queries` and `corpus`, in a session with graft's rules installed. */
   private def fused(queries: DataFrame, corpus: DataFrame)(
       node: (LogicalPlan, LogicalPlan) => LogicalPlan): DataFrame = {
     import org.apache.spark.sql.graft.bridge
     val spark = corpus.sparkSession
-    bridge.installStrategy(spark, graft.plans.VectorTopKStrategy)
-    bridge.installOptimization(spark, graft.plans.PushThresholdIntoVectorTopK)
+    graft.GraftSql.install(spark)
     bridge.ofRows(spark, node(
       bridge.planOf(queries.select(col("query_id"), col("qv"))),
       bridge.planOf(corpus.select(col("vec_id"), col("embedding")))))
@@ -72,38 +70,12 @@ object Search {
   /** Install the auto-fusion rule: after this, the DECLARATIVE
     * [[bruteForceTopK]] pattern (aggregate over cross join) is planned as
     * the fused operator automatically — users keep the DataFrame form,
-    * the engine substitutes [[graft.plans.VectorTopKAggExec]]. */
+    * the engine substitutes [[graft.plans.VectorTopKAggExec]]. The one
+    * opt-in rule, never removed: it rewrites the reference the fused
+    * operators are checked against ([[graft.GraftSql]]). */
   def installAutoFusion(spark: org.apache.spark.sql.SparkSession): Unit = {
-    import org.apache.spark.sql.graft.bridge
-    bridge.installStrategy(spark, graft.plans.VectorTopKAggStrategy)
-    bridge.installOptimization(spark, graft.plans.AutoFuseTopK)
-  }
-
-  /** Uninstall removes only the REWRITE rule. The strategy stays: it is
-    * shared by [[installSqlAutoFusion]]'s window rule (removing it while
-    * the other rule is live leaves un-plannable [[graft.plans.VectorTopKAgg]]
-    * nodes), and with no rule emitting those nodes it is inert. */
-  def uninstallAutoFusion(spark: org.apache.spark.sql.SparkSession): Unit = {
-    import org.apache.spark.sql.graft.bridge
-    bridge.uninstallOptimization(spark, graft.plans.AutoFuseTopK)
-  }
-
-  /** Install auto-fusion for the SQL surface: after this, the WINDOW
-    * top-k pattern (`ROW_NUMBER() OVER (PARTITION BY q ORDER BY
-    * cosine_similarity(...) DESC, id) ... WHERE rn <= k` over a cross
-    * join) is planned as [[graft.plans.VectorTopKAggExec]] — pure
-    * declarative SQL, fused physical operator. */
-  def installSqlAutoFusion(spark: org.apache.spark.sql.SparkSession): Unit = {
-    import org.apache.spark.sql.graft.bridge
-    bridge.installStrategy(spark, graft.plans.VectorTopKAggStrategy)
-    bridge.installOptimization(spark, graft.plans.AutoFuseWindowTopK)
-  }
-
-  /** Rule-only removal — see [[uninstallAutoFusion]] for why the shared
-    * strategy stays installed. */
-  def uninstallSqlAutoFusion(spark: org.apache.spark.sql.SparkSession): Unit = {
-    import org.apache.spark.sql.graft.bridge
-    bridge.uninstallOptimization(spark, graft.plans.AutoFuseWindowTopK)
+    graft.GraftSql.install(spark)
+    org.apache.spark.sql.graft.bridge.addRules(spark, Nil, Seq(graft.plans.AutoFuseTopK))
   }
 
   /** array<struct<score,id>> "topk" column → (query_id, rank, vec_id, score). */
@@ -383,7 +355,8 @@ object Search {
   }
 
   /** Top-1 with acceptance gate: the reference keeps the best match only if
-    * cosine distance < `maxDistance` (qa_service.py:150-168, threshold 0.4).
+    * cosine distance < `maxDistance` (qa_service.py:150-168; by default its
+    * threshold, [[graft.plans.VectorTopKJoin.AcceptDistance]]).
     * `(query_id, best_id, best_score, accepted)`, ordered by query_id.
     *
     * Every distinct query id keeps its row once the corpus has one;
@@ -399,7 +372,8 @@ object Search {
     * query ids, so the final order costs no sort. Beyond collecting the
     * queries, it is one Spark job. */
   def thresholdRetrieval(queries: DataFrame, corpus: DataFrame,
-                         maxDistance: Double = 0.4): DataFrame =
+                         maxDistance: Double = graft.plans.VectorTopKJoin.AcceptDistance)
+      : DataFrame =
     fused(queries, corpus)(graft.plans.VectorTopKJoin.gated(_, _, maxDistance))
       .orderBy(col("query_id"))
 

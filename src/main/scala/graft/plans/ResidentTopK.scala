@@ -127,7 +127,8 @@ object ResidentTopK {
 
   /** `SearchEngine.qaContext`: `(query_id, best_id, best_score, accepted)`,
     * the columns of `Search.thresholdRetrieval` for query 0; `accepted`
-    * is `1 - sim < 0.4` on the unfloored sim. */
+    * is `1 - sim <` [[VectorTopKJoin.AcceptDistance]] on the unfloored
+    * sim. */
   case object Gated extends Shape("qaContext") {
     def attributes(): Seq[Attribute] = Seq(
       AttributeReference("query_id", LongType, nullable = false)(),
@@ -136,7 +137,8 @@ object ResidentTopK {
       AttributeReference("accepted", BooleanType)())
     def rows(hits: Array[Hit]): Array[InternalRow] =
       hits.map { h =>
-        new GenericInternalRow(Array[Any](0L, h.id, floored(h.sim), 1.0 - h.sim < 0.4))
+        new GenericInternalRow(Array[Any](0L, h.id, floored(h.sim),
+          1.0 - h.sim < VectorTopKJoin.AcceptDistance))
       }
   }
 }

@@ -61,6 +61,10 @@ object VectorTopKJoin {
       AttributeReference("vec_id", LongType, nullable = false)(),
       AttributeReference("score", DoubleType, nullable = false)()))
 
+  /** The reference's acceptance gate: a best match is kept when its
+    * cosine distance `1 - sim` is below this (qa_service.py:158). */
+  val AcceptDistance: Double = 0.4
+
   /** The gated top-1 of each query: the best match, kept when its cosine
     * distance is below `maxDistance`. */
   def gated(queries: LogicalPlan, corpus: LogicalPlan,

@@ -1,8 +1,12 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.SparkStrategy
 
 /** Bridge between graft's Catalyst expressions and the public Column API.
   *
@@ -79,39 +83,28 @@ object bridge {
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.analyzed
 
-  /** Install an extra planner strategy at runtime (idempotent). */
-  def installStrategy(spark: org.apache.spark.sql.SparkSession,
-                      strategy: org.apache.spark.sql.execution.SparkStrategy)
-      : Unit = {
-    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!s.experimental.extraStrategies.contains(strategy))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ strategy
-  }
+  /** The planner strategies `spark` plans with: its extensions' and the
+    * ones added at runtime. */
+  def plannerStrategies(spark: SparkSession): Seq[SparkStrategy] =
+    spark.asInstanceOf[classic.SparkSession].sessionState.planner.strategies
 
-  /** The planner strategies a session built with `ext` adds. */
-  def plannerStrategies(ext: org.apache.spark.sql.SparkSessionExtensions,
-                        spark: org.apache.spark.sql.SparkSession)
-      : Seq[org.apache.spark.sql.execution.SparkStrategy] =
-    ext.buildPlannerStrategies(spark)
+  /** The planner strategies and optimizer rules a session built with
+    * `ext` adds. */
+  def injected(ext: SparkSessionExtensions, spark: SparkSession)
+      : (Seq[SparkStrategy], Seq[Rule[LogicalPlan]]) =
+    (ext.buildPlannerStrategies(spark), ext.buildOptimizerRules(spark))
 
-  /** Remove a previously installed optimizer rule. */
-  def uninstallOptimization(spark: org.apache.spark.sql.SparkSession,
-      rule: org.apache.spark.sql.catalyst.rules.Rule[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]): Unit = {
-    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    s.experimental.extraOptimizations =
-      s.experimental.extraOptimizations.filterNot(_ == rule)
-  }
-
-  /** Install an extra optimizer rule at runtime (idempotent). */
-  def installOptimization(spark: org.apache.spark.sql.SparkSession,
-      rule: org.apache.spark.sql.catalyst.rules.Rule[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]): Unit = {
-    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!s.experimental.extraOptimizations.contains(rule))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ rule
+  /** Append to `spark`'s runtime planner strategies and optimizer rules
+    * those of `strategies` and `rules` it lacks. Nothing is ever removed. */
+  def addRules(spark: SparkSession, strategies: Seq[SparkStrategy],
+               rules: Seq[Rule[LogicalPlan]]): Unit = {
+    val x = spark.asInstanceOf[classic.SparkSession].experimental
+    x.synchronized {
+      x.extraOptimizations =
+        x.extraOptimizations ++ rules.filterNot(x.extraOptimizations.contains)
+      x.extraStrategies =
+        x.extraStrategies ++ strategies.filterNot(x.extraStrategies.contains)
+    }
   }
 
   /** Block until all queued listener-bus events are delivered —

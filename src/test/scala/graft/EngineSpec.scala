@@ -224,8 +224,10 @@ class EngineSpec extends SparkSuite {
   test("a session built with GraftExtensions plans a request's leaf node") {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(ext)
-    val strategies = bridge.plannerStrategies(ext, spark)
+    val (strategies, rules) = bridge.injected(ext, spark)
     assert(strategies.contains(graft.plans.ResidentTopKStrategy))
+    // the same list GraftSession installs
+    assert(strategies == GraftSql.strategies && rules == GraftSql.optimizerRules)
     val node = graft.plans.ResidentTopK(spark.sparkContext.emptyRDD,
       Array(1f, 0f), 3, graft.plans.ResidentTopK.Ranked)
     assert(strategies.flatMap(_(node)).map(_.getClass) ==

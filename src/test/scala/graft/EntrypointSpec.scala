@@ -31,6 +31,21 @@ class EntrypointSpec extends SparkSuite {
       s"session builders outside GraftSession: $hits")
   }
 
+  test("one file assigns a session's runtime rules, called by install alone") {
+    def files(re: scala.util.matching.Regex): Seq[String] =
+      Files.walk(Paths.get("src")).iterator().asScala
+        .filter(p => Files.isRegularFile(p) &&
+          re.findFirstIn(new String(Files.readAllBytes(p), "UTF-8")).isDefined)
+        .map(_.getFileName.toString).toSeq.sorted
+    // split so this file does not match itself
+    val assigned = files(("extra" + """(Strategies|Optimizations)\s*[:+]*=(?!=)""").r)
+    assert(assigned == Seq("bridge.scala"), s"rules assigned outside bridge: $assigned")
+    // GraftSql.install, and Search.installAutoFusion's opt-in rule
+    val adders = files(("bridge" + """\.(addRules|install\w*)\(""").r)
+    assert(adders == Seq("GraftExtensions.scala", "Search.scala"),
+      s"rules added outside GraftSql.install: $adders")
+  }
+
   test("Plans per-query dump: one file per key, '#' mapped to '_'") {
     val out = Files.createTempDirectory("graft-plans")
     val names = Seq("q1_agg", "text_tokens", "dedup_shingles#build")

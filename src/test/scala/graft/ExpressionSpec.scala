@@ -264,40 +264,47 @@ class ExpressionSpec extends SparkSuite {
     assert(filtered.collect().toSeq == expect)
   }
 
+  /** A new session with the opt-in AutoFuseTopK rule: the shared session
+    * keeps `bruteForceTopK` as the plain reference plan. */
+  private def autoFused(): org.apache.spark.sql.SparkSession = {
+    val s = spark.newSession()
+    operators.Search.installAutoFusion(s)
+    s
+  }
+
+  /** `(embeddings, its first 6 vectors as queries)` read in `s`. */
+  private def knnInputs(s: org.apache.spark.sql.SparkSession) = {
+    val e = sources.Tables(s, sfDir).embeddings
+    (e, e.filter($"vec_id" < 6)
+      .select($"vec_id".as("query_id"), $"embedding".as("qv")))
+  }
+
   test("AutoFuseTopK rewrites the declarative KNN into the fused operator") {
-    val e = sources.Tables(spark, sfDir).embeddings
-    val queries = e.filter($"vec_id" < 6)
-      .select($"vec_id".as("query_id"), $"embedding".as("qv"))
+    val (e, queries) = knnInputs(spark)
     val expected = operators.Search.bruteForceTopK(queries, e, 4).collect().toSeq
-    operators.Search.installAutoFusion(spark)
-    try {
-      val rewritten = operators.Search.bruteForceTopK(queries, e, 4)
-      val plan = planOf(rewritten)
-      assert(plan.contains("VectorTopKAgg"), plan)
-      assert(rewritten.collect().toSeq == expected)
-    } finally operators.Search.uninstallAutoFusion(spark) // shared session
+    val (ae, aq) = knnInputs(autoFused())
+    val rewritten = operators.Search.bruteForceTopK(aq, ae, 4)
+    val plan = planOf(rewritten)
+    assert(plan.contains("VectorTopKAgg"), plan)
+    assert(rewritten.collect().toSeq == expected)
   }
 
   test("AutoFuseTopK also rewrites the FILTERED declarative KNN") {
     // a metadata predicate below the cross join is just part of the
     // corpus child plan — the rule must still fuse, and the fused result
     // must equal declarative brute force over the pre-filtered corpus
-    val e = sources.Tables(spark, sfDir).embeddings
-    val queries = e.filter($"vec_id" < 6)
-      .select($"vec_id".as("query_id"), $"embedding".as("qv"))
+    val (e, queries) = knnInputs(spark)
     val filtered = e.filter($"label" % 2 === 0)
     val expected = operators.Search.bruteForceTopK(queries, filtered, 4)
       .collect().toSeq
-    operators.Search.installAutoFusion(spark)
-    try {
-      val rewritten = operators.Search.bruteForceTopK(queries, filtered, 4)
-      val plan = planOf(rewritten)
-      assert(plan.contains("VectorTopKAgg"), plan)
-      assert(rewritten.collect().toSeq == expected)
-      // and it agrees with the explicit filtered entry point
-      assert(operators.Search.filteredTopK(queries, e, $"label" % 2 === 0, 4)
-        .collect().toSeq == expected)
-    } finally operators.Search.uninstallAutoFusion(spark)
+    val (ae, aq) = knnInputs(autoFused())
+    val rewritten = operators.Search.bruteForceTopK(aq, ae.filter($"label" % 2 === 0), 4)
+    val plan = planOf(rewritten)
+    assert(plan.contains("VectorTopKAgg"), plan)
+    assert(rewritten.collect().toSeq == expected)
+    // and it agrees with the explicit filtered entry point
+    assert(operators.Search.filteredTopK(queries, e, $"label" % 2 === 0, 4)
+      .collect().toSeq == expected)
   }
 
   test("fused merge distributes for large query batches and stays exact") {
@@ -318,39 +325,43 @@ class ExpressionSpec extends SparkSuite {
   }
 
   test("AutoFuseTopK matches Aggregate on duplicate qids and empty corpus") {
-    val e = sources.Tables(spark, sfDir).embeddings
-    // duplicate query rows: same qid twice → ONE group whose multiset has
-    // every corpus score twice (the top-k keeps duplicated entries)
-    val dupQueries = e.filter($"vec_id" < 3)
-      .select($"vec_id".as("query_id"), $"embedding".as("qv"))
-      .union(e.filter($"vec_id" === 1L)
-        .select($"vec_id".as("query_id"), $"embedding".as("qv")))
-    val emptyCorpus = e.filter($"vec_id" < 0)
-    val nullCorpus = e.limit(5)
-      .select($"vec_id", when(lit(false), $"embedding").as("embedding"))
-    // raw grouped form (no explode — explode would hide empty groups)
-    def grouped(corpus: org.apache.spark.sql.DataFrame) =
-      corpus.crossJoin(broadcast(dupQueries))
-        .select($"query_id", $"vec_id",
-          cosine_similarity($"qv", $"embedding").as("sim"))
-        .groupBy($"query_id")
-        .agg(top_k_by_score($"sim", $"vec_id", 4).as("topk"))
-    def run() = (
-      grouped(e).orderBy($"query_id").collect().toSeq,
-      grouped(emptyCorpus).collect().toSeq,
-      grouped(nullCorpus).orderBy($"query_id").collect().toSeq)
-    val (expDup, expEmpty, expNull) = run()
+    // raw grouped form (no explode — explode would hide empty groups) over
+    // the full, an empty and an all-null corpus, read in `s`
+    def grouped(s: org.apache.spark.sql.SparkSession) = {
+      val e = sources.Tables(s, sfDir).embeddings
+      // duplicate query rows: same qid twice → ONE group whose multiset has
+      // every corpus score twice (the top-k keeps duplicated entries)
+      val dupQueries = e.filter($"vec_id" < 3)
+        .select($"vec_id".as("query_id"), $"embedding".as("qv"))
+        .union(e.filter($"vec_id" === 1L)
+          .select($"vec_id".as("query_id"), $"embedding".as("qv")))
+      val emptyCorpus = e.filter($"vec_id" < 0)
+      val nullCorpus = e.limit(5)
+        .select($"vec_id", when(lit(false), $"embedding").as("embedding"))
+      def topk(corpus: org.apache.spark.sql.DataFrame) =
+        corpus.crossJoin(broadcast(dupQueries))
+          .select($"query_id", $"vec_id",
+            cosine_similarity($"qv", $"embedding").as("sim"))
+          .groupBy($"query_id")
+          .agg(top_k_by_score($"sim", $"vec_id", 4).as("topk"))
+      (topk(e), topk(emptyCorpus), topk(nullCorpus))
+    }
+    def run(s: org.apache.spark.sql.SparkSession) = {
+      val (dup, empty, nulls) = grouped(s)
+      (dup.orderBy($"query_id").collect().toSeq,
+        empty.collect().toSeq,
+        nulls.orderBy($"query_id").collect().toSeq)
+    }
+    val (expDup, expEmpty, expNull) = run(spark)
     assert(expDup.length == 3)     // dup qid collapses into one group
     assert(expEmpty.isEmpty)       // no join rows: no groups
     assert(expNull.length == 3)    // groups exist, arrays empty
-    operators.Search.installAutoFusion(spark)
-    try {
-      assert(planOf(grouped(e)).contains("VectorTopKAgg"), planOf(grouped(e)))
-      val (gotDup, gotEmpty, gotNull) = run()
-      assert(gotDup == expDup)
-      assert(gotEmpty == expEmpty)
-      assert(gotNull == expNull)
-    } finally operators.Search.uninstallAutoFusion(spark)
+    val auto = autoFused()
+    assert(planOf(grouped(auto)._1).contains("VectorTopKAgg"), planOf(grouped(auto)._1))
+    val (gotDup, gotEmpty, gotNull) = run(auto)
+    assert(gotDup == expDup)
+    assert(gotEmpty == expEmpty)
+    assert(gotNull == expNull)
   }
 
   test("nearest_seed matches the struct-min formulation it replaced") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions._
 import graft.operators.Search
@@ -12,31 +12,33 @@ class FusedTopKSpec extends SparkSuite {
 
   private def v(xs: Float*): Array[Float] = xs.toArray
 
-  /** Vectors of mixed lengths, zero, empty, NaN and null. */
-  private lazy val corpus: DataFrame = Seq[(java.lang.Long, Array[Float])](
+  /** Vectors of mixed lengths, zero, empty, NaN and null, in `s`. */
+  private def corpusIn(s: SparkSession): DataFrame = s.createDataFrame(Seq[(java.lang.Long, Array[Float])](
     (1L, v(1f, 1f)), (2L, v(1f, 0f, 0f, 0f)), (3L, v(0.2f, 1f, 0f, 0f)),
     (4L, v(0f, 0f, 0f, 0f)), (5L, v(Float.NaN, 1f, 0f, 0f)), (6L, null),
-    (7L, v(1f, 0f, 5f, 0f, 3f)), (8L, v()), (9L, v(0f, 1f)), (null, v(1f, 0f, 5f, 0f)))
+    (7L, v(1f, 0f, 5f, 0f, 3f)), (8L, v()), (9L, v(0f, 1f)), (null, v(1f, 0f, 5f, 0f))))
     .toDF("vec_id", "embedding")
 
-  private lazy val queries: DataFrame = Seq[(java.lang.Long, Array[Float])](
+  private def queriesIn(s: SparkSession): DataFrame = s.createDataFrame(Seq[(java.lang.Long, Array[Float])](
     (10L, v(1f, 0f, 5f, 0f)), (11L, v(1f, 1f)), (11L, v(0f, 1f)), (12L, v(0f, 0f, 0f, 0f)),
     (13L, null), (14L, v(Float.NaN, 0f, 0f, 0f)), (15L, v(0.5f, 0.5f, 0.5f, 0.5f, 0.5f, 0.5f)),
-    (16L, v(0f, 1f, 0f)))
+    (16L, v(0f, 1f, 0f))))
     .toDF("query_id", "qv")
+
+  private lazy val corpus: DataFrame = corpusIn(spark)
+  private lazy val queries: DataFrame = queriesIn(spark)
 
   test("fusedTopK and auto-fused bruteForceTopK equal the plain plan on mixed, " +
     "zero, NaN and null vectors") {
-    Search.uninstallAutoFusion(spark)
+    // the opt-in rewrite of the reference plan lives in a session of its own
+    val auto = spark.newSession()
+    Search.installAutoFusion(auto)
     Seq(1, 3, 10).foreach { k =>
       val plain = Search.bruteForceTopK(queries, corpus, k).collect().toSeq
       assert(Search.fusedTopK(queries, corpus, k).collect().toSeq == plain, s"fused, k=$k")
-      Search.installAutoFusion(spark)
-      try {
-        val auto = Search.bruteForceTopK(queries, corpus, k)
-        assert(planOf(auto).contains("VectorTopKAgg"), planOf(auto))
-        assert(auto.collect().toSeq == plain, s"auto-fused, k=$k")
-      } finally Search.uninstallAutoFusion(spark)
+      val fused = Search.bruteForceTopK(queriesIn(auto), corpusIn(auto), k)
+      assert(planOf(fused).contains("VectorTopKAgg"), planOf(fused))
+      assert(fused.collect().toSeq == plain, s"auto-fused, k=$k")
     }
     // norms over the common prefix: [1,1] scores 1/√26 ≈ 0.196 against
     // [1,0,5,0], below [1,0,0,0]'s prefix cosine 1/√2

@@ -271,4 +271,46 @@ class PlanAuditSpec extends SparkSuite {
         f.rule == "single-partition-window"),
       PlanDoctor.audit(badJoin).mkString("\n"))
   }
+
+  // Reads the session after the four catalog passes above.
+  test("the catalog leaves the session's planner rules as GraftSession built them") {
+    assert(SparkSuite.rulesAtBuild == ((GraftSql.strategies, GraftSql.optimizerRules)))
+    assert(SparkSuite.runtimeRules(spark) == SparkSuite.rulesAtBuild)
+  }
+
+  test("q_recall_sweep plans the same fused nodes first in a session and after q_sql_search") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.apache.spark.sql.graft.bridge
+    val helper = new AdaptiveSparkPlanHelper {}
+    // fused nodes across every plan `s` executes while `f` runs,
+    // barriers included
+    def fusedNodes[T](s: SparkSession)(f: => T): (Int, T) = {
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new QueryExecutionListener {
+        def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+          n.addAndGet(helper.collect(qe.executedPlan) {
+            case p: plans.VectorTopKAggExec => p
+            case p: plans.VectorTopKJoinExec => p
+            case p: plans.ResidentTopKExec => p
+          }.size)
+        def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      s.listenerManager.register(listener)
+      try {
+        val out = f
+        bridge.drainListenerBus(s)
+        (n.get, out)
+      } finally s.listenerManager.unregister(listener)
+    }
+    val sweep = SparkEntry.queries("q_recall_sweep")
+    val fresh = SparkSuite.freshSession()
+    val (first, firstRows) = fusedNodes(fresh)(sweep(fresh, sfDir).collect().toSeq)
+    SparkEntry.queries("q_sql_search")(spark, sfDir).collect()
+    val (after, afterRows) = fusedNodes(spark)(sweep(spark, sfDir).collect().toSeq)
+    assert(first > 0 && first == after, s"fused nodes: $first first, $after after q_sql_search")
+    assert(firstRows == afterRows)
+  }
 }

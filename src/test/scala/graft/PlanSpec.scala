@@ -20,37 +20,34 @@ class PlanSpec extends SparkSuite {
       s"window pattern not fused:\n${planOf(df)}")
     assert(!planOf(df).contains("CartesianProduct"))
     val fused = df.collect().toSeq
-    try {
-      Search.uninstallSqlAutoFusion(spark)
-      val plain = spark.sql("""
-        WITH q AS (SELECT vec_id AS query_id, embedding AS qv
-                   FROM embeddings_v WHERE vec_id < 3),
-        sims AS (SELECT query_id, vec_id, cosine_similarity(qv, embedding) AS sim
-                 FROM embeddings_v CROSS JOIN q),
-        r AS (SELECT query_id, vec_id, sim,
-               ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, vec_id) AS rn
-              FROM sims)
-        SELECT query_id, CAST(rn AS BIGINT) AS rank, vec_id,
-               floor(sim*1e6)/1e6 AS score
-        FROM r WHERE rn <= 3 ORDER BY query_id, rank""")
-      assert(!planOf(plain).contains("VectorTopKAgg"))
-      assert(plain.collect().toSeq == fused,
-        "fusion must be invisible in the result")
-    } finally Search.installSqlAutoFusion(spark)
+    // the plain plan comes from a new session: graft's functions, no rules
+    val bare = spark.newSession()
+    GraftSql.register(bare)
+    Tables(bare, sfDir, spread = true).embeddings.createOrReplaceTempView("embeddings_v")
+    val plain = bare.sql("""
+      WITH q AS (SELECT vec_id AS query_id, embedding AS qv
+                 FROM embeddings_v WHERE vec_id < 3),
+      sims AS (SELECT query_id, vec_id, cosine_similarity(qv, embedding) AS sim
+               FROM embeddings_v CROSS JOIN q),
+      r AS (SELECT query_id, vec_id, sim,
+             ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, vec_id) AS rn
+            FROM sims)
+      SELECT query_id, CAST(rn AS BIGINT) AS rank, vec_id,
+             floor(sim*1e6)/1e6 AS score
+      FROM r WHERE rn <= 3 ORDER BY query_id, rank""")
+    assert(!planOf(plain).contains("VectorTopKAgg"))
+    assert(plain.collect().toSeq == fused,
+      "fusion must be invisible in the result")
   }
 
   test("SQL auto-fusion skips a window that carries extra columns (q_mmr)") {
     // mmrRerank's candidate window keeps `embedding` beside (qid, vid,
     // sim); fusing it dropped that column, so q_mmr failed whenever
-    // q_sql_search had installed the rule earlier in the session
+    // the window rule was installed
     val mmr = SparkEntry.queries("q_mmr")
-    Search.installSqlAutoFusion(spark)
     val withRule = mmr(spark, sfDir).collect().toSeq
     assert(withRule.nonEmpty)
-    try {
-      Search.uninstallSqlAutoFusion(spark)
-      assert(mmr(spark, sfDir).collect().toSeq == withRule)
-    } finally Search.installSqlAutoFusion(spark)
+    assert(mmr(spark.newSession(), sfDir).collect().toSeq == withRule)
   }
 
   test("selective filter is pushed to the parquet scan (q6)") {

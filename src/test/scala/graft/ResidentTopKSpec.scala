@@ -6,7 +6,7 @@ import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import graft.functions.cosine_similarity
-import graft.plans.{ResidentTopK, ResidentTopKStrategy}
+import graft.plans.ResidentTopK
 
 /** `ResidentTopK` against the operator chain `SearchEngine` served
   * requests with before it: score, drop null ids and null or NaN sims,
@@ -63,7 +63,6 @@ class ResidentTopKSpec extends SparkSuite {
 
   private def node(frame: DataFrame, qv: Array[Float], n: Int,
                    shape: ResidentTopK.Shape): DataFrame = {
-    bridge.installStrategy(spark, ResidentTopKStrategy)
     val blocks = bridge.persisted(frame, StorageLevel.MEMORY_ONLY)
     bridge.ofRows(spark, ResidentTopK(blocks, qv, n, shape))
   }
