@@ -11,8 +11,10 @@ import graft.functions._
 import graft.plans._
 
 /** Everything graft adds to a session, in one list: its SQL functions,
-  * the strategies of its fused operators and the optimizer rules that plan
-  * into them. [[GraftSession]] installs it when it builds a session,
+  * the strategies of its two fused nodes (the batch top-k
+  * [[graft.plans.VectorTopKJoin]], in its ranked, gated and grouped
+  * shapes, and the online leaf [[graft.plans.ResidentTopK]]) and the
+  * optimizer rules that plan into them. [[GraftSession]] installs it when it builds a session,
   * `withExtensions(new GraftExtensions)` injects it into any other
   * builder, and every operator that builds a fused node installs it on
   * sessions graft did not build. So a session plans with all of it from
@@ -67,8 +69,7 @@ object GraftSql {
   }
 
   /** The fused operators' planner strategies. */
-  val strategies: Seq[SparkStrategy] =
-    Seq(VectorTopKStrategy, ResidentTopKStrategy, VectorTopKAggStrategy)
+  val strategies: Seq[SparkStrategy] = Seq(VectorTopKStrategy, ResidentTopKStrategy)
 
   /** The rules that rewrite declarative plans into the fused operators. */
   val optimizerRules: Seq[Rule[LogicalPlan]] =

@@ -1305,8 +1305,9 @@ object SparkEntry {
         .orderBy(col("event_id"))
     }),
     // SQL surface: graft expressions registered into the session registry,
-    // and the window top-k pattern AUTO-FUSED into VectorTopKAggExec (the
-    // user writes plain declarative SQL; PlanSpec gates the fused plan)
+    // and the window top-k pattern AUTO-FUSED into VectorTopKJoin's grouped
+    // shape (the user writes plain declarative SQL; PlanSpec gates the
+    // fused plan)
     "q_sql_search" -> ((s, dir) => {
       GraftSql.install(s)
       Tables(s, dir, spread = true).embeddings.createOrReplaceTempView("embeddings_v")

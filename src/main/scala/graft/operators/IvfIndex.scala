@@ -293,9 +293,7 @@ object IvfIndex {
       .join(broadcast(queries), Seq("query_id"))
       .select(col("query_id"), col("vec_id"),
         cosine_similarity(col("qv"), col("embedding")).as("sim"))
-    Search.explodeTopK(
-      scored.groupBy(col("query_id"))
-        .agg(top_k_by_score(col("sim"), col("vec_id"), k).as("topk")))
+    Search.rankTopK(scored, k)
   }
 
   /** What [[searchPersisted]] keeps of one persisted index between calls:
@@ -383,9 +381,7 @@ object IvfIndex {
       .select(col("query_id"), col("vec_id"),
         cosine_similarity(col("qv"), col("embedding")).as("sim"))
     val maxRows = probes.values.flatten.toSeq.distinct.length.toLong * k
-    Search.explodeTopK(
-        scored.groupBy(col("query_id"))
-          .agg(top_k_by_score(col("sim"), col("vec_id"), k).as("topk")))
+    Search.rankTopK(scored, k)
       .limit(math.min(maxRows, Int.MaxValue.toLong).toInt)
   }
 
@@ -421,9 +417,7 @@ object IvfIndex {
       .select(col("query_id"), col("vec_id"),
         cosine_similarity(col("qv"), col("embedding")).as("sim"))
 
-    Search.explodeTopK(
-      scored.groupBy(col("query_id"))
-        .agg(top_k_by_score(col("sim"), col("vec_id"), k).as("topk")))
+    Search.rankTopK(scored, k)
   }
 
   /** FILTERED IVF search: [[search]] under a metadata predicate on the
@@ -456,9 +450,7 @@ object IvfIndex {
       .join(broadcast(queries), Seq("query_id"))
       .select(col("query_id"), col("vec_id"),
         cosine_similarity(col("qv"), col("embedding")).as("sim"))
-    Search.explodeTopK(
-      scored.groupBy(col("query_id"))
-        .agg(top_k_by_score(col("sim"), col("vec_id"), k).as("topk")))
+    Search.rankTopK(scored, k)
   }
 
   /** IVF search over int8-QUANTIZED posting lists: assignment and probes
@@ -482,9 +474,7 @@ object IvfIndex {
       .join(broadcast(queries), Seq("query_id"))
       .select(col("query_id"), col("vec_id"),
         cosine_similarity(col("qv"), dequantize8(col("qcodes"))).as("sim"))
-    Search.explodeTopK(
-      scored.groupBy(col("query_id"))
-        .agg(top_k_by_score(col("sim"), col("vec_id"), k).as("topk")))
+    Search.rankTopK(scored, k)
   }
 
   /** IVF + product quantization (the classic IVFPQ layout): assignment
@@ -515,9 +505,7 @@ object IvfIndex {
       .join(broadcast(queries), Seq("query_id"))
       .select(col("query_id"), col("vec_id"),
         cosine_similarity(col("qv"), col("embedding")).as("sim"))
-    Search.explodeTopK(
-      scored.groupBy(col("query_id"))
-        .agg(top_k_by_score(col("sim"), col("vec_id"), k).as("topk")))
+    Search.rankTopK(scored, k)
   }
 
   /** Recall@k audit: the one metric an approximate-index user always asks

@@ -172,10 +172,7 @@ object ProductQuantizer {
       .select(col("query_id"), col("vec_id"),
         graft.functions.cosine_similarity(col("qv"), col("embedding"))
           .as("sim"))
-    Search.explodeTopK(
-      exact.groupBy(col("query_id"))
-        .agg(graft.functions.top_k_by_score(col("sim"), col("vec_id"), topK)
-          .as("topk")))
+    Search.rankTopK(exact, topK)
   }
 
   /** [[search]] under Lloyd-TRAINED codebooks: same dataflow, lower

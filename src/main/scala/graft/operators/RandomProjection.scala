@@ -72,10 +72,7 @@ object RandomProjection {
       .select(col("query_id"), col("vec_id"),
         graft.functions.cosine_similarity(col("qv"), col("embedding"))
           .as("sim"))
-    Search.explodeTopK(
-      sims.groupBy(col("query_id"))
-        .agg(graft.functions.top_k_by_score(col("sim"), col("vec_id"), k)
-          .as("topk")))
+    Search.rankTopK(sims, k)
   }
 
   /** recall@k of the projected ranking against exact full-dimension

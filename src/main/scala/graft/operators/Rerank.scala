@@ -160,10 +160,7 @@ object Rerank {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         cosine_similarity(col("qv"), col("embedding")).as("sim"))
-    val sl = Search.explodeTopK(
-      sims.groupBy(col("query_id"))
-        .agg(top_k_by_score(col("sim"), col("vec_id"), shortlist)
-          .as("topk")))
+    val sl = Search.rankTopK(sims, shortlist)
       .select(col("query_id"), col("vec_id"), col("score"))
     val dts = base.select(col("doc_id").as("vec_id"),
       array_distinct(tokens(col("ct"))).as("dt"))

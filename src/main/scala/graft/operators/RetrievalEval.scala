@@ -106,9 +106,7 @@ object RetrievalEval {
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         cosine_similarity(col("qv"), col("embedding")).as("sim"))
-    val dense = Search.explodeTopK(
-      sims.groupBy(col("query_id"))
-        .agg(top_k_by_score(col("sim"), col("vec_id"), fuseDepth).as("topk")))
+    val dense = Search.rankTopK(sims, fuseDepth)
       .select(col("query_id"), col("vec_id").as("doc_id"), col("rank"))
     val fused = Search.rrfFuse(bm, dense, topK = k)
       .select(col("query_id"), col("doc_id"), col("rank"))

@@ -26,9 +26,7 @@ object Search {
     val sims = corpus.crossJoin(broadcast(queries))
       .select(col("query_id"), col("vec_id"),
         cosine_similarity(col("qv"), col("embedding")).as("sim"))
-    explodeTopK(
-      sims.groupBy(col("query_id"))
-        .agg(top_k_by_score(col("sim"), col("vec_id"), k).as("topk")))
+    rankTopK(sims, k)
   }
 
   /** Fused top-k via the custom physical operator
@@ -70,17 +68,21 @@ object Search {
   /** Install the auto-fusion rule: after this, the DECLARATIVE
     * [[bruteForceTopK]] pattern (aggregate over cross join) is planned as
     * the fused operator automatically — users keep the DataFrame form,
-    * the engine substitutes [[graft.plans.VectorTopKAggExec]]. The one
-    * opt-in rule, never removed: it rewrites the reference the fused
-    * operators are checked against ([[graft.GraftSql]]). */
+    * the engine substitutes [[graft.plans.VectorTopKJoin]]'s grouped
+    * shape for the aggregate. The one opt-in rule, never removed: it
+    * rewrites the reference the fused operators are checked against
+    * ([[graft.GraftSql]]). */
   def installAutoFusion(spark: org.apache.spark.sql.SparkSession): Unit = {
     graft.GraftSql.install(spark)
     org.apache.spark.sql.graft.bridge.addRules(spark, Nil, Seq(graft.plans.AutoFuseTopK))
   }
 
-  /** array<struct<score,id>> "topk" column → (query_id, rank, vec_id, score). */
-  private[graft] def explodeTopK(grouped: DataFrame): DataFrame =
-    grouped
+  /** The top `k` rows of each query in `sims(query_id, vec_id, sim)`, by
+    * sim desc, then vec_id asc → (query_id, rank, vec_id, score), `score`
+    * floored at 1e-6, ordered by query and rank. */
+  private[graft] def rankTopK(sims: DataFrame, k: Int): DataFrame =
+    sims.groupBy(col("query_id"))
+      .agg(top_k_by_score(col("sim"), col("vec_id"), k).as("topk"))
       .select(col("query_id"), posexplode(col("topk")).as(Seq("pos", "hit")))
       .select(
         col("query_id"),
@@ -100,9 +102,7 @@ object Search {
     val sims = quantizedCorpus.crossJoin(broadcast(queries))
       .select(col("query_id"), col("vec_id"),
         cosine_similarity(col("qv"), dequantize8(col("qcodes"))).as("sim"))
-    explodeTopK(
-      sims.groupBy(col("query_id"))
-        .agg(top_k_by_score(col("sim"), col("vec_id"), k).as("topk")))
+    rankTopK(sims, k)
   }
 
   /** Sign fingerprint: one bit per dimension (`v[i] > 0`), packed
@@ -179,9 +179,7 @@ object Search {
       .join(broadcast(queries), Seq("query_id"))
       .select(col("query_id"), col("vec_id"),
         cosine_similarity(col("qv"), col("embedding")).as("sim"))
-    explodeTopK(
-      sims.groupBy(col("query_id"))
-        .agg(top_k_by_score(col("sim"), col("vec_id"), k).as("topk")))
+    rankTopK(sims, k)
   }
 
   /** Hard-negative mining for contrastive training: per anchor, the
@@ -200,9 +198,7 @@ object Search {
         cosine_similarity(col("qv"), col("embedding")).as("sim"))
       .filter(col("vec_id") =!= col("query_id") &&
         col("sim") < dupThreshold)
-    explodeTopK(
-      sims.groupBy(col("query_id"))
-        .agg(top_k_by_score(col("sim"), col("vec_id"), k).as("topk")))
+    rankTopK(sims, k)
   }
 
   /** Maximal-marginal-relevance re-ranking — diversified retrieval, the
@@ -356,7 +352,7 @@ object Search {
 
   /** Top-1 with acceptance gate: the reference keeps the best match only if
     * cosine distance < `maxDistance` (qa_service.py:150-168; by default its
-    * threshold, [[graft.plans.VectorTopKJoin.AcceptDistance]]).
+    * threshold, [[graft.plans.TopKRows.AcceptDistance]]).
     * `(query_id, best_id, best_score, accepted)`, ordered by query_id.
     *
     * Every distinct query id keeps its row once the corpus has one;
@@ -372,7 +368,7 @@ object Search {
     * query ids, so the final order costs no sort. Beyond collecting the
     * queries, it is one Spark job. */
   def thresholdRetrieval(queries: DataFrame, corpus: DataFrame,
-                         maxDistance: Double = graft.plans.VectorTopKJoin.AcceptDistance)
+                         maxDistance: Double = graft.plans.TopKRows.AcceptDistance)
       : DataFrame =
     fused(queries, corpus)(graft.plans.VectorTopKJoin.gated(_, _, maxDistance))
       .orderBy(col("query_id"))

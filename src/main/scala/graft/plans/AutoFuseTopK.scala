@@ -1,44 +1,22 @@
 package graft.plans
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeReference, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.Cross
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BinaryNode, Join, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.physical.Partitioning
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.types._
 import graft.functions.{CosineSimilarity, TopKByScore}
-
-/** Logical node for a fused `group-by-query top_k_by_score(cosine)` — the
-  * target of [[AutoFuseTopK]]. Output REUSES the attributes of the
-  * Aggregate it replaces, so the rest of the plan is untouched. */
-case class VectorTopKAgg(
-    queries: LogicalPlan, corpus: LogicalPlan,
-    qid: Attribute, qv: Attribute, vid: Attribute, emb: Attribute,
-    k: Int, override val output: Seq[Attribute])
-  extends BinaryNode {
-  override def left: LogicalPlan = queries
-  override def right: LogicalPlan = corpus
-  override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
-    outputSet
-  override protected def withNewChildrenInternal(
-      l: LogicalPlan, r: LogicalPlan): VectorTopKAgg =
-    copy(queries = l, corpus = r)
-}
 
 /** Optimizer rule: rewrite the declarative pattern
   * {{{
   * Aggregate([qid], [qid, top_k_by_score(cosine(qv, emb), vid, k)],
   *   Join(corpus, queries, Cross))   // either side order
   * }}}
-  * into [[VectorTopKAgg]] — one corpus scan with per-query bounded heaps
-  * instead of materializing |corpus| × |queries| rows through the
-  * aggregate. Users write the natural DataFrame form; the engine plans
-  * the fused operator. */
+  * into [[VectorTopKJoin]]'s grouped shape — one corpus scan with
+  * per-query bounded heaps instead of materializing |corpus| × |queries|
+  * rows through the aggregate. Users write the natural DataFrame form;
+  * the engine plans the fused operator. */
 object AutoFuseTopK extends Rule[LogicalPlan] {
   import org.apache.spark.sql.catalyst.expressions.Expression
   import org.apache.spark.sql.catalyst.plans.logical.Project
@@ -92,23 +70,8 @@ object AutoFuseTopK extends Rule[LogicalPlan] {
           if passthroughOk && agg.output.length == 2 &&
             agg.output.head.dataType == LongType &&
             agg.output(1).dataType.isInstanceOf[ArrayType] =>
-        (resolve(cos.left), resolve(cos.right)) match {
-          case (x: Attribute, y: Attribute) =>
-            val (queriesSide, corpusSide) =
-              if (join.left.outputSet.contains(gidA)) (join.left, join.right)
-              else (join.right, join.left)
-            val (qvA, embA) =
-              if (queriesSide.outputSet.contains(x)) (x, y) else (y, x)
-            val ok = queriesSide.outputSet.contains(gidA) &&
-              queriesSide.outputSet.contains(qvA) &&
-              corpusSide.outputSet.contains(embA) &&
-              corpusSide.outputSet.contains(vidA)
-            if (ok)
-              VectorTopKAgg(queriesSide, corpusSide, gidA, qvA, vidA, embA,
-                k, agg.output)
-            else agg
-          case _ => agg
-        }
+        VectorTopKJoin.grouped(join, gidA, vidA, resolve(cos.left),
+          resolve(cos.right), k, agg.output).getOrElse(agg)
       case _ => agg
     }
   }
@@ -122,9 +85,10 @@ object AutoFuseTopK extends Rule[LogicalPlan] {
   *     Project(..., cosine_similarity(qv, emb) AS sim, ...,
   *       Join(corpus, queries, Cross))))
   * }}}
-  * — into [[VectorTopKAgg]] + posexplode + a projection that rebuilds the
-  * (qid, vid, sim, rn) attributes under their ORIGINAL exprIds, so the
-  * rest of the plan (the user's floor/cast/sort) is untouched. This is
+  * — into [[VectorTopKJoin]]'s grouped shape + posexplode + a projection
+  * that rebuilds the (qid, vid, sim, rn) attributes under their ORIGINAL
+  * exprIds, under the original filter, so the rest of the plan (the
+  * user's floor/cast/sort) is untouched and still knows `rn <= k`. This is
   * how `spark.sql("... ROW_NUMBER() OVER ... WHERE rn <= k")` plans the
   * fused operator without the user ever naming it.
   *
@@ -183,113 +147,28 @@ object AutoFuseWindowTopK extends Rule[LogicalPlan] {
           case al @ Alias(cos: CosineSimilarity, _)
               if al.exprId == sim.exprId => cos
         }
-        cosOpt match {
-          case Some(cos) => (cos.left, cos.right) match {
-            case (x: Attribute, y: Attribute) =>
-              val (queriesSide, corpusSide) =
-                if (join.left.outputSet.contains(qid)) (join.left, join.right)
-                else (join.right, join.left)
-              val (qvA, embA) =
-                if (queriesSide.outputSet.contains(x)) (x, y) else (y, x)
-              val ok = queriesSide.outputSet.contains(qid) &&
-                queriesSide.outputSet.contains(qvA) &&
-                corpusSide.outputSet.contains(vid) &&
-                corpusSide.outputSet.contains(embA)
-              if (!ok) f
-              else {
-                val topk = AttributeReference("topk",
-                  ArrayType(hitType, containsNull = false),
-                  nullable = false)()
-                val fused = VectorTopKAgg(queriesSide, corpusSide,
-                  qid, qvA, vid, embA, k, Seq(qid, topk))
-                val pos = AttributeReference("pos", IntegerType,
-                  nullable = false)()
-                val hit = AttributeReference("hit", hitType,
-                  nullable = false)()
-                val gen = Generate(PosExplode(topk),
-                  unrequiredChildIndex = Seq(1), outer = false,
-                  qualifier = None, generatorOutput = Seq(pos, hit),
-                  child = fused)
-                Project(Seq(
-                  qid,
-                  Alias(GetStructField(hit, 1, Some("id")),
-                    vid.name)(exprId = vid.exprId),
-                  Alias(GetStructField(hit, 0, Some("score")),
-                    sim.name)(exprId = sim.exprId),
-                  Alias(Add(pos, Literal(1)),
-                    rnAttr.name)(exprId = rnAttr.exprId)), gen)
-              }
-            case _ => f
-          }
-          case None => f
-        }
+        val topk = AttributeReference("topk",
+          ArrayType(hitType, containsNull = false), nullable = false)()
+        cosOpt.flatMap(cos => VectorTopKJoin.grouped(join, qid, vid,
+            cos.left, cos.right, k, Seq(qid, topk))).map { fused =>
+          val pos = AttributeReference("pos", IntegerType, nullable = false)()
+          val hit = AttributeReference("hit", hitType, nullable = false)()
+          val gen = Generate(PosExplode(topk),
+            unrequiredChildIndex = Seq(1), outer = false,
+            qualifier = None, generatorOutput = Seq(pos, hit),
+            child = fused)
+          // the filter passes every row; it stays for the constraint it
+          // carries, which lets plans above it prune the filters it implies
+          f.copy(child = Project(Seq(
+            qid,
+            Alias(GetStructField(hit, 1, Some("id")),
+              vid.name)(exprId = vid.exprId),
+            Alias(GetStructField(hit, 0, Some("score")),
+              sim.name)(exprId = sim.exprId),
+            Alias(Add(pos, Literal(1)),
+              rnAttr.name)(exprId = rnAttr.exprId)), gen))
+        }.getOrElse(f)
       case _ => f
-    }
-  }
-}
-
-object VectorTopKAggStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case n: VectorTopKAgg =>
-      VectorTopKAggExec(planLater(n.queries), planLater(n.corpus),
-        n.qid, n.qv, n.vid, n.emb, n.k, n.output) :: Nil
-    case _ => Nil
-  }
-}
-
-/** Physical fused group-by-query top-k: emits (qid, array<struct<score,
-  * id>>) — the exact rows the replaced Aggregate would have produced
-  * (raw scores, best-first order as [[TopKAggregate]] eval does). */
-case class VectorTopKAggExec(
-    queries: SparkPlan, corpus: SparkPlan,
-    qid: Attribute, qv: Attribute, vid: Attribute, emb: Attribute,
-    k: Int, override val output: Seq[Attribute])
-  extends BinaryExecNode {
-
-  override def left: SparkPlan = queries
-  override def right: SparkPlan = corpus
-  override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
-    org.apache.spark.sql.catalyst.expressions.AttributeSet(output)
-  override protected def withNewChildrenInternal(
-      l: SparkPlan, r: SparkPlan): VectorTopKAggExec =
-    copy(queries = l, corpus = r)
-
-  override def outputPartitioning: Partitioning =
-    FusedTopKSupport.ordered(output.head, conf.numShufflePartitions)
-  override def outputOrdering: Seq[SortOrder] = Seq(SortOrder(output.head, Ascending))
-
-  override protected def doExecute(): RDD[InternalRow] = {
-    val qidIdx = queries.output.indexWhere(_.exprId == qid.exprId)
-    val qvIdx = queries.output.indexWhere(_.exprId == qv.exprId)
-    val vidIdx = corpus.output.indexWhere(_.exprId == vid.exprId)
-    val embIdx = corpus.output.indexWhere(_.exprId == emb.exprId)
-    require(qidIdx >= 0 && qvIdx >= 0 && vidIdx >= 0 && embIdx >= 0)
-
-    val qs = FusedTopKSupport.collectQueries(queries, qidIdx, qvIdx)
-    val bc = sparkContext.broadcast(qs)
-    val kk = k
-    val types = output.map(_.dataType).toArray
-
-    // markers preserve exact Aggregate group semantics: one output row per
-    // DISTINCT qid (duplicate query rows feed one shared group, exactly as
-    // the cross join they replace duplicates every corpus score into the
-    // group's multiset), a row with an EMPTY array when the corpus has
-    // rows but none scored (all-null, or a null qv), and NO row when the
-    // corpus is empty (the join under the Aggregate would produce no
-    // groups at all).
-    val partials = FusedTopKSupport.partialHeaps(
-      corpus, bc, vidIdx, embIdx, kk, Double.NegativeInfinity,
-      emitMarkers = true)
-    FusedTopKSupport.mergeByQuery(partials, qs.ids.length,
-      conf.numShufflePartitions, kk) { merged =>
-      val proj = UnsafeProjection.create(types)
-      val ids = bc.value.ids
-      merged.map { case (g, heap) =>
-        val arr = new GenericArrayData(
-          heap.sorted.map { case (s, id) =>
-            InternalRow(s, id) }.asInstanceOf[Array[Any]])
-        proj(InternalRow(ids(g), arr))
-      }
     }
   }
 }

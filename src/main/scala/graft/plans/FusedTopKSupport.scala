@@ -10,8 +10,8 @@ import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.SparkPlan
 import graft.functions.{CosineSimilarity, TopKBuffer}
 
-/** Shared scan/merge machinery for the two fused top-k physical operators
-  * ([[VectorTopKJoinExec]], [[VectorTopKAggExec]]).
+/** The scan and merge of the fused batch top-k ([[VectorTopKJoinExec]]),
+  * shared by its ranked, gated and grouped shapes.
   *
   * Queries: collected on the driver (bounded by contract) and grouped by
   * query id. The distinct ids, sorted ascending with null first, number
@@ -78,9 +78,9 @@ private[graft] object FusedTopKSupport {
     * The markers let the merge reproduce exact group-by semantics: a
     * group exists for every query as soon as the corpus has ANY row (even
     * an all-null one), and emits an empty top-k — while a truly empty
-    * corpus produces no groups at all. Ranked [[VectorTopKJoinExec]]
-    * output does not need them (its contract explodes the array, so
-    * empty groups vanish anyway). */
+    * corpus produces no groups at all. The ranked shape does not need
+    * them (its contract explodes the array, so empty groups vanish
+    * anyway). */
   def partialHeaps(
       corpus: SparkPlan,
       bc: Broadcast[Queries],

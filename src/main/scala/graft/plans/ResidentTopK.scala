@@ -100,10 +100,6 @@ object ResidentTopK {
       top.result.iterator
     }
 
-  /** `score` and `best_score`: `floor(sim * 1e6) / 1e6` as Spark computes
-    * it, a long floor, then a double divide. */
-  def floored(sim: Double): Double = math.floor(sim * 1e6).toLong.toDouble / 1e6
-
   /** A request's final columns and the row each ranked hit becomes. */
   sealed abstract class Shape(val name: String) extends Serializable {
     def attributes(): Seq[Attribute]
@@ -121,14 +117,13 @@ object ResidentTopK {
       AttributeReference("description", StringType)())
     def rows(hits: Array[Hit]): Array[InternalRow] =
       hits.zipWithIndex.map { case (h, i) =>
-        new GenericInternalRow(Array[Any]((i + 1).toLong, h.id, floored(h.sim), h.text))
+        new GenericInternalRow(Array[Any]((i + 1).toLong, h.id, TopKRows.floored(h.sim), h.text))
       }
   }
 
   /** `SearchEngine.qaContext`: `(query_id, best_id, best_score, accepted)`,
-    * the columns of `Search.thresholdRetrieval` for query 0; `accepted`
-    * is `1 - sim <` [[VectorTopKJoin.AcceptDistance]] on the unfloored
-    * sim. */
+    * the columns of `Search.thresholdRetrieval` for query 0, gated at
+    * [[TopKRows.AcceptDistance]]. */
   case object Gated extends Shape("qaContext") {
     def attributes(): Seq[Attribute] = Seq(
       AttributeReference("query_id", LongType, nullable = false)(),
@@ -136,10 +131,7 @@ object ResidentTopK {
       AttributeReference("best_score", DoubleType)(),
       AttributeReference("accepted", BooleanType)())
     def rows(hits: Array[Hit]): Array[InternalRow] =
-      hits.map { h =>
-        new GenericInternalRow(Array[Any](0L, h.id, floored(h.sim),
-          1.0 - h.sim < VectorTopKJoin.AcceptDistance))
-      }
+      hits.map(h => TopKRows.gated(0L, Some((h.sim, h.id)), TopKRows.AcceptDistance))
   }
 }
 

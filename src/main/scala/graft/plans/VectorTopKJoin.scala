@@ -2,9 +2,10 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, SortOrder, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, Expression, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.Partitioning
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.types._
 
@@ -21,80 +22,153 @@ import org.apache.spark.sql.types._
   * partitions × queries × k — independent of corpus size — no pair row
   * ever exists, and the output is ordered by query id.
   *
-  * Two output shapes:
-  *  - ranked (`gate` = None): `(query_id, rank, vec_id, score)`, the top
-  *    `k` per query, `score` floored at 1e-6 ([[graft.operators.Search.bruteForceTopK]]'s
-  *    contract);
-  *  - gated (`gate` = Some(maxDistance), k = 1): `(query_id, best_id,
-  *    best_score, accepted)`, one row per distinct query id as soon as the
-  *    corpus has a row ([[graft.operators.Search.thresholdRetrieval]]'s
-  *    contract). `accepted` is `1 - sim < maxDistance` on the unfloored
-  *    sim; a query with no scored row (a null `qv`, or only null or NaN
-  *    sims) keeps its row with null `best_id` and `best_score` and
-  *    `accepted = false`.
-  */
+  * The node scores `qv` of `queries` against `emb` of `corpus`, keyed by
+  * `qid` and `vid`, and emits one of three output shapes
+  * ([[VectorTopKJoin.Shape]]). */
 case class VectorTopKJoin(
     queries: LogicalPlan,
     corpus: LogicalPlan,
+    qid: Attribute, qv: Attribute, vid: Attribute, emb: Attribute,
     k: Int,
     minScore: Double,
-    gate: Option[Double],
+    shape: VectorTopKJoin.Shape,
     override val output: Seq[Attribute])
   extends BinaryNode {
   override def left: LogicalPlan = queries
   override def right: LogicalPlan = corpus
   // output attrs are generated by this operator, not drawn from children
-  override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
-    outputSet
+  override def producedAttributes: AttributeSet = outputSet
+  override protected def stringArgs: Iterator[Any] =
+    VectorTopKJoin.stringArgs(k, minScore, shape, output)
   override protected def withNewChildrenInternal(
       l: LogicalPlan, r: LogicalPlan): VectorTopKJoin =
     copy(queries = l, corpus = r)
 }
 
 object VectorTopKJoin {
+
+  /** What the node emits for each distinct query id, from its best
+    * hits (sim desc, then id asc). */
+  sealed abstract class Shape extends Serializable {
+    /** Leading output columns the rows are sorted by. */
+    def sortedBy: Int = 1
+    /** Whether a query with no scored row still gets its row once the
+      * corpus has one ([[FusedTopKSupport.partialHeaps]]'s markers). */
+    def markers: Boolean = true
+    /** The shape's own argument in the plan string. */
+    def args: Seq[Any]
+    def rows(qid: Any, best: Array[(Double, Long)]): Iterator[InternalRow]
+  }
+
+  /** `(query_id, rank, vec_id, score)`: the top `k` per query, `score`
+    * floored at 1e-6 ([[graft.operators.Search.bruteForceTopK]]'s
+    * contract). A query with no scored row has no rows, as in the
+    * declarative twin, which explodes the per-group array. */
+  case object Ranked extends Shape {
+    override def sortedBy: Int = 2
+    override def markers: Boolean = false
+    def args: Seq[Any] = Nil
+    def rows(qid: Any, best: Array[(Double, Long)]): Iterator[InternalRow] =
+      best.iterator.zipWithIndex.map { case ((s, id), r) =>
+        InternalRow(qid, (r + 1).toLong, id, TopKRows.floored(s))
+      }
+  }
+
+  /** `(query_id, best_id, best_score, accepted)` with `k = 1`, one row
+    * per query ([[graft.operators.Search.thresholdRetrieval]]'s contract,
+    * [[TopKRows.gated]]). */
+  final case class Gated(maxDistance: Double) extends Shape {
+    def args: Seq[Any] = Seq(maxDistance)
+    def rows(qid: Any, best: Array[(Double, Long)]): Iterator[InternalRow] =
+      Iterator(TopKRows.gated(qid, best.headOption, maxDistance))
+  }
+
+  /** `(qid, array<struct<score, id>>)`: the exact rows of the
+    * `top_k_by_score` Aggregate the auto-fusion rules replace, raw scores
+    * best first. Duplicate query rows feed one shared group, as the cross
+    * join duplicates every corpus score into the group's multiset; a
+    * query with no scored row gets an EMPTY array; an empty corpus gives
+    * no rows, as the join under the Aggregate gives no groups. */
+  case object Grouped extends Shape {
+    def args: Seq[Any] = Seq("grouped")
+    def rows(qid: Any, best: Array[(Double, Long)]): Iterator[InternalRow] =
+      Iterator(InternalRow(qid, new GenericArrayData(
+        best.map { case (s, id) => InternalRow(s, id) }.asInstanceOf[Array[Any]])))
+  }
+
+  private[plans] def stringArgs(k: Int, minScore: Double, shape: Shape,
+                                output: Seq[Attribute]): Iterator[Any] =
+    (Seq[Any](k, minScore) ++ shape.args :+ output).iterator
+
   /** The ranked top-`k` of `queries(query_id, qv)` over `corpus(vec_id,
     * embedding)`. */
   def ranked(queries: LogicalPlan, corpus: LogicalPlan, k: Int): VectorTopKJoin =
-    VectorTopKJoin(queries, corpus, k, Double.NegativeInfinity, None, Seq(
+    named(queries, corpus, k, Ranked, Seq(
       queryId(queries),
       AttributeReference("rank", LongType, nullable = false)(),
       AttributeReference("vec_id", LongType, nullable = false)(),
       AttributeReference("score", DoubleType, nullable = false)()))
 
-  /** The reference's acceptance gate: a best match is kept when its
-    * cosine distance `1 - sim` is below this (qa_service.py:158). */
-  val AcceptDistance: Double = 0.4
-
   /** The gated top-1 of each query: the best match, kept when its cosine
     * distance is below `maxDistance`. */
   def gated(queries: LogicalPlan, corpus: LogicalPlan,
             maxDistance: Double): VectorTopKJoin =
-    VectorTopKJoin(queries, corpus, 1, Double.NegativeInfinity, Some(maxDistance), Seq(
+    named(queries, corpus, 1, Gated(maxDistance), Seq(
       queryId(queries),
       AttributeReference("best_id", LongType)(),
       AttributeReference("best_score", DoubleType)(),
       AttributeReference("accepted", BooleanType)()))
 
+  /** The grouped top-`k` of a cross `join` that ranks `vid` by the cosine
+    * of operands `x` and `y`, per `qid`; `output` is the `(qid, topk)`
+    * pair it stands for. None unless one side holds `qid` and one of the
+    * operands, and the other side `vid` and the other operand. */
+  def grouped(join: Join, qid: Attribute, vid: Attribute, x: Expression,
+              y: Expression, k: Int, output: Seq[Attribute]): Option[VectorTopKJoin] =
+    (x, y) match {
+      case (x: Attribute, y: Attribute) =>
+        val (queries, corpus) =
+          if (join.left.outputSet.contains(qid)) (join.left, join.right)
+          else (join.right, join.left)
+        val (qv, emb) = if (queries.outputSet.contains(x)) (x, y) else (y, x)
+        if (queries.outputSet.contains(qid) && queries.outputSet.contains(qv) &&
+            corpus.outputSet.contains(vid) && corpus.outputSet.contains(emb))
+          Some(VectorTopKJoin(queries, corpus, qid, qv, vid, emb, k,
+            Double.NegativeInfinity, Grouped, output))
+        else None
+      case _ => None
+    }
+
+  private def named(queries: LogicalPlan, corpus: LogicalPlan, k: Int,
+                    shape: Shape, output: Seq[Attribute]): VectorTopKJoin =
+    VectorTopKJoin(queries, corpus, column(queries, "query_id"),
+      column(queries, "qv"), column(corpus, "vec_id"),
+      column(corpus, "embedding"), k, Double.NegativeInfinity, shape, output)
+
+  private def column(plan: LogicalPlan, name: String): Attribute =
+    plan.output.find(_.name == name).getOrElse(
+      throw new IllegalArgumentException(s"the fused top-k needs a $name column"))
+
   /** `query_id` as the node emits it: the queries' type and nullability. */
   private def queryId(queries: LogicalPlan): Attribute = {
-    val q = queries.output.find(_.name == "query_id").getOrElse(
-      throw new IllegalArgumentException("queries must have a query_id column"))
+    val q = column(queries, "query_id")
     AttributeReference("query_id", q.dataType, q.nullable)()
   }
 }
 
 object VectorTopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case VectorTopKJoin(q, c, k, min, gate, out) =>
-      VectorTopKJoinExec(planLater(q), planLater(c), k, min, gate, out) :: Nil
+    case n: VectorTopKJoin =>
+      VectorTopKJoinExec(planLater(n.queries), planLater(n.corpus),
+        n.qid, n.qv, n.vid, n.emb, n.k, n.minScore, n.shape, n.output) :: Nil
     case _ => Nil
   }
 }
 
-/** Optimizer rule: fold `Filter(score >= θ)` into the fused operator so
-  * below-threshold candidates never enter the heaps or the partial
-  * shuffle — the batch form of the reference's "keep the hit only when
-  * cosine distance < 0.4" gate (qa_service.py:158). */
+/** Optimizer rule: fold `Filter(score >= θ)` over the ranked shape into
+  * the fused operator so below-threshold candidates never enter the heaps
+  * or the partial shuffle — the batch form of the reference's "keep the
+  * hit only when cosine distance < 0.4" gate (qa_service.py:158). */
 object PushThresholdIntoVectorTopK
     extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
   import org.apache.spark.sql.catalyst.expressions.{GreaterThan, GreaterThanOrEqual, Literal}
@@ -105,14 +179,14 @@ object PushThresholdIntoVectorTopK
   // because scores are monotone in rank the pruned rows are a rank suffix,
   // so surviving ranks are identical either way.
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case f @ Filter(cond, vtj: VectorTopKJoin) if vtj.gate.isEmpty =>
-      val scoreAttr = vtj.output.find(_.name == "score").get
+    case f @ Filter(cond, vtj: VectorTopKJoin) if vtj.shape == VectorTopKJoin.Ranked =>
+      val score = vtj.output(3) // (query_id, rank, vec_id, score)
       cond match {
         case GreaterThanOrEqual(a: Attribute, Literal(v: Double, DoubleType))
-            if a.semanticEquals(scoreAttr) =>
+            if a.semanticEquals(score) =>
           f.copy(child = vtj.copy(minScore = math.max(vtj.minScore, v)))
         case GreaterThan(a: Attribute, Literal(v: Double, DoubleType))
-            if a.semanticEquals(scoreAttr) =>
+            if a.semanticEquals(score) =>
           f.copy(child = vtj.copy(minScore = math.max(vtj.minScore, v)))
         case _ => f
       }
@@ -122,67 +196,48 @@ object PushThresholdIntoVectorTopK
 case class VectorTopKJoinExec(
     queries: SparkPlan,
     corpus: SparkPlan,
+    qid: Attribute, qv: Attribute, vid: Attribute, emb: Attribute,
     k: Int,
     minScore: Double,
-    gate: Option[Double],
+    shape: VectorTopKJoin.Shape,
     override val output: Seq[Attribute])
   extends BinaryExecNode {
 
   override def left: SparkPlan = queries
   override def right: SparkPlan = corpus
-  override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
-    org.apache.spark.sql.catalyst.expressions.AttributeSet(output)
+  override def producedAttributes: AttributeSet = AttributeSet(output)
+  override protected def stringArgs: Iterator[Any] =
+    VectorTopKJoin.stringArgs(k, minScore, shape, output)
   override protected def withNewChildrenInternal(
       l: SparkPlan, r: SparkPlan): VectorTopKJoinExec =
     copy(queries = l, corpus = r)
 
   override def outputPartitioning: Partitioning =
     FusedTopKSupport.ordered(output.head, conf.numShufflePartitions)
-  // ranked: by query, then rank; gated: one row per query
   override def outputOrdering: Seq[SortOrder] =
-    output.take(if (gate.isEmpty) 2 else 1).map(SortOrder(_, Ascending))
+    output.take(shape.sortedBy).map(SortOrder(_, Ascending))
 
-  private def fieldIndex(plan: SparkPlan, name: String): Int = {
-    val i = plan.output.indexWhere(_.name == name)
-    require(i >= 0, s"${plan.nodeName} must produce column '$name'")
+  private def ordinal(plan: SparkPlan, a: Attribute): Int = {
+    val i = plan.output.indexWhere(_.exprId == a.exprId)
+    require(i >= 0, s"${plan.nodeName} must produce $a")
     i
   }
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val qidIdx = fieldIndex(queries, "query_id")
-    val qvIdx = fieldIndex(queries, "qv")
-    val vidIdx = fieldIndex(corpus, "vec_id")
-    val embIdx = fieldIndex(corpus, "embedding")
-
     // queries side is bounded by contract (a search request batch)
-    val qs = FusedTopKSupport.collectQueries(queries, qidIdx, qvIdx)
+    val qs = FusedTopKSupport.collectQueries(queries, ordinal(queries, qid),
+      ordinal(queries, qv))
     val bc = sparkContext.broadcast(qs)
-    val kk = k
-    val gt = gate
+    val (kk, sh) = (k, shape)
     val types = output.map(_.dataType).toArray
 
-    val partials = FusedTopKSupport.partialHeaps(
-      corpus, bc, vidIdx, embIdx, kk, minScore, emitMarkers = gt.isDefined)
-    // Empty heaps emit nothing in the ranked shape (the declarative twin
-    // explodes the per-group array, so empty groups vanish there too),
-    // and a row with a null best in the gated shape.
+    val partials = FusedTopKSupport.partialHeaps(corpus, bc,
+      ordinal(corpus, vid), ordinal(corpus, emb), kk, minScore, sh.markers)
     FusedTopKSupport.mergeByQuery(partials, qs.ids.length,
       conf.numShufflePartitions, kk) { merged =>
       val proj = UnsafeProjection.create(types)
       val ids = bc.value.ids
-      import ResidentTopK.floored
-      merged.flatMap { case (g, heap) =>
-        val best = heap.sorted
-        gt match {
-          case None => best.iterator.zipWithIndex.map { case ((s, id), r) =>
-            proj(InternalRow(ids(g), (r + 1).toLong, id, floored(s)))
-          }
-          case Some(maxDistance) => Iterator(proj(best.headOption match {
-            case Some((s, id)) => InternalRow(ids(g), id, floored(s), 1.0 - s < maxDistance)
-            case None => InternalRow(ids(g), null, null, false)
-          }))
-        }
-      }
+      merged.flatMap { case (g, heap) => sh.rows(ids(g), heap.sorted).map(proj) }
     }
   }
 }

@@ -46,6 +46,23 @@ class EntrypointSpec extends SparkSuite {
       s"rules added outside GraftSql.install: $adders")
   }
 
+  test("every strategy and optimizer rule object in src/main is in GraftSql's list") {
+    val main = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+      .map(p => new String(Files.readAllBytes(p), "UTF-8")).mkString("\n")
+    def objects(parent: String): Set[String] =
+      ("""object\s+(\w+)\s+extends\s+(?:[\w.]+\.)?""" + parent).r
+        .findAllMatchIn(main).map(_.group(1)).toSet
+    def names(xs: Seq[AnyRef]): Set[String] =
+      xs.map(_.getClass.getSimpleName.stripSuffix("$")).toSet
+    assert(objects("""SparkStrategy\b""") == names(GraftSql.strategies))
+    // the one exception: AutoFuseTopK is opt-in (Search.installAutoFusion)
+    // because it rewrites the reference the fused nodes are checked against
+    val rules = names(GraftSql.optimizerRules)
+    assert(!rules.contains("AutoFuseTopK"))
+    assert(objects("""Rule\[LogicalPlan\]""") == rules + "AutoFuseTopK")
+  }
+
   test("Plans per-query dump: one file per key, '#' mapped to '_'") {
     val out = Files.createTempDirectory("graft-plans")
     val names = Seq("q1_agg", "text_tokens", "dedup_shingles#build")

@@ -285,7 +285,7 @@ class ExpressionSpec extends SparkSuite {
     val (ae, aq) = knnInputs(autoFused())
     val rewritten = operators.Search.bruteForceTopK(aq, ae, 4)
     val plan = planOf(rewritten)
-    assert(plan.contains("VectorTopKAgg"), plan)
+    assert(plan.contains("VectorTopKJoin") && plan.contains("grouped"), plan)
     assert(rewritten.collect().toSeq == expected)
   }
 
@@ -300,7 +300,7 @@ class ExpressionSpec extends SparkSuite {
     val (ae, aq) = knnInputs(autoFused())
     val rewritten = operators.Search.bruteForceTopK(aq, ae.filter($"label" % 2 === 0), 4)
     val plan = planOf(rewritten)
-    assert(plan.contains("VectorTopKAgg"), plan)
+    assert(plan.contains("VectorTopKJoin") && plan.contains("grouped"), plan)
     assert(rewritten.collect().toSeq == expected)
     // and it agrees with the explicit filtered entry point
     assert(operators.Search.filteredTopK(queries, e, $"label" % 2 === 0, 4)
@@ -357,7 +357,8 @@ class ExpressionSpec extends SparkSuite {
     assert(expEmpty.isEmpty)       // no join rows: no groups
     assert(expNull.length == 3)    // groups exist, arrays empty
     val auto = autoFused()
-    assert(planOf(grouped(auto)._1).contains("VectorTopKAgg"), planOf(grouped(auto)._1))
+    val autoPlan = planOf(grouped(auto)._1)
+    assert(autoPlan.contains("VectorTopKJoin") && autoPlan.contains("grouped"), autoPlan)
     val (gotDup, gotEmpty, gotNull) = run(auto)
     assert(gotDup == expDup)
     assert(gotEmpty == expEmpty)

@@ -292,7 +292,6 @@ class PlanAuditSpec extends SparkSuite {
       val listener = new QueryExecutionListener {
         def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
           n.addAndGet(helper.collect(qe.executedPlan) {
-            case p: plans.VectorTopKAggExec => p
             case p: plans.VectorTopKJoinExec => p
             case p: plans.ResidentTopKExec => p
           }.size)

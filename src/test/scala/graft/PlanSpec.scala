@@ -12,11 +12,11 @@ class PlanSpec extends SparkSuite {
 
   test("SQL window top-k auto-fuses into the bounded-heap operator") {
     // the user writes plain ROW_NUMBER-over-cross-join SQL; the engine
-    // must plan VectorTopKAggExec (one corpus scan, per-query heaps) and
-    // return exactly the rows the declarative window form returns
+    // must plan VectorTopKJoin's grouped shape (one corpus scan, per-query
+    // heaps) and return exactly the rows the declarative window form returns
     import org.apache.spark.sql.functions._
     val df = SparkEntry.queries("q_sql_search")(spark, sfDir)
-    assert(planOf(df).contains("VectorTopKAgg"),
+    assert(planOf(df).contains("VectorTopKJoin") && planOf(df).contains("grouped"),
       s"window pattern not fused:\n${planOf(df)}")
     assert(!planOf(df).contains("CartesianProduct"))
     val fused = df.collect().toSeq
@@ -35,9 +35,28 @@ class PlanSpec extends SparkSuite {
       SELECT query_id, CAST(rn AS BIGINT) AS rank, vec_id,
              floor(sim*1e6)/1e6 AS score
       FROM r WHERE rn <= 3 ORDER BY query_id, rank""")
-    assert(!planOf(plain).contains("VectorTopKAgg"))
+    assert(!planOf(plain).contains("VectorTopKJoin"))
     assert(plain.collect().toSeq == fused,
       "fusion must be invisible in the result")
+  }
+
+  test("SQL window top-k fusion keeps the rn <= k constraint") {
+    // the rewrite replaces the Window, not its filter: plans above it
+    // still know rn <= k, so they prune the filters it implies
+    import org.apache.spark.sql.catalyst.expressions.{LessThanOrEqual, Literal}
+    Tables(spark, sfDir, spread = true).embeddings.createOrReplaceTempView("embeddings_v")
+    val plan = spark.sql("""
+      WITH q AS (SELECT vec_id AS query_id, embedding AS qv
+                 FROM embeddings_v WHERE vec_id < 3),
+      sims AS (SELECT query_id, vec_id, cosine_similarity(qv, embedding) AS sim
+               FROM embeddings_v CROSS JOIN q)
+      SELECT * FROM (SELECT query_id, vec_id, sim,
+        ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, vec_id) AS rn
+        FROM sims) WHERE rn <= 3""").queryExecution.optimizedPlan
+    assert(plan.exists(_.isInstanceOf[plans.VectorTopKJoin]), plan)
+    val rn = plan.output.find(_.name == "rn").get
+    assert(plan.constraints.exists(_.semanticEquals(LessThanOrEqual(rn, Literal(3)))),
+      plan.constraints)
   }
 
   test("SQL auto-fusion skips a window that carries extra columns (q_mmr)") {
