@@ -1546,9 +1546,9 @@ object SparkEntry {
        |   CASE WHEN doc_id % 7 = 0 THEN text || ' refreshed content v2' ELSE text END AS text
        |  FROM documents WHERE doc_id % 5 <> 0),
        | bf AS (SELECT doc_id, source, ${Oracles.polyFp("s")} AS fp
-       |  FROM (SELECT doc_id, source, ${normSql("text")} AS s FROM b0)),
+       |  FROM (SELECT doc_id, source, ${Oracles.normSql("text")} AS s FROM b0)),
        | cf AS (SELECT doc_id, source, ${Oracles.polyFp("s")} AS fp
-       |  FROM (SELECT doc_id, source, ${normSql("text")} AS s FROM c0)),
+       |  FROM (SELECT doc_id, source, ${Oracles.normSql("text")} AS s FROM c0)),
        | j AS (SELECT coalesce(cf.source, bf.source) AS source,
        |   CASE WHEN bf.fp IS NULL THEN 'added'
        |        WHEN cf.fp IS NULL THEN 'removed'
@@ -1581,11 +1581,6 @@ object SparkEntry {
           .otherwise(col("text")).as("text"))
     (base, cur)
   }
-
-  /** The reference text-normalization chain as DuckDB SQL (mirrors
-    * [[graft.functions.TextFunctions.preprocess]]; shared with the
-    * hash-replay oracles in [[Oracles]]). */
-  private def normSql(in: String): String = Oracles.normSql(in)
 
   /** Shared impressions replay for the implicit-feedback oracles
     * (q_position_bias / q_click_model): the sessionize chain restricted
@@ -1649,20 +1644,6 @@ object SparkEntry {
       .orderBy(col("label"))
   }
 
-  /** FNV-1a 64 over a SQL list of byte values, in HUGEINT-mod-2^64
-    * arithmetic (DuckDB errors on BIGINT overflow where the JVM wraps;
-    * xor is applied on the low byte only, so it stays in BIGINT range). */
-  private def fnvSql(byteList: String): String =
-    s"list_reduce(list_prepend(14695981039346656037::HUGEINT, $byteList), " +
-      "(acc, x) -> ((acc - acc % 256 + CAST(xor(CAST(acc % 256 AS BIGINT), " +
-      "CAST(x AS BIGINT)) AS HUGEINT)) * 1099511628211::HUGEINT) " +
-      "% 18446744073709551616::HUGEINT)"
-
-  /** Unsigned-HUGEINT → signed-BIGINT reinterpretation. */
-  private def signedSql(u: String): String =
-    s"CAST(CASE WHEN $u >= 9223372036854775808::HUGEINT " +
-      s"THEN $u - 18446744073709551616::HUGEINT ELSE $u END AS BIGINT)"
-
   /** The shared chunk-vector replay chain `n0 → tok → b0 → g → … → cvec`
     * (64/48 token chunks, FNV-bucketed hash_embed, REAL-normalized) —
     * one definition serving the q_rag_search / q_maxsim / q_context_pack
@@ -1670,14 +1651,14 @@ object SparkEntry {
     * edit to the replay must not be able to diverge between them). `g`
     * carries `n` for consumers that derive per-chunk token costs. */
   private def chunkVecCtes: String =
-    s"""n0 AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),
+    s"""n0 AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),
        | tok AS (SELECT doc_id, CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END AS toks FROM n0),
        | b0 AS (SELECT doc_id, toks, len(toks) AS n FROM tok WHERE len(toks) > 0),
        | g AS (SELECT doc_id, unnest(range(0, n, 48)) AS start, toks, n FROM b0),
        | ctok AS (SELECT doc_id*4294967296 + start//48 AS vec_id,
        |    unnest(list_slice(toks, start+1, start+64)) AS tk FROM g),
-       | chh AS (SELECT vec_id, ((${signedSql(
-          fnvSql("list_transform(string_split(tk,''), c -> unicode(c)::HUGEINT)"))} % 64)+64)%64 AS bucket
+       | chh AS (SELECT vec_id, ((${Oracles.signed(
+          Oracles.fnv("list_transform(string_split(tk,''), c -> unicode(c)::HUGEINT)"))} % 64)+64)%64 AS bucket
        |   FROM ctok WHERE tk <> ''),
        | ccnt AS (SELECT vec_id, bucket, COUNT(*) AS c FROM chh GROUP BY 1,2),
        | cnrm AS (SELECT vec_id, sqrt(SUM(c*c)) AS nr FROM ccnt GROUP BY 1),
@@ -1693,12 +1674,12 @@ object SparkEntry {
     * decontaminate_semantic oracles (the `minhashPairsCte` factoring
     * rule: an edit to the replay must not diverge between them). */
   private def docVecCtes: String =
-    s"""n0 AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),
+    s"""n0 AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),
        | tok AS (SELECT doc_id, CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END AS toks FROM n0),
        | b0 AS (SELECT doc_id, toks FROM tok WHERE len(toks) > 0),
        | dtk AS (SELECT doc_id, unnest(toks) AS tk FROM b0),
-       | dhh AS (SELECT doc_id, ((${signedSql(
-          fnvSql("list_transform(string_split(tk,''), c -> unicode(c)::HUGEINT)"))} % 64)+64)%64 AS bucket
+       | dhh AS (SELECT doc_id, ((${Oracles.signed(
+          Oracles.fnv("list_transform(string_split(tk,''), c -> unicode(c)::HUGEINT)"))} % 64)+64)%64 AS bucket
        |   FROM dtk WHERE tk <> ''),
        | dcnt AS (SELECT doc_id, bucket, COUNT(*) AS c FROM dhh GROUP BY 1,2),
        | dnrm AS (SELECT doc_id, sqrt(SUM(c*c)) AS nr FROM dcnt GROUP BY 1),
@@ -1713,8 +1694,8 @@ object SparkEntry {
     * mm_search oracle's text tower. */
   private def queryVecCtes: String =
     s"""qtok AS (SELECT doc_id AS query_id, unnest(toks) AS tk FROM b0 WHERE doc_id < 3),
-       | qhh AS (SELECT query_id, ((${signedSql(
-          fnvSql("list_transform(string_split(tk,''), c -> unicode(c)::HUGEINT)"))} % 64)+64)%64 AS bucket
+       | qhh AS (SELECT query_id, ((${Oracles.signed(
+          Oracles.fnv("list_transform(string_split(tk,''), c -> unicode(c)::HUGEINT)"))} % 64)+64)%64 AS bucket
        |   FROM qtok WHERE tk <> ''),
        | qcnt AS (SELECT query_id, bucket, COUNT(*) AS c FROM qhh GROUP BY 1,2),
        | qnrm AS (SELECT query_id, sqrt(SUM(c*c)) AS nr FROM qcnt GROUP BY 1),
@@ -1733,7 +1714,7 @@ object SparkEntry {
   private def mediaVecCtes: String =
     s""" u0 AS (SELECT doc_id,
        |   CASE WHEN length(text)=0 THEN 14695981039346656037::HUGEINT
-       |        ELSE ${fnvSql("list_transform(string_split(text,''), c -> unicode(c)::HUGEINT)")} END AS u
+       |        ELSE ${Oracles.fnv("list_transform(string_split(text,''), c -> unicode(c)::HUGEINT)")} END AS u
        |  FROM documents),
        | xb AS (SELECT doc_id, r.i,
        |   CAST((u // ([1::HUGEINT, 256::HUGEINT, 65536::HUGEINT, 16777216::HUGEINT,
@@ -1767,7 +1748,7 @@ object SparkEntry {
     * the engine's early stop). */
   private def bpeCtes(rounds: Int): String = {
     val head = new StringBuilder
-    head ++= s"WITH n0 AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),\n"
+    head ++= s"WITH n0 AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),\n"
     head ++= " tok AS (SELECT doc_id, CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END AS toks FROM n0),\n"
     head ++= " tokq AS (SELECT unnest(toks) AS tk FROM tok),\n"
     head ++= " f1 AS (SELECT tk AS tk0, tk, COUNT(*) AS f FROM tokq GROUP BY 1, 2)"
@@ -2031,7 +2012,7 @@ object SparkEntry {
     * df computation, so corpus statistics are untouched. */
   private def bm25Cte(excludeSelf: Boolean = false): String = {
     val selfFilter = if (excludeSelf) " WHERE query_id <> doc_id" else ""
-    s""" tkn AS (SELECT doc_id, ${normSql("text")} AS nt FROM documents),
+    s""" tkn AS (SELECT doc_id, ${Oracles.normSql("text")} AS nt FROM documents),
        | dlt AS (SELECT doc_id,
        |    CASE WHEN nt = '' THEN 0 ELSE len(string_split(nt, ' ')) END AS dl,
        |    string_split(nt, ' ') AS toks FROM tkn),
@@ -2460,7 +2441,7 @@ $rounds
            | j AS (SELECT d.source, tq.doc_id, tq.quality_score
            |   FROM tq JOIN documents d USING (doc_id)),
            | keyed AS (SELECT source, doc_id, quality_score,
-           |    -ln(greatest(CAST(${signedSql(fnvSql("list_transform(string_split(CAST(doc_id AS VARCHAR),''), c -> unicode(c)::HUGEINT)"))} AS DOUBLE)
+           |    -ln(greatest(CAST(${Oracles.signed(Oracles.fnv("list_transform(string_split(CAST(doc_id AS VARCHAR),''), c -> unicode(c)::HUGEINT)"))} AS DOUBLE)
            |        / 18446744073709551616.0 + 0.5,
            |      1.0 / 18446744073709551616.0)) / (quality_score + 0.0001) AS k
            |   FROM j),
@@ -2563,7 +2544,7 @@ $rounds
       // (split, source) doc count + RAW character volume
       "q_split_assign" ->
         s"""WITH f AS (SELECT doc_id, source, text, ${Oracles.polyFp("s")} AS fp
-           |  FROM (SELECT doc_id, source, text, ${normSql("text")} AS s FROM documents)),
+           |  FROM (SELECT doc_id, source, text, ${Oracles.normSql("text")} AS s FROM documents)),
            | sp AS (SELECT source, length(text) AS len,
            |   CASE WHEN ((fp % 10) + 10) % 10 <= 7 THEN 'train'
            |        WHEN ((fp % 10) + 10) % 10 <= 8 THEN 'val'
@@ -2607,12 +2588,12 @@ $rounds
       // keying), whitespace token counts on normalized text, nShards
       // rows + 1-row totals
       "q_shard_balance" -> {
-        val u = fnvSql("list_transform(string_split(CAST(doc_id AS VARCHAR),''), c -> unicode(c)::HUGEINT)")
-        s"""WITH n0 AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),
+        val u = Oracles.fnv("list_transform(string_split(CAST(doc_id AS VARCHAR),''), c -> unicode(c)::HUGEINT)")
+        s"""WITH n0 AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),
            | t AS (SELECT doc_id,
            |   CASE WHEN len(trim(s))=0 THEN 0 ELSE len(string_split(s,' ')) END AS ntok
            |  FROM n0),
-           | sh AS (SELECT ((${signedSql(u)} % 16) + 16) % 16 AS shard_id, ntok FROM t),
+           | sh AS (SELECT ((${Oracles.signed(u)} % 16) + 16) % 16 AS shard_id, ntok FROM t),
            | per AS (SELECT shard_id, COUNT(*) AS n_docs,
            |   CAST(SUM(ntok) AS BIGINT) AS n_tokens FROM sh GROUP BY 1),
            | tot AS (SELECT SUM(n_tokens) AS tt FROM per)
@@ -2652,7 +2633,7 @@ $rounds
            |  UNION ALL
            |  SELECT doc_id + 1000003 AS doc_id, text FROM documents WHERE doc_id % 4 = 0),
            | f AS (SELECT doc_id, ${Oracles.polyFp("s")} AS fp
-           |  FROM (SELECT doc_id, ${normSql("text")} AS s FROM u)),
+           |  FROM (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM u)),
            | g AS (SELECT fp, COUNT(*) AS n,
            |   COUNT(DISTINCT ((doc_id % 10) + 10) % 10) AS k_id,
            |   COUNT(DISTINCT ((fp % 10) + 10) % 10) AS k_content
@@ -2674,7 +2655,7 @@ $rounds
       // set probed by the test side, per-test-doc novelty
       "q_ngram_novelty" ->
         s"""WITH f AS (SELECT doc_id, s, ${Oracles.polyFp("s")} AS fp
-           |  FROM (SELECT doc_id, ${normSql("text")} AS s FROM documents)),
+           |  FROM (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents)),
            | sp AS (SELECT doc_id, s,
            |   CASE WHEN ((fp % 10) + 10) % 10 <= 7 THEN 'train'
            |        WHEN ((fp % 10) + 10) % 10 <= 8 THEN 'val'
@@ -2825,7 +2806,7 @@ $rounds
   private def ordersProfileSketchSql(k: Int): String = {
     def hashOf(strExpr: String): String =
       s"CASE WHEN length($strExpr)=0 THEN 14695981039346656037::HUGEINT ELSE " +
-        fnvSql(s"list_transform(string_split($strExpr,''), c -> unicode(c)::HUGEINT)") +
+        Oracles.fnv(s"list_transform(string_split($strExpr,''), c -> unicode(c)::HUGEINT)") +
         " END"
     def one(nm: String, expr: String, isNum: Boolean): String = {
       val sExpr = if (isNum) s"CAST($expr AS VARCHAR)" else expr
@@ -2844,7 +2825,7 @@ $rounds
          |     ELSE ${k - 1}::HUGEINT * 18446744073709551616::HUGEINT // (SELECT kv FROM kk) END AS BIGINT)) AS est_distinct,
          |  (WITH d AS (SELECT DISTINCT ${hashOf(sExpr)} AS u FROM orders WHERE $expr IS NOT NULL),
          |    kk AS (SELECT u AS kv FROM (SELECT u, ROW_NUMBER() OVER (ORDER BY u) AS rn FROM d) WHERE rn = $k)
-         |   SELECT coalesce(${signedSql("(SELECT kv FROM kk)")}, 0)) AS kth_min,
+         |   SELECT coalesce(${Oracles.signed("(SELECT kv FROM kk)")}, 0)) AS kth_min,
          |  $mins
          |FROM orders""".stripMargin
     }
@@ -3568,7 +3549,7 @@ $rounds
          |   CASE WHEN nt = '' THEN 0 ELSE len(string_split(nt, ' ')) END AS w,
          |   greatest(len(regexp_extract_all(text, '[.!?]')), 1) AS s,
          |   len(regexp_extract_all(lower(text), '[aeiou]+')) AS y
-         |  FROM (SELECT source, text, ${normSql("text")} AS nt FROM documents)),
+         |  FROM (SELECT source, text, ${Oracles.normSql("text")} AS nt FROM documents)),
          | a AS (SELECT source, COUNT(*) AS n_docs, CAST(SUM(w) AS BIGINT) AS w_sum,
          |    CAST(SUM(s) AS BIGINT) AS s_sum, CAST(SUM(y) AS BIGINT) AS y_sum
          |   FROM d GROUP BY 1),
@@ -4089,10 +4070,10 @@ $rounds
     // KMV sketch replayed exactly: same FNV hashes (HUGEINT), same k-th
     // smallest distinct unsigned value, same integer-division estimator
     "q_distinct_sketch" ->
-      (s"""WITH n AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),
           | tok AS (SELECT doc_id, unnest(CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END) AS tk FROM n),
           | h AS (SELECT ((doc_id % 4) + 4) % 4 AS shard,
-          |   ${fnvSql("list_transform(string_split(tk,''), c -> unicode(c)::HUGEINT)")} AS u
+          |   ${Oracles.fnv("list_transform(string_split(tk,''), c -> unicode(c)::HUGEINT)")} AS u
           |  FROM tok WHERE tk <> ''),
           | d AS (SELECT DISTINCT shard, u FROM h),
           | r AS (SELECT shard, u, ROW_NUMBER() OVER (PARTITION BY shard ORDER BY u) AS rn FROM d),
@@ -4101,7 +4082,7 @@ $rounds
           |SELECT a.shard, a.n_tokens, a.exact_distinct,
           | CAST(CASE WHEN kth.kv IS NULL THEN a.exact_distinct::HUGEINT
           |      ELSE 255::HUGEINT * 18446744073709551616::HUGEINT // kth.kv END AS BIGINT) AS est_distinct,
-          | coalesce(${signedSql("kth.kv")}, 0) AS kth_min
+          | coalesce(${Oracles.signed("kth.kv")}, 0) AS kth_min
           |FROM agg a LEFT JOIN kth ON a.shard = kth.shard ORDER BY a.shard""").stripMargin,
     // the bloom-pruned join's oracle is the PLAIN join: a bloom filter
     // has no false negatives, so pruning must be invisible in the result
@@ -4115,11 +4096,11 @@ $rounds
     // "d:" || token, same d×w grid counts, same min-over-rows estimate
     "q_cms_topk" -> {
       def bucketSql(strExpr: String): String = {
-        val h = signedSql(fnvSql(
+        val h = Oracles.signed(Oracles.fnv(
           s"list_transform(string_split($strExpr,''), c -> unicode(c)::HUGEINT)"))
         s"((($h) % 1024) + 1024) % 1024"
       }
-      s"""WITH n AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),
+      s"""WITH n AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),
          | tk AS (SELECT unnest(CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END) AS tok FROM n),
          | t2 AS (SELECT tok FROM tk WHERE tok <> ''),
          | hd AS (SELECT tok, d, ${bucketSql("CAST(d AS VARCHAR)||':'||tok")} AS bucket FROM t2, range(4) r(d)),
@@ -4221,13 +4202,13 @@ $rounds
     // boilerplate coverage replayed: distinct 5-grams as FNV hashes,
     // document frequency, per-doc boilerplate fraction
     "text_boilerplate" ->
-      (s"""WITH n AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),
           | tok AS (SELECT doc_id, CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END AS toks FROM n),
           | g AS (SELECT doc_id, unnest(list_distinct(
           |   CASE WHEN len(toks) < 5 THEN []::VARCHAR[]
           |        ELSE list_transform(range(1, len(toks)-3), i -> toks[i]||' '||toks[i+1]||' '||toks[i+2]||' '||toks[i+3]||' '||toks[i+4]) END)) AS gram
           |  FROM tok),
-          | ghx AS (SELECT doc_id, ${signedSql(fnvSql("list_transform(string_split(gram,''), c -> unicode(c)::HUGEINT)"))} AS gh FROM g),
+          | ghx AS (SELECT doc_id, ${Oracles.signed(Oracles.fnv("list_transform(string_split(gram,''), c -> unicode(c)::HUGEINT)"))} AS gh FROM g),
           | dfq AS (SELECT gh, COUNT(*) AS df FROM ghx GROUP BY 1),
           | per AS (SELECT ghx.doc_id, COUNT(*) AS n_grams,
           |    COUNT(*) FILTER (WHERE dfq.df >= 3) AS n_boiler
@@ -4398,7 +4379,7 @@ $rounds
         | LEFT JOIN scanned ON scanned.nprobe = ps.nprobe
         |ORDER BY 1""".stripMargin,
     "dedup_jaccard" ->
-      s"""WITH tok AS (SELECT doc_id, string_split(${normSql("text")}, ' ') AS toks FROM documents),
+      s"""WITH tok AS (SELECT doc_id, string_split(${Oracles.normSql("text")}, ' ') AS toks FROM documents),
          | sh AS (SELECT doc_id, unnest(list_distinct(
          |   CASE WHEN len(toks) < 3 THEN []::VARCHAR[]
          |        ELSE list_transform(range(1, len(toks)-1), i -> toks[i]||' '||toks[i+1]||' '||toks[i+2]) END)) AS sh
@@ -4416,7 +4397,7 @@ $rounds
     // within-batch minDf=1 cap are invisible at oracle scale (no df
     // crosses the cap), so the replay is the plain split intersection
     "dedup_jaccard_incremental" ->
-      s"""WITH tok AS (SELECT doc_id, string_split(${normSql("text")}, ' ') AS toks FROM documents),
+      s"""WITH tok AS (SELECT doc_id, string_split(${Oracles.normSql("text")}, ' ') AS toks FROM documents),
          | sh AS (SELECT doc_id, unnest(list_distinct(
          |   CASE WHEN len(toks) < 3 THEN []::VARCHAR[]
          |        ELSE list_transform(range(1, len(toks)-1), i -> toks[i]||' '||toks[i+1]||' '||toks[i+2]) END)) AS sh
@@ -4434,7 +4415,7 @@ $rounds
     // grouping must agree or the gate trips), df per shingle, log2
     // buckets via binary-string length, HUGEINT pair mass + one DIV
     "dedup_df_profile" ->
-      s"""WITH tok AS (SELECT doc_id, string_split(${normSql("text")}, ' ') AS toks FROM documents),
+      s"""WITH tok AS (SELECT doc_id, string_split(${Oracles.normSql("text")}, ' ') AS toks FROM documents),
          | sh AS (SELECT doc_id, unnest(list_distinct(
          |   CASE WHEN len(toks) < 3 THEN []::VARCHAR[]
          |        ELSE list_transform(range(1, len(toks)-1), i -> toks[i]||' '||toks[i+1]||' '||toks[i+2]) END)) AS sh
@@ -4451,7 +4432,7 @@ $rounds
          |      ELSE 0.0 END AS pair_share
          |FROM b CROSS JOIN t ORDER BY df_bucket""".stripMargin,
     "dedup_containment" ->
-      s"""WITH tok AS (SELECT doc_id, string_split(${normSql("text")}, ' ') AS toks FROM documents),
+      s"""WITH tok AS (SELECT doc_id, string_split(${Oracles.normSql("text")}, ' ') AS toks FROM documents),
          | sh AS (SELECT doc_id, unnest(list_distinct(
          |   CASE WHEN len(toks) < 3 THEN []::VARCHAR[]
          |        ELSE list_transform(range(1, len(toks)-1), i -> toks[i]||' '||toks[i+1]||' '||toks[i+2]) END)) AS sh
@@ -4467,7 +4448,7 @@ $rounds
          |WHERE rn = 1 ORDER BY doc_id""".stripMargin,
     "dedup_windows" ->
       s"""WITH tok AS (SELECT doc_id, CASE WHEN len(trim(n))=0 THEN []::VARCHAR[] ELSE string_split(n,' ') END AS toks
-         |   FROM (SELECT doc_id, ${normSql("text")} AS n FROM documents)),
+         |   FROM (SELECT doc_id, ${Oracles.normSql("text")} AS n FROM documents)),
          | base AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tok,
          |   CAST(greatest(len(toks)-4, 0) AS BIGINT) AS n_windows FROM tok),
          | ws AS (SELECT doc_id, pos,
@@ -4489,7 +4470,7 @@ $rounds
     // span drops; text rebuilt from surviving positions in order
     "dedup_windows_apply" ->
       s"""WITH tok AS (SELECT doc_id, CASE WHEN len(trim(n))=0 THEN []::VARCHAR[] ELSE string_split(n,' ') END AS toks
-         |   FROM (SELECT doc_id, ${normSql("text")} AS n FROM documents)),
+         |   FROM (SELECT doc_id, ${Oracles.normSql("text")} AS n FROM documents)),
          | ws AS (SELECT doc_id, pos,
          |   toks[pos]||' '||toks[pos+1]||' '||toks[pos+2]||' '||toks[pos+3]||' '||toks[pos+4] AS w
          |  FROM (SELECT doc_id, unnest(range(1, len(toks)-3)) AS pos, toks FROM tok)),
@@ -4515,7 +4496,7 @@ $rounds
         |SELECT vec_id, nn AS nn_id, floor(sim*1e6)/1e6 AS nn_score, sim >= 0.95 AS is_dup
         |FROM best WHERE rn = 1 ORDER BY vec_id""".stripMargin,
     "text_langid" ->
-      (s"""WITH tok AS (SELECT doc_id, string_split(${normSql("text")}, ' ') AS toks FROM documents),
+      (s"""WITH tok AS (SELECT doc_id, string_split(${Oracles.normSql("text")}, ' ') AS toks FROM documents),
           | m AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS ntok,""" +
         graft.operators.TextAnalysis.LangProfiles.map { case (lang, words) =>
           val lst = words.map(w => s"'$w'").mkString(",")
@@ -4566,11 +4547,11 @@ $rounds
     // hashing-trick embedding replayed: FNV token buckets → counts →
     // L2-normalized floats → (dim, norm, nnz, moment) digest
     "q_embed" ->
-      (s"""WITH n AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),
           | tok AS (SELECT doc_id, unnest(CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END) AS tk FROM n),
-          | h AS (SELECT doc_id, ${fnvSql("list_transform(string_split(tk,''), c -> unicode(c)::HUGEINT)")} AS u
+          | h AS (SELECT doc_id, ${Oracles.fnv("list_transform(string_split(tk,''), c -> unicode(c)::HUGEINT)")} AS u
           |  FROM tok WHERE tk <> ''),
-          | b AS (SELECT doc_id, ((${signedSql("u")} % 64) + 64) % 64 AS bucket FROM h),
+          | b AS (SELECT doc_id, ((${Oracles.signed("u")} % 64) + 64) % 64 AS bucket FROM h),
           | cnt AS (SELECT doc_id, bucket, CAST(COUNT(*) AS DOUBLE) AS c FROM b GROUP BY 1,2),
           |$digestTailSql
           |SELECT n.doc_id, CAST(64 AS BIGINT) AS dim,
@@ -4583,11 +4564,11 @@ $rounds
     // weight grid w(j,i) = ((i·31+j·17) mod 13) − 6 — every product and
     // sum exact in double, then the shared normalized digest
     "q_embed_linear" ->
-      (s"""WITH n AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),
           | tok AS (SELECT doc_id, unnest(CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END) AS tk FROM n),
-          | h AS (SELECT doc_id, ${fnvSql("list_transform(string_split(tk,''), c -> unicode(c)::HUGEINT)")} AS u
+          | h AS (SELECT doc_id, ${Oracles.fnv("list_transform(string_split(tk,''), c -> unicode(c)::HUGEINT)")} AS u
           |  FROM tok WHERE tk <> ''),
-          | b AS (SELECT doc_id, ((${signedSql("u")} % 64) + 64) % 64 AS bucket FROM h),
+          | b AS (SELECT doc_id, ((${Oracles.signed("u")} % 64) + 64) % 64 AS bucket FROM h),
           | cnt0 AS (SELECT doc_id, bucket, CAST(COUNT(*) AS DOUBLE) AS c FROM b GROUP BY 1,2),
           | wg AS (SELECT j, i, CAST(((i*31 + j*17) % 13) - 6 AS DOUBLE) AS w
           |  FROM range(64) t1(j), range(64) t2(i)),
@@ -4603,14 +4584,14 @@ $rounds
     // buckets, same normalized digest (docs with no tokens emit no row,
     // mirroring the Spark aggregate)
     "q_tfidf" ->
-      (s"""WITH n AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),
           | tok AS (SELECT doc_id, unnest(CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END) AS tk FROM n),
           | tf AS (SELECT doc_id, tk, COUNT(*) AS tf FROM tok WHERE tk <> '' GROUP BY 1,2),
           | dfq AS (SELECT tk, COUNT(DISTINCT doc_id) AS df FROM tok WHERE tk <> '' GROUP BY 1),
           | w AS (SELECT doc_id,
-          |   ${fnvSql("list_transform(string_split(tf.tk,''), c -> unicode(c)::HUGEINT)")} AS u,
+          |   ${Oracles.fnv("list_transform(string_split(tf.tk,''), c -> unicode(c)::HUGEINT)")} AS u,
           |   tf, df FROM tf JOIN dfq ON tf.tk = dfq.tk),
-          | wb AS (SELECT doc_id, ((${signedSql("u")} % 64) + 64) % 64 AS bucket,
+          | wb AS (SELECT doc_id, ((${Oracles.signed("u")} % 64) + 64) % 64 AS bucket,
           |   tf * ln(1.0 + (SELECT COUNT(*) FROM documents)/CAST(df AS DOUBLE)) AS wv FROM w),
           | cnt AS (SELECT doc_id, bucket, SUM(wv) AS c FROM wb GROUP BY 1,2),
           |$digestTailSql
@@ -4665,9 +4646,9 @@ $rounds
     "mm_features" ->
       (s"""WITH u0 AS (SELECT doc_id, text,
           |   CASE WHEN length(text)=0 THEN 14695981039346656037::HUGEINT
-          |        ELSE ${fnvSql("list_transform(string_split(text,''), c -> unicode(c)::HUGEINT)")} END AS u
+          |        ELSE ${Oracles.fnv("list_transform(string_split(text,''), c -> unicode(c)::HUGEINT)")} END AS u
           |  FROM documents),
-          | sgn AS (SELECT doc_id, text, u, ${signedSql("u")} AS s FROM u0),
+          | sgn AS (SELECT doc_id, text, u, ${Oracles.signed("u")} AS s FROM u0),
           | f AS (SELECT doc_id, text, u, s,
           |   (s - ((s % 256 + 256) % 256)) // 256 AS s8 FROM sgn)
           |SELECT doc_id, CAST(length(text) AS BIGINT) AS n_bytes, s AS checksum,
@@ -4685,12 +4666,12 @@ $rounds
     "mm_frames" ->
       (s"""WITH u0 AS (SELECT doc_id, text,
           |   CASE WHEN length(text)=0 THEN 14695981039346656037::HUGEINT
-          |        ELSE ${fnvSql("list_transform(string_split(text,''), c -> unicode(c)::HUGEINT)")} END AS u
+          |        ELSE ${Oracles.fnv("list_transform(string_split(text,''), c -> unicode(c)::HUGEINT)")} END AS u
           |  FROM documents),
           | fr AS (SELECT doc_id, i,
-          |   ${fnvSql("list_append(list_transform(range(0,8), j -> (u // ([1::HUGEINT,256::HUGEINT,65536::HUGEINT,16777216::HUGEINT,4294967296::HUGEINT,1099511627776::HUGEINT,281474976710656::HUGEINT,72057594037927936::HUGEINT])[j+1]) % 256), i::HUGEINT)")} AS fu
+          |   ${Oracles.fnv("list_append(list_transform(range(0,8), j -> (u // ([1::HUGEINT,256::HUGEINT,65536::HUGEINT,16777216::HUGEINT,4294967296::HUGEINT,1099511627776::HUGEINT,281474976710656::HUGEINT,72057594037927936::HUGEINT])[j+1]) % 256), i::HUGEINT)")} AS fu
           |  FROM u0, range(4) r(i)),
-          | fs AS (SELECT doc_id, i, ${signedSql("fu")} AS fh FROM fr),
+          | fs AS (SELECT doc_id, i, ${Oracles.signed("fu")} AS fh FROM fr),
           | d AS (SELECT doc_id, i, fh,
           |   16 + abs(fh % 64) AS w,
           |   16 + abs(((fh - ((fh % 256 + 256) % 256)) // 256) % 64) AS h
@@ -4705,7 +4686,7 @@ $rounds
     // → REAL-normalized 64-dim vectors; text tower = the shared qvec
     // hash-embed chain; cosine top-5 with vec_id ties
     "mm_search" ->
-      (s"""WITH n0 AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n0 AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),
           | tok AS (SELECT doc_id, CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END AS toks FROM n0),
           | b0 AS (SELECT doc_id, toks FROM tok WHERE len(toks) > 0),
           | $queryVecCtes,
@@ -4721,7 +4702,7 @@ $rounds
     // SAME assignment/probe replay as q_ivf_search, over mv instead of
     // embeddings, queried by the text tower
     "mm_ivf_search" ->
-      (s"""WITH n0 AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n0 AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),
           | tok AS (SELECT doc_id, CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END AS toks FROM n0),
           | b0 AS (SELECT doc_id, toks FROM tok WHERE len(toks) > 0),
           | $queryVecCtes,
@@ -4746,7 +4727,7 @@ $rounds
     // tower) — the row that turns "encoded vectors drop into IVF
     // unchanged" into evidence
     "mm_recall" ->
-      (s"""WITH n0 AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n0 AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),
           | tok AS (SELECT doc_id, CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END AS toks FROM n0),
           | b0 AS (SELECT doc_id, toks FROM tok WHERE len(toks) > 0),
           | $queryVecCtes,
@@ -4778,7 +4759,7 @@ $rounds
     // mm_sign_search: the media vectors through the sign-bit layout —
     // HUGEINT bit packing of mv, text-tower query bits, Hamming ranking
     "mm_sign_search" ->
-      (s"""WITH n0 AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n0 AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),
           | tok AS (SELECT doc_id, CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END AS toks FROM n0),
           | b0 AS (SELECT doc_id, toks FROM tok WHERE len(toks) > 0),
           | $queryVecCtes,
@@ -4818,7 +4799,7 @@ $rounds
     // (DuckDB errors on BIGINT overflow where the JVM wraps); normalized
     // text is ASCII, so UTF-16 code units == codepoints
     "text_fingerprint" ->
-      (s"""WITH n AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),
           | u AS (SELECT doc_id, s,
           |  CASE WHEN length(s)=0 THEN 0::HUGEINT
           |   ELSE list_reduce(list_prepend(0::HUGEINT,
@@ -4836,9 +4817,9 @@ $rounds
     // tokens travel as their signed FNV-1a 64 hash (the engine's
     // shuffle key); the ordered entropy fold sorts by that hash
     "text_diversity" ->
-      (s"""WITH n0 AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n0 AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),
           | tokq AS (SELECT doc_id, unnest(CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END) AS tk FROM n0),
-          | thq AS (SELECT doc_id, ${signedSql(fnvSql(
+          | thq AS (SELECT doc_id, ${Oracles.signed(Oracles.fnv(
             "list_transform(string_split(tk,''), c -> unicode(c)::HUGEINT)"))} AS th
           |   FROM tokq WHERE tk <> ''),
           | cnt AS (SELECT doc_id, th, COUNT(*) AS c FROM thq GROUP BY 1,2),
@@ -4860,7 +4841,7 @@ $rounds
     // bigram LM replayed end-to-end: same add-one smoothing, same
     // bg-ordered list_reduce fold as Spark's aggregate()
     "text_lm_score" ->
-      (s"""WITH n0 AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n0 AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),
           | tok AS (SELECT doc_id, CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END AS toks FROM n0),
           | voc AS (SELECT COUNT(DISTINCT tk) AS v FROM (SELECT unnest(toks) AS tk FROM tok)),
           | bgr AS (SELECT doc_id, toks[i]||' '||toks[i+1] AS bg
@@ -4881,7 +4862,7 @@ $rounds
           | coalesce(nll/n_bigrams <= 10.0, TRUE) AS keep
           |FROM documents d LEFT JOIN per USING (doc_id) ORDER BY d.doc_id""").stripMargin,
     "q_bpe_pairs" ->
-      (s"""WITH n0 AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n0 AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),
           | tokq AS (SELECT unnest(CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END) AS tk FROM n0),
           | f AS (SELECT tk, COUNT(*) AS f FROM tokq GROUP BY 1),
           | p AS (SELECT unnest(list_transform(range(1, len(cs)), i -> cs[i]||' '||cs[i+1])) AS pair, f
@@ -4893,7 +4874,7 @@ $rounds
     // same convention in both engines), round-2 pairs recounted over the
     // rewritten vocabulary with the merge as a chr(1) sentinel
     "q_bpe_train" ->
-      (s"""WITH n0 AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n0 AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),
           | tokq AS (SELECT unnest(CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END) AS tk FROM n0),
           | f AS (SELECT tk, COUNT(*) AS f FROM tokq GROUP BY 1),
           | p1 AS (SELECT pair, CAST(SUM(f) AS BIGINT) AS score FROM (
@@ -4921,7 +4902,7 @@ $rounds
     // zipf replayed: same rank order, same rank-ordered folds, same
     // closed-form combination
     "q_zipf" ->
-      (s"""WITH n0 AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n0 AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),
           | tokq AS (SELECT unnest(CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END) AS tk FROM n0),
           | cnt AS (SELECT tk, COUNT(*) AS c FROM tokq GROUP BY 1),
           | top AS (SELECT c, ROW_NUMBER() OVER (ORDER BY c DESC, tk) AS r FROM cnt QUALIFY r <= 100),
@@ -4937,7 +4918,7 @@ $rounds
           | CASE WHEN n >= 2 THEN floor((sy - slope*sx)/n*1e4)/1e4 ELSE 0.0 END AS intercept
           |FROM s2""").stripMargin,
     "q_chunk" ->
-      (s"""WITH n0 AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n0 AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),
           | tok AS (SELECT doc_id, CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END AS toks FROM n0),
           | b AS (SELECT doc_id, toks, len(toks) AS n FROM tok WHERE len(toks) > 0),
           | g AS (SELECT doc_id, toks, n, unnest(range(0, n, 48)) AS start FROM b)
@@ -5019,8 +5000,8 @@ $rounds
           |FROM pk ORDER BY query_id, rank""").stripMargin,
     "text_gopher" ->
       (s"""WITH tok AS (SELECT doc_id,
-          |  CASE WHEN len(trim(${normSql("text")}))=0 THEN []::VARCHAR[]
-          |       ELSE string_split(${normSql("text")},' ') END AS toks
+          |  CASE WHEN len(trim(${Oracles.normSql("text")}))=0 THEN []::VARCHAR[]
+          |       ELSE string_split(${Oracles.normSql("text")},' ') END AS toks
           | FROM documents),
           | g AS (SELECT doc_id, toks,
           |  CAST(len(toks) AS BIGINT) AS n_tok,
@@ -5072,8 +5053,8 @@ $rounds
           |FROM best WHERE rn = 1 ORDER BY doc_id""").stripMargin,
     "decontaminate" ->
       (s"""WITH tok AS (SELECT doc_id,
-          |  CASE WHEN len(trim(${normSql("text")}))=0 THEN []::VARCHAR[]
-          |       ELSE string_split(${normSql("text")},' ') END AS toks
+          |  CASE WHEN len(trim(${Oracles.normSql("text")}))=0 THEN []::VARCHAR[]
+          |       ELSE string_split(${Oracles.normSql("text")},' ') END AS toks
           | FROM documents),
           | g AS (SELECT doc_id, unnest(list_distinct(
           |   CASE WHEN len(toks) < 8 THEN []::VARCHAR[]
@@ -5090,7 +5071,7 @@ $rounds
     // hash-rank reservoir replayed: same FNV over the id's decimal string
     "q_stratified_sample" ->
       (s"""WITH h AS (SELECT event_type, event_id,
-          |   ${signedSql(fnvSql("list_transform(string_split(CAST(event_id AS VARCHAR),''), c -> unicode(c)::HUGEINT)"))} AS h
+          |   ${Oracles.signed(Oracles.fnv("list_transform(string_split(CAST(event_id AS VARCHAR),''), c -> unicode(c)::HUGEINT)"))} AS h
           |  FROM events)
           |SELECT event_type, CAST(rnk AS BIGINT) AS rnk, event_id FROM (
           | SELECT event_type, event_id,
@@ -5149,7 +5130,7 @@ $rounds
     // corrupted-stream FNV through the shared char replay; empty docs
     // pin the FNV offset basis (FNV-1a of "" = the basis)
     "q_mask_spans" ->
-      (s"""WITH n0 AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n0 AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),
           | tokq AS (SELECT doc_id, CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END AS toks FROM n0),
           | b AS (SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS n_tok,
           |   CAST(ceil(len(toks) / 3.0) AS BIGINT) AS span_cnt FROM tokq),
@@ -5168,7 +5149,7 @@ $rounds
           | CASE WHEN n_tok = 0 THEN 0.0
           |      ELSE CAST((n_masked * 10000) // n_tok AS DOUBLE) / 1e4 END AS mask_ratio,
           | CASE WHEN corrupted = '' THEN -3750763034362895579
-          |      ELSE ${signedSql(fnvSql(
+          |      ELSE ${Oracles.signed(Oracles.fnv(
              "list_transform(string_split(corrupted,''), ch -> unicode(ch)::HUGEINT)"))} END AS fp
           |FROM m ORDER BY doc_id""").stripMargin,
     "q7_corr_subquery" ->
@@ -5249,7 +5230,7 @@ $rounds
         | COUNT(*) AS n_events
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
     "q_token_topk" ->
-      (s"""WITH tok AS (SELECT doc_id, string_split(${normSql("text")}, ' ') AS toks FROM documents),
+      (s"""WITH tok AS (SELECT doc_id, string_split(${Oracles.normSql("text")}, ' ') AS toks FROM documents),
           | t2 AS (SELECT unnest(toks) AS tok FROM tok WHERE len(toks) > 0)
           |SELECT tok, COUNT(*) AS n FROM t2 GROUP BY 1
           |ORDER BY n DESC, tok LIMIT 20""").stripMargin,
@@ -5257,7 +5238,7 @@ $rounds
     // normalized tokens, PMI from the identical double expression,
     // ranked on the FLOORED grid with the bigram tie-break both sides
     "q_collocations" ->
-      (s"""WITH n0 AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n0 AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),
           | tokq AS (SELECT doc_id, CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END AS toks FROM n0),
           | uc AS (SELECT tok, COUNT(*) AS c FROM (SELECT unnest(toks) AS tok FROM tokq) GROUP BY 1),
           | nu AS (SELECT CAST(SUM(c) AS BIGINT) AS n_uni FROM uc),
@@ -5281,7 +5262,7 @@ $rounds
     // b ≤ a, so short docs vanish without a guard), exact counts,
     // integer-count ranking with lexicographic tie-break
     "q_skipgram" ->
-      (s"""WITH n0 AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n0 AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),
           | tokq AS (SELECT doc_id, CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END AS toks FROM n0),
           | prs AS (SELECT pr[1] AS center, pr[2] AS context FROM (
           |   SELECT unnest(flatten(flatten(list_transform(range(1, 4), d ->
@@ -5298,7 +5279,7 @@ $rounds
     // Spark's long→double); the SGNS shift is the identical binary
     // double literal in both engines; 1e-4 floored ranking grid
     "q_ppmi" ->
-      (s"""WITH n0 AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n0 AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),
           | tokq AS (SELECT doc_id, CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END AS toks FROM n0),
           | prs AS (SELECT pr[1] AS center, pr[2] AS context FROM (
           |   SELECT unnest(flatten(flatten(list_transform(range(1, 4), d ->
@@ -5324,7 +5305,7 @@ $rounds
     // groups, H = ln(n) − S/1e6/n floored to 1e-4; every double op is a
     // function of exact integer counts, so the hash matches bit-for-bit
     "text_entropy" ->
-      (s"""WITH n0 AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n0 AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),
           | ch AS (SELECT doc_id, c, COUNT(*) AS cnt FROM (
           |   SELECT doc_id, unnest(list_transform(range(1, len(s) + 1),
           |     i -> s[i])) AS c FROM n0) GROUP BY 1, 2),
@@ -5369,7 +5350,7 @@ $rounds
     // q_source_hhi: same token split; Σc² and (Σc)² as exact HUGEINT
     // integers, one floor-division onto the 1e-6 grid
     "q_source_hhi" ->
-      (s"""WITH n0 AS (SELECT source, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n0 AS (SELECT source, ${Oracles.normSql("text")} AS s FROM documents),
           | tok AS (SELECT source, unnest(CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END) AS tk FROM n0),
           | tc AS (SELECT source, tk, COUNT(*) AS c FROM tok GROUP BY 1, 2),
           | f AS (SELECT source, CAST(SUM(c) AS BIGINT) AS n_tokens,
@@ -5381,7 +5362,7 @@ $rounds
           |   (CAST(n_tokens AS HUGEINT) * n_tokens) AS DOUBLE) / 1e6 AS hhi
           |FROM f ORDER BY source""").stripMargin,
     "q_source_kl" ->
-      (s"""WITH n0 AS (SELECT source, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n0 AS (SELECT source, ${Oracles.normSql("text")} AS s FROM documents),
           | tok AS (SELECT source, unnest(CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END) AS tk FROM n0),
           | st AS (SELECT source, tk, COUNT(*) AS c_st FROM tok GROUP BY 1, 2),
           | ct AS (SELECT tk, CAST(SUM(c_st) AS BIGINT) AS c_t FROM st GROUP BY 1),
@@ -5400,7 +5381,7 @@ $rounds
     // both engines divide integers as doubles), first-seen = min bucket
     // per token type, cumulative over the 10-row bucket table
     "q_vocab_growth" ->
-      (s"""WITH n0 AS (SELECT doc_id, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n0 AS (SELECT doc_id, ${Oracles.normSql("text")} AS s FROM documents),
           | mx AS (SELECT MAX(doc_id) AS m FROM documents),
           | tok AS (SELECT CAST(floor(doc_id * 10 / (m + 1)) AS INT) AS bucket,
           |   unnest(CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END) AS tk
@@ -5419,7 +5400,7 @@ $rounds
     // token-keyed pair self-join (unordered source_a ≤ source_b), and
     // integer-count jaccard on the 1e-6 floor grid
     "q_vocab_overlap" ->
-      (s"""WITH n0 AS (SELECT source, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n0 AS (SELECT source, ${Oracles.normSql("text")} AS s FROM documents),
           | tk AS (SELECT source,
           |   unnest(CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END) AS tok
           |   FROM n0),
@@ -5649,7 +5630,7 @@ $rounds
     // cross-lang fold is an order-free integer sum; ranked on the exact
     // nano sum with the token tie-break
     "q_feature_mi" ->
-      (s"""WITH n0 AS (SELECT doc_id, lang, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n0 AS (SELECT doc_id, lang, ${Oracles.normSql("text")} AS s FROM documents),
           | tokq AS (SELECT doc_id, lang, CASE WHEN len(trim(s))=0 THEN []::VARCHAR[]
           |    ELSE list_distinct(string_split(s,' ')) END AS toks FROM n0),
           | tl AS (SELECT tok, lang, COUNT(*) AS n_tl FROM (
@@ -5680,7 +5661,7 @@ $rounds
     // terms nano-floored and summed as longs (order-free), identical
     // IEEE op order to the engine expression
     "q_chi2" ->
-      (s"""WITH n0 AS (SELECT doc_id, lang, ${normSql("text")} AS s FROM documents),
+      (s"""WITH n0 AS (SELECT doc_id, lang, ${Oracles.normSql("text")} AS s FROM documents),
           | tokq AS (SELECT doc_id, lang, CASE WHEN len(trim(s))=0 THEN []::VARCHAR[]
           |    ELSE list_distinct(string_split(s,' ')) END AS toks FROM n0),
           | tl AS (SELECT tok, lang, COUNT(*) AS n_tl FROM (
@@ -5780,10 +5761,10 @@ $rounds
     // of exact integers — no cross-row float sum), ranked on the floored
     // 1e-6 integer grid by |log-odds| with the token tie-break
     "q_trending_terms" ->
-      (s"""WITH b0 AS (SELECT ${normSql("text")} AS s FROM documents WHERE doc_id % 5 <> 4),
+      (s"""WITH b0 AS (SELECT ${Oracles.normSql("text")} AS s FROM documents WHERE doc_id % 5 <> 4),
           | c0raw AS (SELECT CASE WHEN doc_id % 7 = 0 THEN text || ' refreshed content v2' ELSE text END AS text
           |   FROM documents WHERE doc_id % 5 <> 0),
-          | c0 AS (SELECT ${normSql("text")} AS s FROM c0raw),
+          | c0 AS (SELECT ${Oracles.normSql("text")} AS s FROM c0raw),
           | bt AS (SELECT tok, COUNT(*) AS c1 FROM (
           |   SELECT unnest(CASE WHEN len(trim(s))=0 THEN []::VARCHAR[] ELSE string_split(s,' ') END) AS tok FROM b0) GROUP BY 1),
           | ct AS (SELECT tok, COUNT(*) AS c2 FROM (

@@ -11,9 +11,6 @@ package object functions {
   def cosine_similarity(a: Column, b: Column): Column =
     bridge.column(CosineSimilarity(c(a), c(b)))
 
-  def cosine_distance(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.lit(1.0) - cosine_similarity(a, b)
-
   def dot_product(a: Column, b: Column): Column =
     bridge.column(DotProduct(c(a), c(b)))
 

@@ -329,137 +329,6 @@ object EventAnalytics {
       .transform(graft.Determinism.sorted(_)(col("user_id")))
   }
 
-  /** Markov-chain REMOVAL-EFFECT attribution — the data-driven upgrade
-    * of [[attribution]]'s last-touch rule (last-touch credits whoever
-    * happened to stand nearest the conversion; removal effect asks the
-    * counterfactual: how much of the conversion probability DISAPPEARS
-    * if a channel is deleted from every journey — the Shapley-flavored
-    * standard the marketing-science literature converged on): journeys
-    * = each user's pre-first-conversion event sequence, absorbed into
-    * CONV/NULL; a first-order chain is fit from journey transitions;
-    * per channel c the chain is re-solved with c's node removed (paths
-    * through c are lost, probabilities NOT renormalized — the removal
-    * convention) and credit ∝ the conversion-probability drop.
-    *
-    * Determinism (the `q_graph_rank` discipline applied to absorption
-    * probabilities): transition probabilities are integer micro-units
-    * `(n·1e6) DIV total` (sub-stochastic by flooring — a shared,
-    * deterministic contraction), absorption solves by `iters` rounds of
-    * `v' = Σ (p·v) DIV 1e6` (products ≤ 1e12, order-free long sums),
-    * and removal monotonicity `v_c ≤ v_base` holds round-by-round
-    * because each round sums a SUBSET of identical floored terms — so
-    * the removal effect is a ratio of non-negative exact integers.
-    * Both engines replay the identical integer fixpoint.
-    *
-    * Scale shape: the corpus-scale work is ONE user-keyed window pass
-    * (journey cut + lead + first-row + converted flag share a single
-    * Exchange) materialized once, collapsing to the |states|²-bounded
-    * transition-count table; everything after — the |channels|+1
-    * removal variants, the `iters` absorption rounds, the credit rows —
-    * runs on value-domain-bounded tables (states = event types by
-    * contract), each round barriered heap-local. Event volume touches
-    * nothing past the first aggregate. */
-  def markovAttribution(events: DataFrame,
-                        convType: String = "purchase",
-                        iters: Int = 15): DataFrame = {
-    val S = 1000000L
-    val Base = "__base__"
-    val Start = "__START__"
-    val Conv = "__CONV__"
-    val Null = "__NULL__"
-    val wOrd = Window.partitionBy(col("user_id"))
-      .orderBy(col("ts"), col("event_id"))
-    val wAll = Window.partitionBy(col("user_id"))
-    val isConv = col("event_type") === convType
-    // one Exchange: prior-conversion cut, whole-user conversion flag
-    val marked = events
-      .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-      .withColumn("prior_conv", coalesce(
-        sum(isConv.cast("long"))
-          .over(wOrd.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("user_conv",
-        sum(isConv.cast("long")).over(wAll) > 0L)
-    // journey = events strictly before the first conversion (window
-    // order); lead/rn ride the SAME ordered window spec
-    val journey = marked
-      .filter(col("prior_conv") === 0L && !isConv)
-      .withColumn("next", lead(col("event_type"), 1).over(wOrd))
-      .withColumn("rn", row_number().over(wOrd))
-      .select(col("user_id"), col("event_type"), col("next"), col("rn"),
-        col("user_conv"))
-      .barrier() // the one corpus-scale materialization, read 3×
-    val endState = when(col("user_conv"), Conv).otherwise(Null)
-    val chainEdges = journey.select(col("event_type").as("from"),
-      coalesce(col("next"), endState).as("to"))
-    val startEdges = journey.filter(col("rn") === 1)
-      .select(lit(Start).as("from"), col("event_type").as("to"))
-    // converted users whose journey is empty (conversion first):
-    // START -> CONV directly
-    val directConv = marked.filter(isConv && col("prior_conv") === 0L)
-      .join(journey.select(col("user_id")).distinct(),
-        Seq("user_id"), "left_anti")
-      .select(lit(Start).as("from"), lit(Conv).as("to"))
-    val counts = chainEdges.union(startEdges).union(directConv)
-      .groupBy(col("from"), col("to")).agg(count(lit(1)).as("n"))
-      .barrier() // |states|²-bounded: the chain fit
-    val totals = counts.groupBy(col("from")).agg(sum(col("n")).as("tot"))
-    val probs = counts.join(totals, Seq("from"))
-      .select(col("from"), col("to"), expr("(n * 1000000) DIV tot").as("p"))
-      .barrier()
-    val channels = probs.filter(col("from") =!= Start)
-      .select(col("from").as("rm")).distinct().barrier()
-    val variants = channels
-      .union(channels.sparkSession.range(1).select(lit(Base).as("rm")))
-      .barrier()
-    val vtrans = variants.crossJoin(probs)
-      .filter(col("rm") === Base ||
-        (col("from") =!= col("rm") && col("to") =!= col("rm")))
-      .barrier()
-    val states = probs.select(col("from").as("state")).distinct()
-    val grid = variants.crossJoin(states).barrier()
-    var v = grid.withColumn("v", lit(0L))
-    for (_ <- 1 to iters) {
-      val vAug = v
-        .union(variants.select(col("rm"), lit(Conv).as("state"),
-          lit(S).as("v")))
-        .union(variants.select(col("rm"), lit(Null).as("state"),
-          lit(0L).as("v")))
-      val contrib = vtrans.as("t")
-        .join(vAug.as("a"),
-          col("t.rm") === col("a.rm") && col("t.to") === col("a.state"))
-        .select(col("t.rm").as("rm"), col("t.from").as("state"),
-          expr("(p * v) DIV 1000000").as("c"))
-        .groupBy(col("rm"), col("state")).agg(sum(col("c")).as("s"))
-      v = grid.join(contrib, Seq("rm", "state"), "left")
-        .select(col("rm"), col("state"),
-          coalesce(col("s"), lit(0L)).as("v"))
-        .barrier()
-    }
-    val vStart = v.filter(col("state") === Start)
-    val pBase = vStart.filter(col("rm") === Base)
-      .select(col("v").as("vb"))
-    val re = vStart.filter(col("rm") =!= Base)
-      .select(col("rm").as("channel"), col("v").as("vc"))
-      .crossJoin(broadcast(pBase))
-      .select(col("channel"), col("vb"), col("vc"),
-        when(col("vb") > 0L, expr("((vb - vc) * 1000000) DIV vb"))
-          .otherwise(lit(0L)).as("re_u"))
-    val reTot = re.agg(sum(col("re_u")).as("re_tot"))
-    val touches = journey.groupBy(col("event_type").as("channel"))
-      .agg(count(lit(1)).as("n_touches"))
-    re.crossJoin(broadcast(reTot))
-      .join(touches, Seq("channel"), "left")
-      .select(col("channel"),
-        coalesce(col("n_touches"), lit(0L)).as("n_touches"),
-        (col("vb").cast("double") / 1e6).as("p_base"),
-        (col("vc").cast("double") / 1e6).as("p_removed"),
-        (col("re_u").cast("double") / 1e6).as("removal_effect"),
-        when(col("re_tot") > 0L,
-          expr("(re_u * 1000000) DIV re_tot").cast("double") / 1e6)
-          .otherwise(lit(0.0)).as("attribution"))
-      .orderBy(col("channel"))
-  }
-
   /** Hour-of-week traffic seasonality: per (day-of-week, hour-of-day)
     * cell the event count, exact decimal value sum, and share of total
     * traffic — the capacity/anomaly-baseline profile every telemetry

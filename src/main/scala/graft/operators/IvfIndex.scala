@@ -19,6 +19,13 @@ import graft.operators.Barrier.BarrierOps
   * is one broadcast-join scan, and the posting lists are just the corpus
   * repartitioned/bucketed by `centroid_id` — a search then touches only
   * `nprobe / nCentroids` of the data instead of all of it.
+  *
+  * Search: the in-plan entry points ([[search]], [[searchFiltered]],
+  * [[searchQuantized]], [[searchPqWith]]) are one probe-and-score core,
+  * [[probedTopK]], that differs only in the scored rows and how their
+  * vector column is read; [[searchPersisted]] and [[searchBucketed]]
+  * read an index written by [[persist]] or [[persistBucketed]] instead.
+  * The recall audits fold through `Search.recallAt`.
   */
 object IvfIndex {
 
@@ -399,10 +406,16 @@ object IvfIndex {
     StructField("embedding", ArrayType(FloatType, containsNull = false)),
     StructField("centroid_id", IntegerType)))
 
-  /** Probe the `nprobe` nearest centroids per query, then exact top-k over
-    * only those centroids' posting lists. */
-  def search(queries: DataFrame, corpus: DataFrame, nCentroids: Int,
-             nprobe: Int, k: Int): DataFrame = {
+  /** The one probe-and-score core behind [[search]], [[searchFiltered]],
+    * [[searchQuantized]] and [[searchPqWith]]: the index (centroids and
+    * [[nearestCentroid]] assignments) is built on `corpus`, each query
+    * probes its `nprobe` nearest centroids, and the candidates of the
+    * probed posting lists are joined to `scored` on `vec_id` and ranked by
+    * `cosine_similarity(qv, vector)`. The entry points differ only in
+    * which rows are scored and how their vector is read. */
+  private def probedTopK(queries: DataFrame, corpus: DataFrame,
+                         scored: DataFrame, vector: Column, nCentroids: Int,
+                         nprobe: Int, k: Int): DataFrame = {
     val cents = centroids(corpus, nCentroids)
     val assign = nearestCentroid(corpus, cents)
     val probes = probeCentroids(cents, queries, nprobe)
@@ -410,28 +423,33 @@ object IvfIndex {
     // (assignments) side never shuffles for this join
     val candidates = assign.join(broadcast(probes), Seq("centroid_id"))
       .select(col("query_id"), col("vec_id"))
-
-    val scored = candidates
-      .join(corpus, Seq("vec_id"))
+    Search.rankTopK(candidates
+      .join(scored, Seq("vec_id"))
       .join(broadcast(queries), Seq("query_id"))
       .select(col("query_id"), col("vec_id"),
-        cosine_similarity(col("qv"), col("embedding")).as("sim"))
-
-    Search.rankTopK(scored, k)
+        cosine_similarity(col("qv"), vector).as("sim")), k)
   }
+
+  /** Probe the `nprobe` nearest centroids per query, then exact top-k over
+    * only those centroids' posting lists ([[probedTopK]] over the corpus
+    * itself). */
+  def search(queries: DataFrame, corpus: DataFrame, nCentroids: Int,
+             nprobe: Int, k: Int): DataFrame =
+    probedTopK(queries, corpus, corpus, col("embedding"), nCentroids, nprobe, k)
 
   /** FILTERED IVF search: [[search]] under a metadata predicate on the
     * corpus rows — the filtered-ANN serve path (tenant / language /
     * license scoping) over the SAME index as the unfiltered searches.
-    * The index (centroids + assignments) is built on the FULL corpus —
-    * build-once, filter-many: a new filter never triggers a rebuild —
-    * and the predicate cuts the CANDIDATE scoring join at the corpus
-    * scan stage (plain stored-column predicates reach the parquet
-    * reader as `PushedFilters`; derived ones run in the codegen pass
-    * directly above it — either way before the join moves any row).
-    * Pre-filter semantics within the probed cells: the top-k
-    * ranks only eligible candidates, so a selective filter makes the
-    * probe cheaper rather than returning filtered-out neighbors.
+    * [[probedTopK]] builds the index (centroids + assignments) on the
+    * FULL corpus — build-once, filter-many: a new filter never triggers
+    * a rebuild — and scores `corpus.filter(pred)`, so the predicate cuts
+    * the CANDIDATE scoring join at the corpus scan stage (plain
+    * stored-column predicates reach the parquet reader as
+    * `PushedFilters`; derived ones run in the codegen pass directly above
+    * it — either way before the join moves any row). Pre-filter
+    * semantics within the probed cells: the top-k ranks only eligible
+    * candidates, so a selective filter makes the probe cheaper rather
+    * than returning filtered-out neighbors.
     *
     * The honest caveat every filtered-IVF deployment carries: recall is
     * measured against the probed cells, so a filter CORRELATED with the
@@ -439,43 +457,24 @@ object IvfIndex {
     * higher `nprobe` — the `q_recall_sweep` trade-off read with the
     * filter applied. */
   def searchFiltered(queries: DataFrame, corpus: DataFrame, pred: Column,
-                     nCentroids: Int, nprobe: Int, k: Int): DataFrame = {
-    val cents = centroids(corpus, nCentroids)
-    val assign = nearestCentroid(corpus, cents)
-    val probes = probeCentroids(cents, queries, nprobe)
-    val candidates = assign.join(broadcast(probes), Seq("centroid_id"))
-      .select(col("query_id"), col("vec_id"))
-    val scored = candidates
-      .join(corpus.filter(pred), Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cosine_similarity(col("qv"), col("embedding")).as("sim"))
-    Search.rankTopK(scored, k)
-  }
+                     nCentroids: Int, nprobe: Int, k: Int): DataFrame =
+    probedTopK(queries, corpus, corpus.filter(pred), col("embedding"),
+      nCentroids, nprobe, k)
 
-  /** IVF search over int8-QUANTIZED posting lists: assignment and probes
-    * use the exact centroids (computed at build time, before
-    * quantization), candidate scoring dequantizes on the fly — so the
-    * index stores 4× fewer bytes and the scores pay only the quantization
-    * error (cosine fidelity > 0.999 per the q_quantize audit). This is
+  /** IVF search over int8-QUANTIZED posting lists: [[probedTopK]] with
+    * assignment and probes on the exact centroids (computed at build
+    * time, before quantization) and candidate scoring that dequantizes
+    * `quantized`'s `qcodes` on the fly — so the index stores 4× fewer
+    * bytes and the scores pay only the quantization error (cosine
+    * fidelity > 0.999 per the q_quantize audit). This is
     * the memory-lean production configuration for a 100 TB corpus:
     * IVF prunes the scan to `nprobe / nCentroids` of the data AND every
     * scanned byte is int8, not float32. */
   def searchQuantized(queries: DataFrame, corpus: DataFrame,
                       quantized: DataFrame, nCentroids: Int, nprobe: Int,
-                      k: Int): DataFrame = {
-    val cents = centroids(corpus, nCentroids)
-    val assign = nearestCentroid(corpus, cents)
-    val probes = probeCentroids(cents, queries, nprobe)
-    val candidates = assign.join(broadcast(probes), Seq("centroid_id"))
-      .select(col("query_id"), col("vec_id"))
-    val scored = candidates
-      .join(quantized, Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cosine_similarity(col("qv"), dequantize8(col("qcodes"))).as("sim"))
-    Search.rankTopK(scored, k)
-  }
+                      k: Int): DataFrame =
+    probedTopK(queries, corpus, quantized, dequantize8(col("qcodes")),
+      nCentroids, nprobe, k)
 
   /** IVF + product quantization (the classic IVFPQ layout): assignment
     * and probes on the exact centroids, candidate scoring against PQ
@@ -492,42 +491,25 @@ object IvfIndex {
 
   /** [[searchPq]] over a PREBUILT reconstruction table — lets an audit
     * that scores several paths against the same codebooks reuse one
-    * materialized reconstruction instead of re-encoding per search. */
+    * materialized reconstruction instead of re-encoding per search:
+    * [[probedTopK]] scoring the candidates' rows of `rec`. */
   def searchPqWith(queries: DataFrame, corpus: DataFrame, rec: DataFrame,
-                   nCentroids: Int, nprobe: Int, k: Int): DataFrame = {
-    val cents = centroids(corpus, nCentroids)
-    val assign = nearestCentroid(corpus, cents)
-    val probes = probeCentroids(cents, queries, nprobe)
-    val candidates = assign.join(broadcast(probes), Seq("centroid_id"))
-      .select(col("query_id"), col("vec_id"))
-    val scored = candidates
-      .join(rec, Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cosine_similarity(col("qv"), col("embedding")).as("sim"))
-    Search.rankTopK(scored, k)
-  }
+                   nCentroids: Int, nprobe: Int, k: Int): DataFrame =
+    probedTopK(queries, corpus, rec, col("embedding"), nCentroids, nprobe, k)
 
   /** Recall@k audit: the one metric an approximate-index user always asks
     * for (the reference tunes `ef`/`M` for the same recall/latency trade,
     * services/index_service.py:72). Per query: how many of the exact
-    * top-k ids the IVF probe recovered.
+    * top-k ids the IVF probe recovered ([[Search.recallAt]] over `k`).
     *
     * Both paths are bounded-output top-k aggregates, so the audit join is
     * k-rows-per-query × k-rows-per-query — driver-trivial at any corpus
     * size; the expensive part is the two searches themselves. */
   def recallAudit(queries: DataFrame, corpus: DataFrame, nCentroids: Int,
-                  nprobe: Int, k: Int): DataFrame = {
-    val exact = Search.bruteForceTopK(queries, corpus, k)
-      .select(col("query_id"), col("vec_id"))
-    val approx = search(queries, corpus, nCentroids, nprobe, k)
-      .select(col("query_id"), col("vec_id"), lit(1).as("hit"))
-    exact.join(approx, Seq("query_id", "vec_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(col("hit")).as("n_hits"),
-        (floor(count(col("hit")) / lit(k.toDouble) * 1e6) / 1e6).as("recall"))
+                  nprobe: Int, k: Int): DataFrame =
+    Search.recallAt(Search.bruteForceTopK(queries, corpus, k),
+        search(queries, corpus, nCentroids, nprobe, k), lit(k.toDouble))
       .orderBy(col("query_id"))
-  }
 
   /** [[recallAudit]] under a metadata predicate — the filtered-IVF
     * caveat QUANTIFIED: recall of [[searchFiltered]] against exact
@@ -545,18 +527,11 @@ object IvfIndex {
     * drops out of the table entirely — in both engines.) */
   def recallAuditFiltered(queries: DataFrame, corpus: DataFrame,
                           pred: Column, nCentroids: Int, nprobe: Int,
-                          k: Int): DataFrame = {
-    val exact = Search.bruteForceTopK(queries, corpus.filter(pred), k)
-      .select(col("query_id"), col("vec_id"))
-    val approx = searchFiltered(queries, corpus, pred, nCentroids, nprobe, k)
-      .select(col("query_id"), col("vec_id"), lit(1).as("hit"))
-    exact.join(approx, Seq("query_id", "vec_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(col("hit")).as("n_hits"),
-        (floor(count(col("hit")) / count(lit(1)).cast("double") * 1e6) / 1e6)
-          .as("recall"))
+                          k: Int): DataFrame =
+    Search.recallAt(Search.bruteForceTopK(queries, corpus.filter(pred), k),
+        searchFiltered(queries, corpus, pred, nCentroids, nprobe, k),
+        count(lit(1)).cast("double"))
       .orderBy(col("query_id"))
-  }
 
   /** The nprobe/recall trade as ONE table — what a deployment actually
     * reads to pick its operating point: per sweep value, aggregate

@@ -140,48 +140,26 @@ object ProductQuantizer {
     * ≤ topK × topK rows per query — trivial at any corpus size. */
   def recallAuditFiltered(queries: DataFrame, corpus: DataFrame,
                           pred: Column, m: Int = 4, k: Int = 16,
-                          topK: Int = 5): DataFrame = {
-    val exact = Search.bruteForceTopK(queries, corpus.filter(pred), topK)
-      .select(col("query_id"), col("vec_id"))
-    val approx = searchFiltered(queries, corpus, pred, m, k, topK)
-      .select(col("query_id"), col("vec_id"), lit(1).as("hit"))
-    exact.join(approx, Seq("query_id", "vec_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(col("hit")).as("n_hits"),
-        (floor(count(col("hit")) / count(lit(1)).cast("double") * 1e6) / 1e6)
-          .as("recall"))
+                          topK: Int = 5): DataFrame =
+    Search.recallAt(Search.bruteForceTopK(queries, corpus.filter(pred), topK),
+        searchFiltered(queries, corpus, pred, m, k, topK),
+        count(lit(1)).cast("double"))
       .orderBy(col("query_id"))
-  }
 
   /** Two-stage retrieval: PQ ADC shortlist → EXACT re-rank (the "refine"
     * pattern every compressed-index deployment ends with): the cheap
-    * compressed scan nominates `nCandidates` per query, then true cosine
-    * is computed only for shortlist members against the full-precision
-    * store. At 100 TB the exact side touches queries × nCandidates rows
+    * compressed scan nominates `nCandidates` per query, then
+    * [[Search.refine]] computes true cosine only for shortlist members
+    * against the full-precision store. At 100 TB the exact side touches queries × nCandidates rows
     * — the shortlist broadcasts into a hash-join against the corpus (a
     * semi-join-shaped probe, never a second scan-and-score), so the
     * refine step costs a corpus READ of the matched rows only, and the
     * final ranking carries exact scores with PQ's recall profile. */
   def searchRefined(queries: DataFrame, corpus: DataFrame, m: Int = 4,
                     k: Int = 16, nCandidates: Int = 20, topK: Int = 5)
-      : DataFrame = {
-    val shortlist = search(queries, corpus, m, k, nCandidates)
-      .select(col("query_id"), col("vec_id"))
-    val exact = corpus.join(broadcast(shortlist), Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        graft.functions.cosine_similarity(col("qv"), col("embedding"))
-          .as("sim"))
-    Search.rankTopK(exact, topK)
-  }
-
-  /** [[search]] under Lloyd-TRAINED codebooks: same dataflow, lower
-    * quantization error (the training is a one-time build cost; encoding
-    * and search are unchanged narrow passes). */
-  def searchTrained(queries: DataFrame, corpus: DataFrame, m: Int = 4,
-                    k: Int = 16, iters: Int = 2, topK: Int = 5): DataFrame =
-    Search.bruteForceTopK(queries,
-      reconstructedWith(corpus, trainedCodebooks(corpus, m, k, iters)), topK)
+      : DataFrame =
+    Search.refine(queries, corpus, search(queries, corpus, m, k, nCandidates),
+      topK)
 
   /** Recall@k audit across the quantization matrix — the PQ twin of
     * [[IvfIndex.recallAudit]] (which covers only the IVF pruning axis).

@@ -53,43 +53,28 @@ object RandomProjection {
       k)
 
   /** Two-stage JL search — [[searchProjected]]'s shortlist exactly
-    * re-ranked by full-dimension cosine (the [[Search.signRefined]]
-    * pattern applied to the dimension cut): the 4×-narrower projected
-    * scan pays for candidate generation, the exact work is ∝ queries ×
-    * shortlist (the shortlist BROADCASTS into a hash-join probe of the
-    * full-precision store — never a second scan-and-score), and final
-    * scores carry NO projection distortion. This is what makes the
+    * re-ranked by full-dimension cosine ([[Search.refine]], the
+    * [[Search.signRefined]] stage applied to the dimension cut): the
+    * 4×-narrower projected scan pays for candidate generation, the exact
+    * work is ∝ queries × shortlist, and final scores carry NO projection
+    * distortion. This is what makes the
     * 0.2–0.4-recall standalone projection deployable: same output
     * contract as [[Search.bruteForceTopK]], equal to it whenever the
     * true top-k survives the projected shortlist (spec-pinned at full
     * shortlist). */
   def searchRefined(queries: DataFrame, corpus: DataFrame, k: Int = 5,
-                    shortlist: Int = 20, outDim: Int = 16): DataFrame = {
-    val sl = searchProjected(queries, corpus, shortlist, outDim)
-      .select(col("query_id"), col("vec_id"))
-    val sims = corpus.join(broadcast(sl), Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        graft.functions.cosine_similarity(col("qv"), col("embedding"))
-          .as("sim"))
-    Search.rankTopK(sims, k)
-  }
+                    shortlist: Int = 20, outDim: Int = 16): DataFrame =
+    Search.refine(queries, corpus,
+      searchProjected(queries, corpus, shortlist, outDim), k)
 
   /** recall@k of the projected ranking against exact full-dimension
     * top-k — the number that decides whether the 4× cheaper scan is
     * usable as a shortlist stage (the `q_recall` audit shape). */
   def recallAudit(queries: DataFrame, corpus: DataFrame, k: Int,
-                  outDim: Int = 16): DataFrame = {
-    val exact = Search.bruteForceTopK(queries, corpus, k)
-      .select(col("query_id"), col("vec_id"))
-    val approx = searchProjected(queries, corpus, k, outDim)
-      .select(col("query_id"), col("vec_id"), lit(1).as("hit"))
-    exact.join(approx, Seq("query_id", "vec_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(count(col("hit")).as("n_hits"),
-        (floor(count(col("hit")) / lit(k.toDouble) * 1e6) / 1e6).as("recall"))
+                  outDim: Int = 16): DataFrame =
+    Search.recallAt(Search.bruteForceTopK(queries, corpus, k),
+        searchProjected(queries, corpus, k, outDim), lit(k.toDouble))
       .transform(graft.Determinism.sorted(_)(col("query_id")))
-  }
 
   /** The outDim/recall trade as ONE table — the JL leg's operating-point
     * curve, the [[IvfIndex.recallSweep]] shape applied to the dimension

@@ -163,24 +163,47 @@ object Search {
     signTopK(queries, corpus.filter(pred), k)
 
   /** Two-stage sign search — [[signTopK]]'s Hamming shortlist exactly
-    * re-ranked by true cosine (the [[ProductQuantizer.searchRefined]]
-    * pattern applied to the 32× code): the XOR+popcount scan pays for
-    * the candidate generation, the exact work is ∝ queries × shortlist
-    * (the shortlist BROADCASTS into a hash-join probe of the
-    * full-precision store — never a second scan-and-score), and final
-    * scores carry NO quantization error. Same output contract as
+    * re-ranked by true cosine ([[refine]], the
+    * [[ProductQuantizer.searchRefined]] stage applied to the 32× code):
+    * the XOR+popcount scan pays for the candidate generation, the exact
+    * work is ∝ queries × shortlist, and final scores carry NO
+    * quantization error. Same output contract as
     * [[bruteForceTopK]]; equal to it whenever the true top-k survives
     * the Hamming shortlist (spec-pinned at full shortlist). */
   def signRefined(queries: DataFrame, corpus: DataFrame, k: Int = 5,
-                  shortlist: Int = 20): DataFrame = {
-    val sl = signTopK(queries, corpus, shortlist)
-      .select(col("query_id"), col("vec_id"))
+                  shortlist: Int = 20): DataFrame =
+    refine(queries, corpus, signTopK(queries, corpus, shortlist), k)
+
+  /** The exact-refine stage of every two-stage search ([[signRefined]],
+    * `ProductQuantizer.searchRefined`, `RandomProjection.searchRefined`):
+    * each `(query_id, vec_id)` of `shortlist` re-scored by true cosine
+    * against the full-precision `corpus`, then [[rankTopK]]. The
+    * shortlist BROADCASTS into a hash-join probe of the corpus, so the
+    * exact work is ∝ queries × shortlist — never a second scan-and-score. */
+  private[graft] def refine(queries: DataFrame, corpus: DataFrame,
+                            shortlist: DataFrame, k: Int): DataFrame = {
+    val sl = shortlist.select(col("query_id"), col("vec_id"))
     val sims = corpus.join(broadcast(sl), Seq("vec_id"))
       .join(broadcast(queries), Seq("query_id"))
       .select(col("query_id"), col("vec_id"),
         cosine_similarity(col("qv"), col("embedding")).as("sim"))
     rankTopK(sims, k)
   }
+
+  /** The recall@k fold of every audit that scores one approximate
+    * ranking against an exact one: per query of `exact`, how many of its
+    * `(query_id, vec_id)` rows `approx` recovered → `(query_id, n_hits,
+    * recall)`, recall = n_hits / `denom` floored at 1e-6, unsorted.
+    * `denom` is an aggregate over the query's exact rows: `lit(k)` for a
+    * fixed k, `count(lit(1))` for the per-query eligible count. */
+  private[graft] def recallAt(exact: DataFrame, approx: DataFrame,
+                              denom: Column): DataFrame =
+    exact.select(col("query_id"), col("vec_id"))
+      .join(approx.select(col("query_id"), col("vec_id"), lit(1).as("hit")),
+        Seq("query_id", "vec_id"), "left")
+      .groupBy(col("query_id"))
+      .agg(count(col("hit")).as("n_hits"),
+        (floor(count(col("hit")) / denom * 1e6) / 1e6).as("recall"))
 
   /** Hard-negative mining for contrastive training: per anchor, the
     * most-similar corpus vectors that are NOT near-duplicates — the

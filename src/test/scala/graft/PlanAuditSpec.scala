@@ -297,6 +297,9 @@ class PlanAuditSpec extends SparkSuite {
           }.size)
         def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
       }
+      // an earlier query's end event still queued would reach the new
+      // listener: drain the bus before registering
+      bridge.drainListenerBus(s)
       s.listenerManager.register(listener)
       try {
         val out = f

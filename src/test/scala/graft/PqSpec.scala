@@ -168,6 +168,19 @@ class PqSpec extends SparkSuite {
     assert(hits >= 5, s"ivfpq recall too low: $hits/25")
   }
 
+  test("ivfpq: full probe equals PQ brute force over the same codebooks exactly") {
+    val queries = t.embeddings.filter($"vec_id" < 5)
+      .select($"vec_id".as("query_id"), $"embedding".as("qv"))
+    // probing every centroid = no pruning: must equal the ADC brute-force
+    // ranking over the same seed-codebook reconstructions row for row
+    val full = operators.IvfIndex.searchPq(queries, t.embeddings,
+      nCentroids = 16, nprobe = 16, k = 5).collect().toSeq
+    val brute = ProductQuantizer.search(queries, t.embeddings, topK = 5)
+      .collect().toSeq
+    assert(full.length == 25)
+    assert(full == brute)
+  }
+
   test("persisted codes serve the identical search result, smaller at rest") {
     val dir = java.nio.file.Files.createTempDirectory("graft-pq").toString
     ProductQuantizer.persist(t.embeddings, dir)
